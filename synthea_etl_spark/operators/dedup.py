@@ -30,6 +30,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from synthea_etl_spark.operators import store
+from synthea_etl_spark.operators.store import (  # noqa: F401 (public names)
+    watermark as compaction_watermark,
+    watermark_path as _compaction_watermark_path,
+)
 from synthea_etl_spark.operators.text import fingerprint, shingles, tokens
 from synthea_etl_spark.operators.util import rebalance_by_key
 
@@ -1012,28 +1017,15 @@ def corpus_sketch_store(
     k: int = 64,
 ) -> None:
     """Persist one ingested slice's k-row bottom-k sketch under
-    ``store_path`` (parquet, partitioned by ``slice_id`` with dynamic
-    partition overwrite — a replayed ingest rewrites its own
-    partition, the same idempotent-publication contract as the
-    MinHash / postings index stores in pipeline.py). The store is
+    ``store_path`` as partition ``slice_id`` (``store.publish``; any
+    slice id — this store is never compacted). The store is
     append-only and mergeable: ``merge_bottomk_sketches`` over any
     subset of partitions IS the sketch of those slices' union, so
     overlap questions between arbitrary slice sets cost a k-row
     merge, never a corpus scan. At 100 TB the store is
     k × n_slices rows — a planning table, not data."""
-    (
-        corpus_bottomk_sketch(docs, text_col, k)
-        .withColumn("slice_id", F.lit(slice_id))
-        .hint("rebalance")  # size output files adaptively (guide §6):
-        # without it every upstream task writes a sliver into every
-        # partition dir (tasks × partitions tiny files; the store's
-        # read path then pays listing + footer per sliver). Keyless
-        # REBALANCE targets the AQE advisory size — one file per
-        # slice locally, split-by-size at scale.
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("slice_id")
-        .parquet(store_path)
+    store.publish(
+        corpus_bottomk_sketch(docs, text_col, k), store_path, store.SLICES, slice_id
     )
 
 
@@ -1147,36 +1139,12 @@ def line_frequency_store(
     id_col: str = "doc_id",
 ) -> None:
     """Publish one slice's line-frequency counts under ``store_path``
-    (parquet, partitioned by slice_id, dynamic partition overwrite —
-    the corpus_sketch_store idempotent-replay contract: a replayed
-    batch rewrites its own partition).
-
-    ``slice_id`` must match ``batch<k>``: compaction and the
-    watermark filters key on that numbering, and a free-form id
-    would be SILENTLY excluded from the corpus frequency after the
-    first compaction (round-11 self-review finding) — better to
-    refuse at publish time."""
-    import re
-
-    if not re.fullmatch(r"batch\d+", slice_id):
-        raise ValueError(
-            "line_frequency_store slice_id must be 'batch<k>' "
-            f"(got {slice_id!r}): compaction watermarks key on the "
-            "numeric batch suffix"
-        )
-    (
-        line_frequency_slice(docs, line_window, text_col, id_col)
-        .withColumn("slice_id", F.lit(slice_id))
-        .hint("rebalance")  # size output files adaptively (guide §6):
-        # without it every upstream task writes a sliver into every
-        # partition dir (tasks × partitions tiny files; the store's
-        # read path then pays listing + footer per sliver). Keyless
-        # REBALANCE targets the AQE advisory size — one file per
-        # slice locally, split-by-size at scale.
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("slice_id")
-        .parquet(store_path)
+    (SLICES layout; publish and ``batch<k>`` contract in
+    operators/store.py)."""
+    publish_counting_slice(
+        line_frequency_slice(docs, line_window, text_col, id_col),
+        store_path,
+        slice_id,
     )
 
 
@@ -1187,176 +1155,28 @@ def boilerplate_from_store(spark, store_path: str, min_docs: int = 2) -> DataFra
     the corpus text is never reread; cleaning any document set is
     then ONE anti-join on the line fingerprint (the q212 verdict
     join with the store standing in for the inline frequency
-    aggregate). Batch partitions at or below the compaction
-    watermark are ignored (their counts live in the current
-    ``compacted<wm>`` partition) and so is any ``compacted<k>``
-    with k != wm — a crash in ANY window of
-    compact_line_frequency_store leaves either leftover batch dirs
-    or a half-published next compacted partition, and both are
-    invisible here, so readers never double count."""
-    store = spark.read.parquet(store_path)
-    wm = compaction_watermark(store_path)
-    num = F.regexp_extract("slice_id", r"^batch(\d+)$", 1)
-    if wm >= 0:
-        store = store.filter(
-            (F.col("slice_id") == f"compacted{wm}")
-            | ((num != "") & (num.cast("long") > wm))
-        )
-    else:
-        # never compacted: only batch slices count (a crash before
-        # the FIRST watermark publish may have left an orphan
-        # compacted<k> partition — it must stay invisible)
-        store = store.filter(num != "")
+    aggregate). Reads only the live partitions (store.live), so a
+    crash in any compaction window never double counts."""
     return (
-        store.groupBy("fp")
-        .agg(F.sum("n_docs").cast("long").alias("n_docs"))
+        agg_store_totals(spark, store_path, ["fp"], {"n_docs": "sum"})
         .filter(F.col("n_docs") >= min_docs)
         .select("fp", "n_docs")
     )
-
-
-def _compaction_watermark_path(store_path: str) -> str:
-    import os
-
-    return os.path.join(store_path, "_COMPACTED_UPTO")
-
-
-def compaction_watermark(store_path: str) -> int:
-    """Highest batch number folded into the ``slice_id=compacted``
-    partition, or -1 if the store was never compacted. Tiny pointer
-    file, atomic-rename published (the write_versioned discipline)."""
-    import os
-
-    p = _compaction_watermark_path(store_path)
-    if not os.path.exists(p):
-        return -1
-    with open(p) as f:
-        return int(f.read().strip())
-
-
-def _record_flip(store_path: str, upto: int) -> None:
-    """Drop a ``_COMPACTED_UPTO.<upto>`` sidecar right after a
-    watermark publish: its mtime records WHEN the flip to ``upto``
-    happened, so graced GC can judge each superseded generation
-    against the flip that superseded IT rather than the latest flip
-    (round-12 ADVICE: gating every deletion on the latest flip's age
-    makes GC a permanent no-op whenever compaction cadence is faster
-    than the grace — unbounded dir growth). A crash between the
-    watermark replace and this create only loses the sidecar; GC
-    then falls back to the main watermark file's mtime, which is the
-    LATEST flip time — strictly conservative (never deletes early),
-    i.e. exactly the pre-fix behavior for that one generation."""
-    import os
-
-    p = _compaction_watermark_path(store_path) + f".{upto}"
-    # open() sets the mtime; a same-upto re-publish cannot occur (the
-    # compactors' `wm >= upto_batch` guard returns before re-running
-    # this), so no refresh logic is needed here
-    with open(p, "w") as f:
-        f.write(str(upto))
-
-
-def _flip_times(store_path: str) -> dict[int, float]:
-    """{watermark -> flip time} from the ``_COMPACTED_UPTO.<n>``
-    sidecars, with the main watermark file's mtime as a fallback
-    entry for the current watermark when its sidecar is missing
-    (pre-fix stores, or a crash in the publish window)."""
-    import os
-
-    base = _compaction_watermark_path(store_path)
-    prefix = os.path.basename(base) + "."
-    out: dict[int, float] = {}
-    for d in os.listdir(store_path):
-        if d.startswith(prefix):
-            tail = d[len(prefix):]
-            if tail.isdigit():
-                try:
-                    out[int(tail)] = os.path.getmtime(
-                        os.path.join(store_path, d)
-                    )
-                except OSError:
-                    pass
-    wm = compaction_watermark(store_path)
-    if wm >= 0 and wm not in out:
-        try:
-            out[wm] = os.path.getmtime(base)
-        except OSError:
-            pass
-    return out
-
-
-def _superseding_flip(
-    flips: dict[int, float], threshold: int, strict: bool
-) -> tuple[int, float] | None:
-    """The EARLIEST recorded flip that made a dir invisible: smallest
-    watermark n with n > threshold (strict, compacted generations) or
-    n >= threshold (batch partitions). None when no recorded flip
-    supersedes the dir — GC then skips it (conservative: an
-    unrecorded supersession is treated as 'just now')."""
-    best: tuple[int, float] | None = None
-    for n, ts in flips.items():
-        if (n > threshold) if strict else (n >= threshold):
-            if best is None or n < best[0]:
-                best = (n, ts)
-    return best
-
-
-def _gc_flip_sidecars(
-    store_path: str, wm: int, live_flips: set[int]
-) -> None:
-    """Remove flip sidecars no surviving superseded dir is judged by
-    (keep the current watermark's): the sidecars themselves must not
-    become the unbounded-growth vector under fast cadence. Removing a
-    sidecar only ever makes later GC MORE conservative (a dir whose
-    earliest superseding flip went unrecorded is judged by the next
-    recorded one, which is younger)."""
-    import os
-
-    base = _compaction_watermark_path(store_path)
-    prefix = os.path.basename(base) + "."
-    for d in os.listdir(store_path):
-        if d.startswith(prefix):
-            tail = d[len(prefix):]
-            if tail.isdigit():
-                n = int(tail)
-                if n != wm and n not in live_flips:
-                    try:
-                        os.remove(os.path.join(store_path, d))
-                    except OSError:
-                        pass
 
 
 def compact_line_frequency_store(
     spark, store_path: str, upto_batch: int, gc_grace_s: float = 0.0
 ) -> None:
     """Fold every ``slice_id=batch<k>`` partition with k <=
-    ``upto_batch`` (plus any previous ``compacted`` partition) into
-    ONE re-aggregated ``slice_id=compacted`` partition — the
+    ``upto_batch`` (plus the current compacted partition) into ONE
+    re-aggregated ``compacted<upto_batch>`` partition — the
     read-amplification fix for long-running ingest streams (a year
     of 5-minute batches is ~100k slice partitions; the counts are
     additive, so compaction is one fp-keyed aggregate over the
-    folded slices).
-
-    CRASH-SAFE ORDER with a VERSIONED compacted partition (the
-    first cut wrote a single ``compacted`` partition and was NOT
-    safe in the publish→watermark window — a crash there left the
-    new partition already containing the batch counts, and a retry
-    folded it together with the still-present batch dirs, doubling
-    every count; found in round-11 self-review): the new partition
-    is named ``compacted<upto_batch>``. (1) Write it from the OLD
-    compacted partition (``compacted<wm>``) + batches in
-    (wm, upto] — inputs that do not change until the watermark
-    flips, so a retry overwrites the same partition with the same
-    data (idempotent). (2) Atomically publish the watermark:
-    readers switch from ``compacted<old_wm>`` to
-    ``compacted<upto>`` in one pointer flip and always IGNORE any
-    ``compacted<k>`` with k != watermark, so the half-published
-    partition is invisible before the flip. (3) GC folded batch
-    dirs and superseded compacted partitions. A crash anywhere
-    leaves readers correct and the retry convergent. The ingest
-    stream skips publishing batches at or below the watermark, so
-    replay of a folded batch is a no-op. (Thin wrapper over the
-    generic additive-store compactor, compact_counting_slices.)"""
+    folded slices). Crash-safe fold order and GC grace: see
+    operators/store.py. The ingest stream skips publishing batches
+    at or below the watermark, so replay of a folded batch is a
+    no-op. (Thin wrapper over compact_counting_slices.)"""
     compact_counting_slices(
         spark, store_path, upto_batch, ["fp"], "n_docs",
         gc_grace_s=gc_grace_s,
@@ -1370,156 +1190,40 @@ def compact_batch_partitions(
     partition_col: str = "batch_id",
     gc_grace_s: float = 0.0,
 ) -> None:
-    """Generic compaction for the numeric ``batch_id``-partitioned
-    stores (the near-dedup corpus + band index, the postings and ANN
-    index stores): fold every partition with watermark < batch_id <=
-    ``upto_batch`` (plus the prior compacted partition) into ONE
-    partition at ``batch_id = -1`` — rows pass through unchanged
-    (these stores are row-sets, not aggregates; the line-frequency
-    store's additive variant is compact_line_frequency_store).
-
-    The compacted partition is VERSIONED at ``-(upto_batch + 2)``
-    (negative, so ``batch_id < current_batch`` probes keep seeing
-    compacted history with no reader change; versioned, so the
-    publish→watermark crash window is safe — the first cut's single
-    ``-1`` partition doubled every row on a retry in that window,
-    found in round-11 self-review). Order: (1) write
-    ``-(upto+2)`` from the OLD compacted partition ``-(wm+2)`` +
-    batches in (wm, upto] — inputs stable until the watermark
-    flips, so a retry is idempotent; (2) atomic watermark publish —
-    readers flip partitions in one pointer swap and always ignore
-    any other negative partition; (3) GC folded batch dirs and
-    superseded compacted partitions. The ingest stream skips
-    batches at or below the watermark.
-
-    CONCURRENT-READER GRACE (round-11 ADVICE close): a reader that
-    resolved the OLD watermark (or planned its scan pre-flip) may
-    still be mid-scan over the dirs step (3) deletes — the watermark
-    filter makes leftovers invisible to NEW readers, but deletion
-    under an in-flight one fails its scan with file-not-found. Pass
-    ``gc_grace_s`` > your longest reader: GC then only removes dirs
-    whose superseding watermark flip is at least that old. Because a
-    flip refreshes the watermark file's mtime, the graceful GC runs
-    at the START of this call (collecting the PREVIOUS generation's
-    leftovers once their flip has aged past the grace — round-12
-    review catch: running it after our own flip made every graced GC
-    a no-op forever); the just-superseded dirs are left for the next
-    compaction or an explicit :func:`gc_batch_partitions` call. The
-    default 0.0 keeps immediate post-flip GC (single-reader jobs,
-    tests)."""
-    import os
-
-    wm = compaction_watermark(store_path)
-    if wm >= upto_batch:
-        return  # already folded to this point (see line-store note)
-    if gc_grace_s > 0:
-        # prior generation, judged against the PREVIOUS flip's age
-        gc_batch_partitions(store_path, partition_col, gc_grace_s)
-    store = spark.read.parquet(store_path)
-    col = F.col(partition_col)
-    new_part = -(upto_batch + 2)
-    folded = store.filter(
-        (col == -(wm + 2)) | ((col > wm) & (col >= 0) & (col <= upto_batch))
-    ).withColumn(partition_col, F.lit(new_part))
-    (
-        folded.hint("rebalance")  # size output files adaptively (guide §6):
-        # without it every upstream task writes a sliver into every
-        # partition dir (tasks × partitions tiny files; the store's
-        # read path then pays listing + footer per sliver). Keyless
-        # REBALANCE targets the AQE advisory size — one file per
-        # slice locally, split-by-size at scale.
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(store_path)
+    """Compaction for the ROWS-layout stores (the near-dedup corpus +
+    band index, the postings and ANN index stores): fold every batch
+    partition in (watermark, ``upto_batch``] plus the current
+    compacted partition into ONE partition at ``-(upto_batch + 2)``
+    — rows pass through unchanged (these stores are row-sets, not
+    aggregates; the additive variant is compact_counting_slices).
+    Crash-safe order, versioning and the concurrent-reader grace
+    ``gc_grace_s``: see operators/store.py (``store.fold``). The
+    ingest stream skips batches at or below the watermark."""
+    layout = store.Layout(partition_col, numeric=True)
+    store.fold(
+        spark, store_path, layout, upto_batch, lambda df: df, gc_grace_s,
+        collect=lambda p, g: gc_batch_partitions(p, partition_col, g),
     )
-    tmp = _compaction_watermark_path(store_path) + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(upto_batch))
-    os.replace(tmp, _compaction_watermark_path(store_path))
-    _record_flip(store_path, upto_batch)
-    if gc_grace_s == 0:
-        gc_batch_partitions(store_path, partition_col, 0.0)
 
 
 def gc_batch_partitions(
     store_path: str, partition_col: str = "batch_id", grace_s: float = 0.0
 ) -> list[str]:
-    """GC superseded dirs of a compacted ``batch_id`` store: folded
+    """GC superseded dirs of a compacted ROWS-layout store: folded
     batch partitions (0 <= k <= watermark) and non-current compacted
-    partitions (negative, != -(wm+2)). All are already invisible to
-    watermark-filtered readers; deletion only reclaims space. The
-    read-grace is judged PER DIR against the flip that superseded
-    that dir (``_COMPACTED_UPTO.<n>`` sidecar mtimes — round-12
-    ADVICE: judging everything against the LATEST flip makes GC a
-    permanent no-op when compaction cadence outpaces the grace), so
-    ``grace_s`` > longest reader guarantees no in-flight scan loses
-    files under it. An orphan NEXT-generation compacted dir (crash
-    before its watermark publish; never visible to any reader) is
-    judged by its own mtime. Returns the deleted paths."""
-    import os
-    import shutil
-    import time
-
-    wm = compaction_watermark(store_path)
-    if wm < 0:
-        return []
-    flips = _flip_times(store_path)
-    now = time.time()
-    cur_part = -(wm + 2)
-    deleted: list[str] = []
-    live_flips: set[int] = set()
-    for d in os.listdir(store_path):
-        if not d.startswith(f"{partition_col}="):
-            continue
-        k = d.split("=", 1)[1]
-        try:
-            kn = int(k)
-        except ValueError:
-            continue
-        p = os.path.join(store_path, d)
-        if 0 <= kn <= wm:
-            flip = _superseding_flip(flips, kn, strict=False)
-        elif kn < 0 and kn != cur_part:
-            flip = _superseding_flip(flips, -kn - 2, strict=True)
-        else:
-            continue
-        if flip is None:
-            # orphan future generation: never superseded by a flip;
-            # safe once its own write activity has aged past grace
-            try:
-                age_ok = now - os.path.getmtime(p) >= grace_s
-            except OSError:
-                continue
-            if age_ok:
-                shutil.rmtree(p)
-                deleted.append(p)
-        elif now - flip[1] >= grace_s:
-            shutil.rmtree(p)
-            deleted.append(p)
-        else:
-            live_flips.add(flip[0])
-    _gc_flip_sidecars(store_path, wm, live_flips)
-    return deleted
+    partitions. Per-dir read-grace contract: see ``store.gc``.
+    Returns the deleted paths."""
+    return store.gc(store_path, store.Layout(partition_col, numeric=True), grace_s)
 
 
 def batch_watermark_filter(
     df: DataFrame, store_path: str, partition_col: str = "batch_id"
 ) -> DataFrame:
-    """Reader-side guard for compacted batch stores: keep the
-    CURRENT compacted partition ``-(wm + 2)`` and live partitions
-    above the watermark; hide everything else — crash-leftover
-    folded batch dirs AND half-published next compacted partitions
-    alike — so a crash in any compaction window never
-    double-reads."""
-    wm = compaction_watermark(store_path)
-    col = F.col(partition_col)
-    if wm < 0:
-        # never compacted: only non-negative batch partitions count
-        # (an orphan compacted partition from a crash before the
-        # FIRST watermark publish must stay invisible)
-        return df.filter(col >= 0)
-    return df.filter((col == -(wm + 2)) | (col > wm))
+    """Reader-side guard for compacted ROWS-layout stores: keep the
+    current compacted partition and live partitions above the
+    watermark, so a crash in any compaction window never
+    double-reads (``store.live``)."""
+    return store.live(df, store_path, store.Layout(partition_col, numeric=True))
 
 
 def _slice_agg_exprs(aggs: dict[str, str]) -> list:
@@ -1548,76 +1252,36 @@ def compact_agg_slices(
     key_cols: list[str],
     aggs: dict[str, str],
     gc_grace_s: float = 0.0,
-    drop_zero_net: bool = True,
 ) -> None:
-    """The slice compactor generalized to MIXED mergeable aggregates
-    (``aggs`` maps column -> 'sum' | 'min' | 'max'): fold
-    ``batch<k>`` slices in (watermark, upto] plus the current
-    ``compacted<wm>`` partition into a re-aggregated
-    ``compacted<upto>`` partition. Identical crash-safety contract
-    to compact_line_frequency_store (versioned partition; publish →
-    atomic watermark → GC; no-op when already folded to this
-    point). ``gc_grace_s``: concurrent-reader grace — see
-    compact_batch_partitions; >0 runs the graced GC BEFORE our own
-    flip (collecting the previous generation once ITS flip has aged
-    past the grace) and defers the just-superseded dirs to the next
-    compaction or an explicit :func:`gc_counting_slices` call.
+    """The slice compactor for MIXED mergeable aggregates (``aggs``
+    maps column -> 'sum' | 'min' | 'max'): fold ``batch<k>`` slices
+    in (watermark, upto] plus the current ``compacted<wm>``
+    partition into a re-aggregated ``compacted<upto>`` partition.
+    Crash-safe order and ``gc_grace_s``: see ``store.fold``; the
+    deferred dirs go to the next compaction or an explicit
+    :func:`gc_counting_slices` call.
 
-    ``drop_zero_net`` (all-'sum' stores only): drop keys whose every
-    aggregate nets to zero. Correct for COUNTING stores — ingest
-    counts are >= 1 per appearance, so a zero total only arises when
-    a :func:`deletion_slice` cancelled the key, and dropping it makes
-    the purged store bit-identical to a rebuild from survivors. Pass
-    False for a hypothetical signed-delta store where a zero total is
-    a legitimate value (margins, net adjustments) — there, dropping
-    would silently lose keys on compaction."""
-    wm = compaction_watermark(store_path)
-    if wm >= upto_batch:
-        return
-    if gc_grace_s > 0:
-        gc_counting_slices(store_path, gc_grace_s)
-    store = spark.read.parquet(store_path)
-    num = F.regexp_extract("slice_id", r"^batch(\d+)$", 1)
-    folded = store.filter(
-        (F.col("slice_id") == f"compacted{wm}")
-        | ((num != "") & (num.cast("long") > wm) & (num.cast("long") <= upto_batch))
-    )
-    merged = folded.groupBy(*key_cols).agg(*_slice_agg_exprs(aggs))
-    if drop_zero_net and set(aggs.values()) == {"sum"}:
-        # all-additive stores: drop keys whose every count nets to
-        # zero — a pure-ingest store never produces one (counts are
-        # >= 1 per appearance), and after a DELETION slice
-        # (:func:`deletion_slice`) folds in, a zero row is exactly
-        # "this key no longer exists", which must compact away so
-        # the purged store is bit-identical to one rebuilt from the
-        # surviving documents
-        alive = None
-        for c in aggs:
-            cond = F.col(c) != 0
-            alive = cond if alive is None else (alive | cond)
-        merged = merged.filter(alive)
-    merged = merged.withColumn("slice_id", F.lit(f"compacted{upto_batch}"))
-    (
-        merged.hint("rebalance")  # size output files adaptively (guide §6):
-        # without it every upstream task writes a sliver into every
-        # partition dir (tasks × partitions tiny files; the store's
-        # read path then pays listing + footer per sliver). Keyless
-        # REBALANCE targets the AQE advisory size — one file per
-        # slice locally, split-by-size at scale.
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("slice_id")
-        .parquet(store_path)
-    )
-    import os
+    All-'sum' stores drop keys whose every aggregate nets to zero: a
+    pure-ingest counting store never produces one (counts are >= 1
+    per appearance), and after a :func:`deletion_slice` folds in, a
+    zero row is exactly "this key no longer exists", which must
+    compact away so the purged store is bit-identical to one rebuilt
+    from the surviving documents."""
 
-    tmp = _compaction_watermark_path(store_path) + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(upto_batch))
-    os.replace(tmp, _compaction_watermark_path(store_path))
-    _record_flip(store_path, upto_batch)
-    if gc_grace_s == 0:
-        gc_counting_slices(store_path, 0.0)
+    def merge(folded: DataFrame) -> DataFrame:
+        merged = folded.groupBy(*key_cols).agg(*_slice_agg_exprs(aggs))
+        if set(aggs.values()) == {"sum"}:
+            alive = None
+            for c in aggs:
+                cond = F.col(c) != 0
+                alive = cond if alive is None else (alive | cond)
+            merged = merged.filter(alive)
+        return merged
+
+    store.fold(
+        spark, store_path, store.SLICES, upto_batch, merge, gc_grace_s,
+        collect=gc_counting_slices,
+    )
 
 
 def compact_counting_slices(
@@ -1631,8 +1295,7 @@ def compact_counting_slices(
     """The line-frequency compactor generalized to ANY additive
     (keys -> count) slice store (line fingerprints, token
     distributions, ...) — thin wrapper over :func:`compact_agg_slices`
-    with a single SUM aggregate; see there for the crash-safety and
-    grace contract."""
+    with a single SUM aggregate."""
     compact_agg_slices(
         spark,
         store_path,
@@ -1644,59 +1307,27 @@ def compact_counting_slices(
 
 
 def gc_counting_slices(store_path: str, grace_s: float = 0.0) -> list[str]:
-    """GC superseded dirs of a compacted counting-slice store: folded
+    """GC superseded dirs of a compacted SLICES-layout store: folded
     ``batch<k>`` slices (k <= watermark) and non-current
-    ``compacted<j>`` partitions (j != watermark) — all invisible to
-    watermark-filtered readers already. Same per-dir read-grace
-    contract as :func:`gc_batch_partitions` (each dir judged against
-    the flip that superseded IT, via the ``_COMPACTED_UPTO.<n>``
-    sidecars; orphan future generations by their own mtime). Returns
-    the deleted paths."""
-    import os
-    import shutil
-    import time
+    ``compacted<j>`` partitions. Per-dir read-grace contract: see
+    ``store.gc``. Returns the deleted paths."""
+    return store.gc(store_path, store.SLICES, grace_s)
 
+
+def _check_purge_slot(store_path: str, layout: store.Layout, upto_batch: int) -> None:
+    """A purge CONSUMES batch slot ``upto_batch``: it must lie above
+    the watermark (so the new generation never overwrites the one it
+    reads) and above every live batch — a batch above it would
+    survive the purge with the erased rows visible while the purge
+    reports success (driver-side listdir, no data read)."""
     wm = compaction_watermark(store_path)
-    if wm < 0:
-        return []
-    flips = _flip_times(store_path)
-    now = time.time()
-    deleted: list[str] = []
-    live_flips: set[int] = set()
-    for d in os.listdir(store_path):
-        flip = None
-        orphan = False
-        if d.startswith("slice_id=batch"):
-            k = d.split("slice_id=batch", 1)[1]
-            if not (k.isdigit() and int(k) <= wm):
-                continue
-            flip = _superseding_flip(flips, int(k), strict=False)
-        elif d.startswith("slice_id=compacted"):
-            k = d.split("slice_id=compacted", 1)[1]
-            if not (k.isdigit() and int(k) != wm):
-                continue
-            flip = _superseding_flip(flips, int(k), strict=True)
-            orphan = flip is None
-        else:
-            continue
-        p = os.path.join(store_path, d)
-        if flip is None:
-            if not orphan:
-                continue
-            try:
-                age_ok = now - os.path.getmtime(p) >= grace_s
-            except OSError:
-                continue
-            if age_ok:
-                shutil.rmtree(p)
-                deleted.append(p)
-        elif now - flip[1] >= grace_s:
-            shutil.rmtree(p)
-            deleted.append(p)
-        else:
-            live_flips.add(flip[0])
-    _gc_flip_sidecars(store_path, wm, live_flips)
-    return deleted
+    top = max(wm, store.max_live(store_path, layout))
+    if upto_batch <= top:
+        raise ValueError(
+            f"a purge needs upto_batch strictly above every ingested "
+            f"batch and the watermark (got upto_batch={upto_batch}, "
+            f"watermark={wm}, highest live batch or watermark={top})"
+        )
 
 
 def purge_batch_store(
@@ -1716,25 +1347,17 @@ def purge_batch_store(
     that one column, or an iterable of values; deletion sets are
     small next to the store, so the anti-join broadcasts them).
 
-    Crash contract is compact_batch_partitions' own, inherited
-    verbatim: versioned negative partition ``-(upto+2)`` published
-    first, atomic watermark flip second, GC last — a retry in any
-    window is idempotent, and a reader never sees half a purge
-    (pre-flip it reads the old generation WITH the rows; post-flip,
-    the new one without; never a mix). The purge CONSUMES one batch
-    slot: ``upto_batch`` must be a fresh id above the watermark and
-    every ingested batch (the assert guards the watermark half) —
-    that keeps the new generation's partition id
-    ``-(upto_batch + 2)`` distinct from the generation being read,
-    so the fold never overwrites its own input even when nothing
-    was ingested since the last compaction. Batches that land ABOVE
-    ``upto_batch`` afterwards are untouched by this purge.
+    Crash contract is the fold's own (operators/store.py): a reader
+    never sees half a purge (pre-flip it reads the old generation
+    WITH the rows; post-flip, the new one without). The purge
+    CONSUMES one batch slot: ``upto_batch`` must be a fresh id above
+    the watermark and every ingested batch (ValueError otherwise).
+    Batches that land ABOVE ``upto_batch`` afterwards are untouched
+    by this purge.
 
     Right-to-erasure at 100 TB is a compaction, not a rewrite-the-
     world: only the folded generation is rewritten, the watermark
     flip is one rename, and the ingest stream needs no pause."""
-    import os
-
     if not isinstance(ids, DataFrame):
         # infer the key type from the store itself — a string-keyed
         # store (e.g. fingerprint) must not be cast-matched as long.
@@ -1745,67 +1368,14 @@ def purge_batch_store(
         id_field = StructType([store_schema[id_col]])
         ids = spark.createDataFrame([(v,) for v in ids], id_field)
     ids = ids.select(id_col).distinct()
-    wm = compaction_watermark(store_path)
-    if upto_batch <= wm:
-        raise ValueError(
-            f"purge_batch_store needs a fresh batch slot above the "
-            f"watermark (got upto_batch={upto_batch}, watermark={wm})"
-        )
-    # the erasure contract requires upto_batch above EVERY ingested
-    # batch, not just the watermark: a live positive batch above
-    # upto_batch would keep the erased ids visible while the purge
-    # reports success — a silent right-to-erasure violation. Scan the
-    # partition dirs (driver-side listdir, no data read) and enforce.
-    max_live = wm
-    prefix = f"{partition_col}="
-    for d in os.listdir(store_path):
-        if d.startswith(prefix):
-            k = d[len(prefix):]
-            try:
-                b = int(k)
-            except ValueError:
-                continue
-            if b >= 0:
-                max_live = max(max_live, b)
-    if upto_batch <= max_live:
-        raise ValueError(
-            f"purge_batch_store needs upto_batch strictly above every "
-            f"ingested batch (got upto_batch={upto_batch}, live max "
-            f"{partition_col}={max_live}): a batch above upto_batch "
-            f"would survive the purge with the erased rows visible"
-        )
-    if gc_grace_s > 0:
-        gc_batch_partitions(store_path, partition_col, gc_grace_s)
-    store = spark.read.parquet(store_path)
-    col = F.col(partition_col)
-    new_part = -(upto_batch + 2)
-    folded = (
-        store.filter(
-            (col == -(wm + 2))
-            | ((col > wm) & (col >= 0) & (col <= upto_batch))
-        )
-        .join(F.broadcast(ids), id_col, "left_anti")
-        .withColumn(partition_col, F.lit(new_part))
+    layout = store.Layout(partition_col, numeric=True)
+    _check_purge_slot(store_path, layout, upto_batch)
+    store.fold(
+        spark, store_path, layout, upto_batch,
+        lambda df: df.join(F.broadcast(ids), id_col, "left_anti"),
+        gc_grace_s,
+        collect=lambda p, g: gc_batch_partitions(p, partition_col, g),
     )
-    (
-        folded.hint("rebalance")  # size output files adaptively (guide §6):
-        # without it every upstream task writes a sliver into every
-        # partition dir (tasks × partitions tiny files; the store's
-        # read path then pays listing + footer per sliver). Keyless
-        # REBALANCE targets the AQE advisory size — one file per
-        # slice locally, split-by-size at scale.
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(store_path)
-    )
-    tmp = _compaction_watermark_path(store_path) + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(upto_batch))
-    os.replace(tmp, _compaction_watermark_path(store_path))
-    _record_flip(store_path, upto_batch)
-    if gc_grace_s == 0:
-        gc_batch_partitions(store_path, partition_col, 0.0)
 
 
 def deletion_slice(slice_df: DataFrame, count_cols: list[str]) -> DataFrame:
@@ -1833,21 +1403,11 @@ def agg_store_totals(
 ) -> DataFrame:
     """Watermark-aware totals over a mergeable-aggregate slice store
     (``aggs`` maps column -> 'sum' | 'min' | 'max', matching
-    :func:`compact_agg_slices`): merge per key over the current
-    compacted partition + live batch slices; crash leftovers (folded
-    batch dirs, orphan compacted partitions) stay invisible — the
-    boilerplate_from_store reader contract, generalized."""
-    store = spark.read.parquet(store_path)
-    wm = compaction_watermark(store_path)
-    num = F.regexp_extract("slice_id", r"^batch(\d+)$", 1)
-    if wm >= 0:
-        store = store.filter(
-            (F.col("slice_id") == f"compacted{wm}")
-            | ((num != "") & (num.cast("long") > wm))
-        )
-    else:
-        store = store.filter(num != "")
-    return store.groupBy(*key_cols).agg(*_slice_agg_exprs(aggs))
+    :func:`compact_agg_slices`): merge per key over the live
+    partitions (``store.live``) — crash leftovers (folded batch
+    dirs, orphan compacted partitions) stay invisible."""
+    live = store.live(spark.read.parquet(store_path), store_path, store.SLICES)
+    return live.groupBy(*key_cols).agg(*_slice_agg_exprs(aggs))
 
 
 def counting_store_totals(
@@ -1906,29 +1466,11 @@ def token_stats_store(
     ref_pred: Column | None = None,
     text_col: str = "text",
 ) -> None:
-    """Publish one batch's token-count slice (same naming +
-    idempotent dynamic-overwrite contract as line_frequency_store;
-    compact with compact_counting_slices(keys=['source','t'],
-    count='c'))."""
-    import re
-
-    if not re.fullmatch(r"batch\d+", slice_id):
-        raise ValueError(
-            f"token_stats_store slice_id must be 'batch<k>' (got {slice_id!r})"
-        )
-    (
-        token_stats_slice(docs, ref_pred, text_col)
-        .withColumn("slice_id", F.lit(slice_id))
-        .hint("rebalance")  # size output files adaptively (guide §6):
-        # without it every upstream task writes a sliver into every
-        # partition dir (tasks × partitions tiny files; the store's
-        # read path then pays listing + footer per sliver). Keyless
-        # REBALANCE targets the AQE advisory size — one file per
-        # slice locally, split-by-size at scale.
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("slice_id")
-        .parquet(store_path)
+    """Publish one batch's token-count slice (SLICES layout, see
+    operators/store.py; compact with
+    compact_counting_slices(keys=['source','t'], count='c'))."""
+    publish_counting_slice(
+        token_stats_slice(docs, ref_pred, text_col), store_path, slice_id
     )
 
 
@@ -2059,29 +1601,13 @@ def prompt_key_store(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> None:
-    """Publish one batch's prompt-cluster slice (same naming +
-    idempotent dynamic-overwrite contract as line_frequency_store;
-    compact with compact_agg_slices(keys=['pkey'],
+    """Publish one batch's prompt-cluster slice (SLICES layout, see
+    operators/store.py; compact with compact_agg_slices(keys=['pkey'],
     aggs=PROMPT_KEY_AGGS))."""
-    import re
-
-    if not re.fullmatch(r"batch\d+", slice_id):
-        raise ValueError(
-            f"prompt_key_store slice_id must be 'batch<k>' (got {slice_id!r})"
-        )
-    (
-        prompt_key_slice(docs, prompt_tokens, text_col, id_col)
-        .withColumn("slice_id", F.lit(slice_id))
-        .hint("rebalance")  # size output files adaptively (guide §6):
-        # without it every upstream task writes a sliver into every
-        # partition dir (tasks × partitions tiny files; the store's
-        # read path then pays listing + footer per sliver). Keyless
-        # REBALANCE targets the AQE advisory size — one file per
-        # slice locally, split-by-size at scale.
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("slice_id")
-        .parquet(store_path)
+    publish_counting_slice(
+        prompt_key_slice(docs, prompt_tokens, text_col, id_col),
+        store_path,
+        slice_id,
     )
 
 
@@ -2137,41 +1663,18 @@ def prompt_key_pairs_store(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> None:
-    """Publish one batch's (pkey, doc_id) companion partition —
-    batch_id-partitioned dynamic overwrite (replay-idempotent), the
-    same contract as the band-index batches, so
+    """Publish one batch's (pkey, doc_id) companion partition in the
+    ROWS layout (operators/store.py), so
     :func:`compact_batch_partitions` folds it and
     :func:`purge_batch_store` erases from it."""
     if batch_id < 0:
         raise ValueError(f"batch_id must be >= 0 (got {batch_id})")
-    (
-        prompt_key_pairs_slice(docs, prompt_tokens, text_col, id_col)
-        .withColumn("batch_id", F.lit(batch_id))
-        .hint("rebalance")  # size output files adaptively (guide §6):
-        # without it every upstream task writes a sliver into every
-        # partition dir (tasks × partitions tiny files; the store's
-        # read path then pays listing + footer per sliver). Keyless
-        # REBALANCE targets the AQE advisory size — one file per
-        # slice locally, split-by-size at scale.
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(store_path)
+    store.publish(
+        prompt_key_pairs_slice(docs, prompt_tokens, text_col, id_col),
+        store_path,
+        store.ROWS,
+        batch_id,
     )
-
-
-def _max_live_slice(store_path: str) -> int:
-    """Largest live batch<k> slice id in a slice_id-partitioned agg
-    store (driver-side listdir; -1 when none)."""
-    import os
-
-    best = -1
-    for d in os.listdir(store_path):
-        if d.startswith("slice_id=batch"):
-            k = d.split("slice_id=batch", 1)[1]
-            if k.isdigit():
-                best = max(best, int(k))
-    return best
 
 
 def purge_agg_store(
@@ -2190,70 +1693,34 @@ def purge_agg_store(
     ``drop_keys``, union ``repair_df`` (the recomputed totals for
     affected keys that still have surviving members — key_cols +
     agg cols, no slice_id), and publish as ``compacted<upto_batch>``
-    under the standard crash-safe watermark contract (publish →
-    atomic flip → GC; a reader never sees half a purge).
+    under the store's crash-safe fold (operators/store.py; a reader
+    never sees half a purge).
 
     ``upto_batch`` must be a fresh slot above the watermark AND above
     every live batch slice — a slice above it would re-add the erased
-    contribution after the repair (the purge_batch_store guard,
-    applied to the slice axis)."""
-    import os
+    contribution after the repair (ValueError otherwise)."""
+    _check_purge_slot(store_path, store.SLICES, upto_batch)
 
-    wm = compaction_watermark(store_path)
-    if upto_batch <= wm:
-        raise ValueError(
-            f"purge_agg_store needs a fresh slot above the watermark "
-            f"(got upto_batch={upto_batch}, watermark={wm})"
+    def repair(folded: DataFrame) -> DataFrame:
+        merged = (
+            folded.groupBy(*key_cols)
+            .agg(*_slice_agg_exprs(aggs))
+            .join(
+                F.broadcast(drop_keys.select(*key_cols).distinct()),
+                key_cols,
+                "left_anti",
+            )
         )
-    max_live = max(wm, _max_live_slice(store_path))
-    if upto_batch <= max_live:
-        raise ValueError(
-            f"purge_agg_store needs upto_batch strictly above every "
-            f"live slice (got upto_batch={upto_batch}, live max "
-            f"batch{max_live}): a later slice would re-add the erased "
-            f"keys' contribution after the repair"
-        )
-    if gc_grace_s > 0:
-        gc_counting_slices(store_path, gc_grace_s)
-    store = spark.read.parquet(store_path)
-    num = F.regexp_extract("slice_id", r"^batch(\d+)$", 1)
-    folded = store.filter(
-        (F.col("slice_id") == f"compacted{wm}")
-        | ((num != "") & (num.cast("long") > wm) & (num.cast("long") <= upto_batch))
+        if repair_df is not None:
+            merged = merged.unionByName(
+                repair_df.select(*key_cols, *aggs.keys())
+            )
+        return merged
+
+    store.fold(
+        spark, store_path, store.SLICES, upto_batch, repair, gc_grace_s,
+        collect=gc_counting_slices,
     )
-    merged = (
-        folded.groupBy(*key_cols)
-        .agg(*_slice_agg_exprs(aggs))
-        .join(
-            F.broadcast(drop_keys.select(*key_cols).distinct()),
-            key_cols,
-            "left_anti",
-        )
-    )
-    if repair_df is not None:
-        merged = merged.unionByName(
-            repair_df.select(*key_cols, *aggs.keys())
-        )
-    merged = merged.withColumn("slice_id", F.lit(f"compacted{upto_batch}"))
-    (
-        merged.hint("rebalance")  # size output files adaptively (guide §6):
-        # without it every upstream task writes a sliver into every
-        # partition dir (tasks × partitions tiny files; the store's
-        # read path then pays listing + footer per sliver). Keyless
-        # REBALANCE targets the AQE advisory size — one file per
-        # slice locally, split-by-size at scale.
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("slice_id")
-        .parquet(store_path)
-    )
-    tmp = _compaction_watermark_path(store_path) + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(upto_batch))
-    os.replace(tmp, _compaction_watermark_path(store_path))
-    _record_flip(store_path, upto_batch)
-    if gc_grace_s == 0:
-        gc_counting_slices(store_path, 0.0)
 
 
 # --- length-quantile histogram store (10th stream-maintained -------
@@ -2310,31 +1777,12 @@ def length_hist_slice(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def length_hist_store(
     docs: DataFrame, store_path: str, slice_id: str, text_col: str = "text"
 ) -> None:
-    """Publish one batch's histogram slice (same naming + idempotent
-    dynamic-overwrite contract as token_stats_store; compact with
+    """Publish one batch's histogram slice (SLICES layout, see
+    operators/store.py; compact with
     compact_counting_slices(keys=['source','b'], count='c');
     erasure: deletion_slice(length_hist_slice(deleted), ['c']) —
     all-additive, so the negative-slice path applies verbatim)."""
-    import re
-
-    if not re.fullmatch(r"batch\d+", slice_id):
-        raise ValueError(
-            f"length_hist_store slice_id must be 'batch<k>' (got {slice_id!r})"
-        )
-    (
-        length_hist_slice(docs, text_col)
-        .withColumn("slice_id", F.lit(slice_id))
-        .hint("rebalance")  # size output files adaptively (guide §6):
-        # without it every upstream task writes a sliver into every
-        # partition dir (tasks × partitions tiny files; the store's
-        # read path then pays listing + footer per sliver). Keyless
-        # REBALANCE targets the AQE advisory size — one file per
-        # slice locally, split-by-size at scale.
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("slice_id")
-        .parquet(store_path)
-    )
+    publish_counting_slice(length_hist_slice(docs, text_col), store_path, slice_id)
 
 
 def quantiles_from_hist_store(
@@ -2468,37 +1916,20 @@ def bloom_slice(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def publish_counting_slice(
     slice_df: DataFrame, store_path: str, slice_id: str
 ) -> None:
-    """Publish any additive (keys, count) slice under the standard
-    'batch<k>' naming + idempotent dynamic-overwrite contract — the
-    shared writer behind bloom_store (and usable for negative
-    deletion slices)."""
-    import re
-
-    if not re.fullmatch(r"batch\d+", slice_id):
-        raise ValueError(
-            f"counting slice_id must be 'batch<k>' (got {slice_id!r})"
-        )
-    (
-        slice_df.withColumn("slice_id", F.lit(slice_id))
-        .hint("rebalance")  # size output files adaptively (guide §6):
-        # without it every upstream task writes a sliver into every
-        # partition dir (tasks × partitions tiny files; the store's
-        # read path then pays listing + footer per sliver). Keyless
-        # REBALANCE targets the AQE advisory size — one file per
-        # slice locally, split-by-size at scale.
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("slice_id")
-        .parquet(store_path)
-    )
+    """Publish any mergeable (keys, aggregates) slice as batch
+    partition ``slice_id`` (must be ``batch<k>``) of a SLICES-layout
+    store (operators/store.py) — the shared writer behind every
+    slice family's ``*_store`` (and usable for negative deletion
+    slices)."""
+    store.check_batch_slice(slice_id)
+    store.publish(slice_df, store_path, store.SLICES, slice_id)
 
 
 def bloom_store(
     docs: DataFrame, store_path: str, slice_id: str, text_col: str = "text"
 ) -> None:
-    """Publish one batch's Bloom bucket slice (same 'batch<k>' naming
-    + idempotent dynamic-overwrite contract as token_stats_store;
-    compact with compact_counting_slices(keys=['b'], count='c');
+    """Publish one batch's Bloom bucket slice (SLICES layout, see
+    operators/store.py; compact with compact_counting_slices(keys=['b'], count='c');
     erasure: deletion_slice(bloom_slice(deleted), ['c']))."""
     publish_counting_slice(bloom_slice(docs, text_col), store_path, slice_id)
 
@@ -2728,8 +2159,8 @@ def cms_slice_from_counts(
 def cms_store(
     docs: DataFrame, store_path: str, slice_id: str, text_col: str = "text"
 ) -> None:
-    """Publish one batch's Count-Min slice under the standard
-    'batch<k>' + idempotent dynamic-overwrite contract (compact with
+    """Publish one batch's Count-Min slice (SLICES layout, see
+    operators/store.py; compact with
     compact_counting_slices(keys=['d','b'], count='c'); erase with
     deletion_slice(cms_slice_from_counts(batch_term_counts(erased)),
     ['c']))."""
@@ -2850,7 +2281,7 @@ def hh_lower_from_store(spark, store_path: str) -> DataFrame:
     batch), and an all-empty-slice store then holds only _SUCCESS
     markers Spark cannot infer a schema from. The existence probe
     is a driver-side listing of the LOCAL store root (the
-    _max_live_slice precedent; revisit if store roots move to an
+    store.max_live precedent; revisit if store roots move to an
     object store)."""
     import glob
     import os

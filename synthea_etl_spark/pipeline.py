@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from synthea_etl_spark.operators import store
 from synthea_etl_spark.operators.clean import clean_pipeline
 from synthea_etl_spark.operators.marts import build_patient_mart
 from synthea_etl_spark.operators.scd2 import scd2_merge, write_swap
@@ -101,8 +102,10 @@ def run_batch_pipeline(
 
     load_ts = datetime.strptime(load_date, "%Y-%m-%d")
     mart = build_patient_mart(staged, existing or None, load_ts)
-    for name, df in mart.items():
-        write_swap(df, os.path.join(mart_dir, name))
+    # fact first: its dim_location input lazily scans the OLD dim files,
+    # which the dim's own write_swap deletes
+    for name in sorted(mart, key=lambda n: n != "fact_patient"):
+        write_swap(mart[name], os.path.join(mart_dir, name))
     return {
         name: spark.read.parquet(os.path.join(mart_dir, name)) for name in mart
     }
@@ -148,6 +151,35 @@ def scd2_refresh_stream(
     )
 
 
+def _available_now(
+    spark: SparkSession,
+    landing_dir: str,
+    checkpoint_dir: str,
+    schema: StructType,
+    ingest,
+):
+    """The JSON ingest-stream skeleton every ``*_ingest_stream`` runs:
+    documents landed under ``landing_dir`` (recursively) arrive as
+    micro-batches, ``ingest(batch_df, batch_id)`` publishes each
+    non-empty one, and the availableNow trigger processes every file
+    not yet recorded in ``checkpoint_dir``, then stops. Returns the
+    started query."""
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            ingest(batch_df, batch_id)
+
+    return (
+        spark.readStream.schema(schema)
+        .option("recursiveFileLookup", True)
+        .json(landing_dir)
+        .writeStream.foreachBatch(run)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def near_dedup_ingest_stream(
     spark: SparkSession,
     landing_dir: str,
@@ -178,22 +210,20 @@ def near_dedup_ingest_stream(
        and their bands to the index.
 
     Exactly-once under every crash/replay window WITHOUT a
-    transactional store: both sinks are partitioned by batch_id and
-    written with dynamic partition overwrite, so a replayed batch
-    OVERWRITES its own partition instead of appending twice; and the
-    index probe reads only partitions with batch_id < current (a
-    replay must not see the half-written bands of its first
-    attempt). At 100 TB the index is the ~50-byte-per-row band
-    table, never the corpus — the same scale shape the q158 gate
-    certifies, plus idempotent publication.
+    transactional store: both sinks are ROWS-layout stores
+    (operators/store.py), so a replayed batch OVERWRITES its own
+    partition instead of appending twice; and the index probe reads
+    only partitions with batch_id < current (a replay must not see
+    the half-written bands of its first attempt). At 100 TB the
+    index is the ~50-byte-per-row band table, never the corpus — the
+    same scale shape the q158 gate certifies.
 
     COMPACTION: long-running streams fold old batch partitions with
     ``dedup.compact_batch_partitions`` (call it on corpus_dir AND
     index_dir with the same ``upto_batch``). Compacted rows land at
-    the versioned negative partition -(upto+2), which existing
-    ``batch_id < current`` probes keep
+    a negative partition, which ``batch_id < current`` probes keep
     seeing; the watermark filter hides crash leftovers, and this
-    ingest skips replayed batches at or below the watermark."""
+    ingest skips replayed batches at or below the index watermark."""
     from synthea_etl_spark.operators.dedup import (
         banded_signatures,
         exploded_shingles,
@@ -238,15 +268,13 @@ def near_dedup_ingest_stream(
             .select(a_key, b_key)
         )
 
-    def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def ingest(batch_df: DataFrame, batch_id: int) -> None:
         from synthea_etl_spark.operators.dedup import (
             batch_watermark_filter,
             compaction_watermark,
         )
 
-        if batch_df.isEmpty():
-            return
-        # a replayed batch already folded into the compacted (-1)
+        # a replayed batch already folded into the compacted
         # partition must not republish — its rows live there now
         if batch_id <= compaction_watermark(index_dir):
             return
@@ -258,9 +286,9 @@ def near_dedup_ingest_stream(
         if os.path.isdir(index_dir) and any(
             e.startswith("batch_id=") for e in os.listdir(index_dir)
         ):
-            # batch_id < current keeps seeing the compacted partition
-            # (-1); the watermark filter additionally hides
-            # crash-leftover folded dirs (publish succeeded, GC not)
+            # batch_id < current keeps seeing the compacted partition;
+            # the watermark filter additionally hides crash-leftover
+            # folded dirs (publish succeeded, GC not)
             history = batch_watermark_filter(
                 spark.read.parquet(index_dir), index_dir
             ).filter(
@@ -310,30 +338,11 @@ def near_dedup_ingest_stream(
         survivors = batch_df.join(intra, "doc_id", "left_anti")
         if matched is not None:
             survivors = survivors.join(matched, "doc_id", "left_anti")
-        survivors = survivors.withColumn("batch_id", F.lit(batch_id))
-        surviving_bands = bands_df.join(
-            survivors.select("doc_id"), "doc_id"
-        ).withColumn("batch_id", F.lit(batch_id))
-        # dynamic partition overwrite: a replayed batch rewrites its
-        # own partition — idempotent publication, no dup appends
-        for df, path in ((survivors, corpus_dir), (surviving_bands, index_dir)):
-            (
-                df.hint("rebalance")  # output-file sizing, guide §6
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(path)
-            )
+        surviving_bands = bands_df.join(survivors.select("doc_id"), "doc_id")
+        store.publish(survivors, corpus_dir, store.ROWS, batch_id)
+        store.publish(surviving_bands, index_dir, store.ROWS, batch_id)
 
-    return (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", True)
-        .json(landing_dir)
-        .writeStream.foreachBatch(ingest_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _available_now(spark, landing_dir, checkpoint_dir, schema, ingest)
 
 
 def retrieval_index_ingest_stream(
@@ -347,10 +356,7 @@ def retrieval_index_ingest_stream(
     persisted postings table kept current by a restartable stream.
     Each micro-batch of landed documents tokenizes ONLY itself
     (operators/retrieval.inverted_index) and publishes its postings
-    partitioned by batch_id with dynamic partition overwrite, so a
-    replayed batch rewrites its own partition instead of appending
-    twice — the same exactly-once-without-a-transactional-store
-    contract as ``near_dedup_ingest_stream``.
+    as one ROWS-layout batch partition (operators/store.py).
 
     No merge step exists because none is needed: postings rows are
     per (doc, term) under a fixed tokenizer, so the UNION of batch
@@ -364,11 +370,10 @@ def retrieval_index_ingest_stream(
     (round-11 VERDICT): fold them with
     ``dedup.compact_batch_partitions(spark, index_dir, upto)`` — the
     postings rows are a row-set per (doc, term), so the generic
-    row-pass compactor applies unchanged, with the same crash-safe
-    versioned-partition contract. This stream participates in the
-    contract by skipping replayed batches at or below the watermark
-    (their rows live in the compacted partition now), and
-    ``postings_from_store`` is the watermark-filtered reader.
+    row-pass compactor applies unchanged. This stream skips replayed
+    batches at or below the watermark (their rows live in the
+    compacted partition now), and ``postings_from_store`` is the
+    watermark-filtered reader.
 
     CHECKPOINT-LOSS CONTRACT (round-12 review): the skip keys on the
     STREAMING batch_id, which is only meaningful under the
@@ -387,41 +392,21 @@ def retrieval_index_ingest_stream(
     from synthea_etl_spark.operators.dedup import compaction_watermark
     from synthea_etl_spark.operators.retrieval import inverted_index
 
-    def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def ingest(batch_df: DataFrame, batch_id: int) -> None:
         # a replayed batch already folded into the compacted
         # partition must not republish — its rows live there now
         if batch_id <= compaction_watermark(index_dir):
             return
-        (
-            inverted_index(batch_df)
-            .withColumn("batch_id", F.lit(batch_id))
-            .hint("rebalance")  # output-file sizing, guide §6
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(index_dir)
-        )
+        store.publish(inverted_index(batch_df), index_dir, store.ROWS, batch_id)
 
-    return (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", True)
-        .json(landing_dir)
-        .writeStream.foreachBatch(ingest_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _available_now(spark, landing_dir, checkpoint_dir, schema, ingest)
 
 
 def postings_from_store(spark: SparkSession, index_dir: str) -> DataFrame:
     """Watermark-aware reader for the streamed postings store: the
     current compacted partition + live batch slices, crash leftovers
     (folded batch dirs, half-published compacted partitions)
-    invisible — hand the result straight to ``bm25_topk_from_index``.
-    The boilerplate_from_store / counting_store_totals reader
-    contract, applied to the retrieval index."""
+    invisible — hand the result straight to ``bm25_topk_from_index``."""
     from synthea_etl_spark.operators.dedup import batch_watermark_filter
 
     return batch_watermark_filter(
@@ -444,11 +429,8 @@ def ann_index_ingest_stream(
     recurring-crawl story for embeddings. Each micro-batch of landed
     vectors is assigned to its nearest centroid under the FROZEN
     quantizer (operators/similarity.ivf_index — per-row arithmetic,
-    no shuffle, no training scan) and published partitioned by
-    batch_id with dynamic partition overwrite, so a replayed batch
-    rewrites its own partition instead of appending twice — the same
-    exactly-once-without-a-transactional-store contract as the
-    MinHash and postings streams.
+    no shuffle, no training scan) and published as one ROWS-layout
+    batch partition (operators/store.py).
 
     No merge step exists because none is needed: assignment under a
     fixed quantizer is per-row, so the UNION of batch partitions IS
@@ -461,28 +443,15 @@ def ann_index_ingest_stream(
     the documented contract of ivf_index."""
     from synthea_etl_spark.operators.similarity import ivf_index
 
-    def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        (
-            ivf_index(batch_df, centroids, id_col=id_col, vec_col=vec_col)
-            .withColumn("batch_id", F.lit(batch_id))
-            .hint("rebalance")  # output-file sizing, guide §6
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(index_dir)
+    def ingest(batch_df: DataFrame, batch_id: int) -> None:
+        store.publish(
+            ivf_index(batch_df, centroids, id_col=id_col, vec_col=vec_col),
+            index_dir,
+            store.ROWS,
+            batch_id,
         )
 
-    return (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", True)
-        .json(landing_dir)
-        .writeStream.foreachBatch(ingest_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _available_now(spark, landing_dir, checkpoint_dir, schema, ingest)
 
 
 def sketch_store_ingest_stream(
@@ -498,9 +467,8 @@ def sketch_store_ingest_stream(
     cells, lexical postings, and now bottom-k sketches) gains the
     same restartable ingest the others have. Each micro-batch of
     landed documents computes ONLY its own k-row bottom-k sketch and
-    publishes it as one slice partition (operators/dedup.
-    corpus_sketch_store — dynamic partition overwrite, so a replayed
-    batch rewrites its own slice; slice_id = "batch<id>").
+    publishes it as one slice partition ``batch<id>``
+    (operators/dedup.corpus_sketch_store).
 
     No merge step at ingest because the sketch is MERGEABLE by
     construction: ``merge_bottomk_sketches`` over any subset of the
@@ -511,22 +479,12 @@ def sketch_store_ingest_stream(
     once, at landing time."""
     from synthea_etl_spark.operators.dedup import corpus_sketch_store
 
-    def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def ingest(batch_df: DataFrame, batch_id: int) -> None:
         corpus_sketch_store(
-            batch_df, store_dir, slice_id=f"batch{batch_id}", k=k
+            batch_df, store_dir, slice_id=store.SLICES.batch(batch_id), k=k
         )
 
-    return (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", True)
-        .json(landing_dir)
-        .writeStream.foreachBatch(ingest_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _available_now(spark, landing_dir, checkpoint_dir, schema, ingest)
 
 
 def curation_ingest_stream(
@@ -553,8 +511,8 @@ def curation_ingest_stream(
        computed only for stage-1/2 survivors.
 
     Publishes per-doc verdicts (doc_id, lang, stage) AND admitted
-    docs (doc_id, lang, text, fp), both partitioned by batch_id with
-    dynamic partition overwrite; the fingerprint probe reads only
+    docs (doc_id, lang, text, fp), both ROWS-layout stores
+    (operators/store.py); the fingerprint probe reads only
     partitions with batch_id < current — together the same
     exactly-once-under-replay contract as the dedup/postings/ANN
     streams, so the union of verdict partitions IS the funnel report
@@ -581,9 +539,7 @@ def curation_ingest_stream(
 
     _MICRO = 1_000_000
 
-    def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def ingest(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Window
 
         b = batch_df.localCheckpoint()  # read by three stages below
@@ -641,37 +597,19 @@ def curation_ingest_stream(
             )
             .otherwise(F.lit("admitted"))
             .alias("stage"),
-        ).withColumn("batch_id", F.lit(batch_id))
-        admitted = (
-            staged.filter(
-                ~F.col("_dup")
-                & F.col("_q_ok")
-                & F.coalesce(F.col("_r_ok"), F.lit(False))
-            )
-            .select("doc_id", "lang", "text", "fp")
-            .withColumn("batch_id", F.lit(batch_id))
         )
+        admitted = staged.filter(
+            ~F.col("_dup")
+            & F.col("_q_ok")
+            & F.coalesce(F.col("_r_ok"), F.lit(False))
+        ).select("doc_id", "lang", "text", "fp")
         # admitted FIRST, verdicts LAST: the fingerprint probe keys on
         # the verdicts table, so a crash between the two writes leaves
         # the replay indistinguishable from a clean retry
-        for df, path in ((admitted, admitted_dir), (verdicts, verdicts_dir)):
-            (
-                df.hint("rebalance")  # output-file sizing, guide §6
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(path)
-            )
+        store.publish(admitted, admitted_dir, store.ROWS, batch_id)
+        store.publish(verdicts, verdicts_dir, store.ROWS, batch_id)
 
-    return (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", True)
-        .json(landing_dir)
-        .writeStream.foreachBatch(ingest_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _available_now(spark, landing_dir, checkpoint_dir, schema, ingest)
 
 
 def boilerplate_ingest_stream(
@@ -688,11 +626,10 @@ def boilerplate_ingest_stream(
     the sixth stream-maintained artifact family. Each micro-batch of
     landed documents publishes ONLY its own per-line-fingerprint
     distinct-doc counts as one slice partition
-    (operators/dedup.line_frequency_store — dynamic partition
-    overwrite, replay-idempotent). Because landing is append-only
-    (each document arrives in exactly one batch), summing n_docs
-    across slices equals the corpus-wide distinct-document count per
-    line, so ``dedup.boilerplate_from_store`` answers the
+    (operators/dedup.line_frequency_store). Because landing is
+    append-only (each document arrives in exactly one batch), summing
+    n_docs across slices equals the corpus-wide distinct-document
+    count per line, so ``dedup.boilerplate_from_store`` answers the
     boilerplate verdict (and any document set is cleaned by one
     anti-join on the line fingerprint) WITHOUT rescanning history —
     the same mergeability contract as the sketch store.
@@ -703,31 +640,19 @@ def boilerplate_ingest_stream(
         line_frequency_store,
     )
 
-    def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def ingest(batch_df: DataFrame, batch_id: int) -> None:
         # a replayed batch already folded into the compacted
-        # partition must NOT republish (its counts live there);
-        # above the watermark the dynamic-overwrite idempotence
-        # contract applies as before
+        # partition must NOT republish (its counts live there)
         if batch_id <= compaction_watermark(store_dir):
             return
         line_frequency_store(
             batch_df,
             store_dir,
-            slice_id=f"batch{batch_id}",
+            slice_id=store.SLICES.batch(batch_id),
             line_window=line_window,
         )
 
-    return (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", True)
-        .json(landing_dir)
-        .writeStream.foreachBatch(ingest_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _available_now(spark, landing_dir, checkpoint_dir, schema, ingest)
 
 
 def token_stats_ingest_stream(
@@ -742,34 +667,22 @@ def token_stats_ingest_stream(
     monitor operational: each micro-batch publishes only its own
     (source, token) counts (plus ``__ref__`` rows for its
     trusted-slice documents) as one slice partition
-    (operators/dedup.token_stats_store — dynamic overwrite,
-    replay-idempotent; additive, so
+    (operators/dedup.token_stats_store); additive, so
     ``dedup.drift_from_token_store`` answers per-source KL drift
     between ingests from store-sized arithmetic without rereading
     any text, and ``dedup.compact_counting_slices(keys=['source',
-    't'], count='c')`` folds old slices under the standard
-    crash-safe watermark contract)."""
+    't'], count='c')`` folds old slices."""
     from synthea_etl_spark.operators.dedup import (
         compaction_watermark,
         token_stats_store,
     )
 
-    def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def ingest(batch_df: DataFrame, batch_id: int) -> None:
         if batch_id <= compaction_watermark(store_dir):
             return
-        token_stats_store(batch_df, store_dir, slice_id=f"batch{batch_id}")
+        token_stats_store(batch_df, store_dir, slice_id=store.SLICES.batch(batch_id))
 
-    return (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", True)
-        .json(landing_dir)
-        .writeStream.foreachBatch(ingest_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _available_now(spark, landing_dir, checkpoint_dir, schema, ingest)
 
 
 def length_hist_ingest_stream(
@@ -782,10 +695,9 @@ def length_hist_ingest_stream(
     """Streaming maintenance of the LENGTH-QUANTILE HISTOGRAM store —
     the tenth stream-maintained artifact family: each micro-batch
     publishes its own (source, log-bin, count) histogram partial as
-    one slice partition (operators/dedup.length_hist_store — dynamic
-    overwrite, replay-idempotent). Bins are pure-integer log-scale
-    (~12.5% width), counts are ADDITIVE, so
-    ``dedup.quantiles_from_hist_store`` answers any per-source
+    one slice partition (operators/dedup.length_hist_store). Bins
+    are pure-integer log-scale (~12.5% width), counts are ADDITIVE,
+    so ``dedup.quantiles_from_hist_store`` answers any per-source
     quantile with a proven one-bin error bound from store-sized
     arithmetic, ``dedup.compact_counting_slices(keys=['source','b'],
     count='c')`` folds old slices, and right-to-erasure rides the
@@ -796,22 +708,12 @@ def length_hist_ingest_stream(
         length_hist_store,
     )
 
-    def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def ingest(batch_df: DataFrame, batch_id: int) -> None:
         if batch_id <= compaction_watermark(store_dir):
             return
-        length_hist_store(batch_df, store_dir, slice_id=f"batch{batch_id}")
+        length_hist_store(batch_df, store_dir, slice_id=store.SLICES.batch(batch_id))
 
-    return (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", True)
-        .json(landing_dir)
-        .writeStream.foreachBatch(ingest_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _available_now(spark, landing_dir, checkpoint_dir, schema, ingest)
 
 
 def bloom_ingest_stream(
@@ -824,36 +726,26 @@ def bloom_ingest_stream(
     """Streaming maintenance of the COUNTING-BLOOM MEMBERSHIP store —
     the eleventh stream-maintained artifact family: each micro-batch
     publishes its own sparse (bucket, count) partial as one slice
-    partition (operators/dedup.bloom_store — dynamic overwrite,
-    replay-idempotent). Bucket counts are ADDITIVE under a fixed
-    modulus, so ``dedup.bloom_probe_from_store`` answers "seen this
-    fingerprint before?" with zero false negatives from store-sized
-    bucket lookups, ``dedup.compact_counting_slices(keys=['b'],
-    count='c')`` folds old slices, and right-to-erasure rides the
-    negative-slice path verbatim (all-'sum' store; the purged store
-    is bit-identical to a rebuild from survivors). Same
-    checkpoint-loss caveat as every batch_id-keyed skip."""
+    partition (operators/dedup.bloom_store). Bucket counts are
+    ADDITIVE under a fixed modulus, so
+    ``dedup.bloom_probe_from_store`` answers "seen this fingerprint
+    before?" with zero false negatives from store-sized bucket
+    lookups, ``dedup.compact_counting_slices(keys=['b'], count='c')``
+    folds old slices, and right-to-erasure rides the negative-slice
+    path verbatim (all-'sum' store; the purged store is
+    bit-identical to a rebuild from survivors). Same checkpoint-loss
+    caveat as every batch_id-keyed skip."""
     from synthea_etl_spark.operators.dedup import (
         bloom_store,
         compaction_watermark,
     )
 
-    def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def ingest(batch_df: DataFrame, batch_id: int) -> None:
         if batch_id <= compaction_watermark(store_dir):
             return
-        bloom_store(batch_df, store_dir, slice_id=f"batch{batch_id}")
+        bloom_store(batch_df, store_dir, slice_id=store.SLICES.batch(batch_id))
 
-    return (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", True)
-        .json(landing_dir)
-        .writeStream.foreachBatch(ingest_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _available_now(spark, landing_dir, checkpoint_dir, schema, ingest)
 
 
 def prompt_key_ingest_stream(
@@ -868,15 +760,14 @@ def prompt_key_ingest_stream(
     ninth stream-maintained artifact family, making the q233 SFT
     prompt dedup operational: each micro-batch publishes only its
     own (pkey, n, min_doc) partials as one slice partition
-    (operators/dedup.prompt_key_store — dynamic overwrite,
-    replay-idempotent). Both statistics are MERGEABLE (sum / min),
-    so ``dedup.prompt_clusters_from_store`` answers cluster sizes
-    and representatives from store-sized arithmetic without
-    rereading any text, and ``dedup.compact_agg_slices(keys=
-    ['pkey'], aggs=PROMPT_KEY_AGGS)`` folds old slices under the
-    standard crash-safe watermark contract. Same checkpoint-loss
-    caveat as every batch_id-keyed skip: the store and its
-    checkpoint are one integrity domain.
+    (operators/dedup.prompt_key_store). Both statistics are
+    MERGEABLE (sum / min), so ``dedup.prompt_clusters_from_store``
+    answers cluster sizes and representatives from store-sized
+    arithmetic without rereading any text, and
+    ``dedup.compact_agg_slices(keys=['pkey'], aggs=PROMPT_KEY_AGGS)``
+    folds old slices. Same checkpoint-loss caveat as every
+    batch_id-keyed skip: the store and its checkpoint are one
+    integrity domain.
 
     ``pairs_store_dir`` (optional): also maintain the row-grain
     (pkey, doc_id) ERASURE COMPANION (dedup.prompt_key_pairs_store)
@@ -890,9 +781,7 @@ def prompt_key_ingest_stream(
         prompt_key_store,
     )
 
-    def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def ingest(batch_df: DataFrame, batch_id: int) -> None:
         # PER-STORE replay guards: a single guard on the agg store's
         # watermark would skip a replayed batch whose agg slice
         # landed but whose companion write crashed — if the agg
@@ -906,21 +795,13 @@ def prompt_key_ingest_stream(
         # rewritten already-folded slice is invisible to
         # watermark-filtered readers anyway.
         if batch_id > compaction_watermark(store_dir):
-            prompt_key_store(batch_df, store_dir, slice_id=f"batch{batch_id}")
+            prompt_key_store(batch_df, store_dir, slice_id=store.SLICES.batch(batch_id))
         if pairs_store_dir is not None and batch_id > compaction_watermark(
             pairs_store_dir
         ):
             prompt_key_pairs_store(batch_df, pairs_store_dir, batch_id)
 
-    return (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", True)
-        .json(landing_dir)
-        .writeStream.foreachBatch(ingest_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _available_now(spark, landing_dir, checkpoint_dir, schema, ingest)
 
 
 def cms_sandwich_ingest_stream(
@@ -935,14 +816,13 @@ def cms_sandwich_ingest_stream(
     twelfth stream-maintained artifact family: each micro-batch is
     term-counted ONCE (dedup.batch_term_counts), then publishes its
     Count-Min cell slice (upper bounds) and its k-bounded candidate
-    slice (lower bounds) under the standard 'batch<k>' idempotent
-    dynamic-overwrite contract. Both stores are additive counting
-    stores, so compaction (compact_counting_slices) and right-to-
-    erasure (negative deletion_slice) ride the certified machinery
-    unchanged. PER-STORE replay guards, per the prompt-key lesson: a
-    single guard on one store's watermark would let a replayed batch
-    whose other-store write crashed go permanently missing once the
-    guarded store compacts past it."""
+    slice (lower bounds) as slice partitions. Both stores are
+    additive counting stores, so compaction (compact_counting_slices)
+    and right-to-erasure (negative deletion_slice) ride the certified
+    machinery unchanged. PER-STORE replay guards, per the prompt-key
+    lesson: a single guard on one store's watermark would let a
+    replayed batch whose other-store write crashed go permanently
+    missing once the guarded store compacts past it."""
     from synthea_etl_spark.operators.dedup import (
         batch_term_counts,
         cms_slice_from_counts,
@@ -951,29 +831,16 @@ def cms_sandwich_ingest_stream(
         publish_counting_slice,
     )
 
-    def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def ingest(batch_df: DataFrame, batch_id: int) -> None:
         cms_wm = compaction_watermark(cms_store_dir)
         cand_wm = compaction_watermark(cand_store_dir)
         if batch_id <= cms_wm and batch_id <= cand_wm:
             return
         tc = batch_df.transform(batch_term_counts).localCheckpoint()
+        slice_id = store.SLICES.batch(batch_id)
         if batch_id > cms_wm:
-            publish_counting_slice(
-                cms_slice_from_counts(tc), cms_store_dir, f"batch{batch_id}"
-            )
+            publish_counting_slice(cms_slice_from_counts(tc), cms_store_dir, slice_id)
         if batch_id > cand_wm:
-            publish_counting_slice(
-                hh_candidate_slice(tc), cand_store_dir, f"batch{batch_id}"
-            )
+            publish_counting_slice(hh_candidate_slice(tc), cand_store_dir, slice_id)
 
-    return (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", True)
-        .json(landing_dir)
-        .writeStream.foreachBatch(ingest_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _available_now(spark, landing_dir, checkpoint_dir, schema, ingest)

@@ -112,6 +112,47 @@ def test_batch_pipeline_end_to_end(spark, tmp_path):
     assert by_gender == {"F": 1, "M": 1}
 
 
+
+def test_batch_pipeline_second_load_over_existing_mart(spark, tmp_path):
+    """A second load date into the same mart: dim versions expire and
+    insert, and the fact — whose dim_location input scans the previous
+    dim files — is written before that dim is swapped (writing it after
+    failed with FAILED_READ_FILE)."""
+    reg = _registry(tmp_path)
+    landing = _landing(tmp_path, "2024-01-01")
+    _landing(tmp_path, "2024-02-01")
+    # p2 marries and moves; p3 is new; p1 is unchanged
+    (landing / "2024-02-01" / "patients" / "p.csv").write_text(
+        "id,birthdate,first,last,marital,race,ethnicity,gender,address,city,state,zip\n"
+        'p1,1980-01-01,Ann,Smith,M,white,nonhispanic,F,"1 Elm St, Apt 2",Boston,MA,02118\n'
+        "p2,1990-05-05,Bob,Jones,M,black,hispanic,M,9 Pine Rd,Salem,MA,01970\n"
+        "p3,2000-03-03,Cy,Lee,S,asian,nonhispanic,M,5 Bay St,Lynn,MA,01901\n"
+    )
+    martd = tmp_path / "mart"
+    martd.mkdir()
+    tables = ["patients", "payers", "encounters", "conditions"]
+    for date in ("2024-01-01", "2024-02-01"):
+        mart = run_batch_pipeline(
+            spark, str(landing), str(reg), str(tmp_path / "staging"),
+            str(martd), date, tables,
+        )
+
+    versions = sorted(
+        (r.patient_id, r.marital, r.is_active)
+        for r in mart["dim_patient"].collect()
+    )
+    assert versions == [
+        ("p1", "M", True),
+        ("p2", "M", True),
+        ("p2", "S", False),
+        ("p3", "S", True),
+    ]
+    locations = {(r.address, r.is_active) for r in mart["dim_location"].collect()}
+    assert ("9 Pine Rd", True) in locations
+    fact = {r.patient_id: r for r in mart["fact_patient"].collect()}
+    assert fact["p1"].total_encounters == 2
+    assert fact["p2"].total_encounters == 1
+
 def test_streaming_scd2_refresh_two_snapshots(spark, tmp_path):
     snaps, dim, ckpt = (str(tmp_path / d) for d in ("snaps", "dim", "ckpt"))
     schema = "k string, name string"

@@ -63,6 +63,7 @@ from synthea_etl_spark.operators.dedup import (  # noqa: E402
     minhash_signature,
     prompt_clusters_from_store,
     prompt_key_store,
+    publish_counting_slice,
     purge_batch_store,
     purge_prompt_key_cluster,
     quantiles_from_hist_store,
@@ -149,13 +150,8 @@ def main() -> None:
         land_and_run(bi, batches[bi])
 
     # --- counting-store erasure: negative slice, high slot ---------
-    (
-        deletion_slice(token_stats_slice(erase), ["c"])
-        .withColumn("slice_id", F.lit("batch9"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("slice_id")
-        .parquet(store)
+    publish_counting_slice(
+        deletion_slice(token_stats_slice(erase), ["c"]), store, "batch9"
     )
     token_stats_store(survivors, rebuilt, "batch1")
 
@@ -313,13 +309,8 @@ def main() -> None:
     compact_counting_slices(spark, lh_store, 1, ["source", "b"], "c")
     for bi in range(2, len(batches)):
         lh_land_and_run(bi, batches[bi])
-    (
-        deletion_slice(length_hist_slice(erase), ["c"])
-        .withColumn("slice_id", F.lit("batch9"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("slice_id")
-        .parquet(lh_store)
+    publish_counting_slice(
+        deletion_slice(length_hist_slice(erase), ["c"]), lh_store, "batch9"
     )
     length_hist_store(survivors, lh_rebuilt, "batch1")
 
@@ -377,7 +368,6 @@ def main() -> None:
         counting_store_totals,
         hh_candidate_store,
         hh_lower_from_store,
-        publish_counting_slice,
     )
 
     cms_dir = os.path.join(work, "cms_store")

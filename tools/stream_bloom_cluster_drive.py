@@ -51,6 +51,7 @@ from synthea_etl_spark.operators.dedup import (  # noqa: E402
     counting_store_totals,
     deletion_slice,
     doc_fingerprint,
+    publish_counting_slice,
 )
 from synthea_etl_spark.pipeline import bloom_ingest_stream  # noqa: E402
 from synthea_etl_spark.session import get_session  # noqa: E402
@@ -145,13 +146,8 @@ def main() -> None:
     survivors = docs_df.join(
         erase.select("doc_id"), "doc_id", "left_anti"
     )
-    (
-        deletion_slice(bloom_slice(erase), ["c"])
-        .withColumn("slice_id", F.lit("batch9"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("slice_id")
-        .parquet(store)
+    publish_counting_slice(
+        deletion_slice(bloom_slice(erase), ["c"]), store, "batch9"
     )
     bloom_store(survivors, rebuilt, "batch1")
 
