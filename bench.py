@@ -319,15 +319,26 @@ def run_one(
     return best
 
 
+def _run_cpus() -> int:
+    """This run's task slots: $SPARK_GRAFT_CPUS, else the affinity CPUs."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def _parse_bench_artifact(path: str) -> dict[str, float]:
-    """Per-query timings from one BENCH_r{N}.json, {} if unusable."""
+    """Per-query timings from one BENCH_r{N}.json, {} if unusable or
+    recorded at another scale factor or core count."""
     try:
         with open(path) as fh:
             data = json.load(fh)
         if not isinstance(data, dict):
             return {}
-        # the driver wraps bench stdout: {"n", "rc", ..., "parsed":
-        # {our JSON line}}; accept the raw shape too
+        # walls from another core count are no floor for this run; the
+        # core count is on the driver's wrapper, so an artifact without
+        # one is not trusted
+        if data.get("cpus") != _run_cpus():
+            return {}
+        # the driver wraps bench stdout: {"n", "rc", "cpus", ...,
+        # "parsed": {our JSON line}}
         if "queries" not in data and isinstance(data.get("parsed"), dict):
             data = data["parsed"]
         # prior bests only mean something at the same scale factor;

@@ -17,6 +17,17 @@ downstream ``groupBy(key)`` requires, Catalyst reuses the partitioning
 and the exploded data itself never shuffles. When the scan is already
 wide (the normal case on a cluster reading many files), this is a
 no-op — no shuffle is added.
+
+The spread count is the session's shuffle parallelism, which a local
+session sets to 2 x its task slots (``session._session_conf``), so the
+spread runs one or two tasks per core. More tasks than that buy no CPU
+spread and cost a fixed amount each wherever the stage runs Python
+(``mapInPandas``/``mapInArrow``): about 170 ms of worker CPU per task
+on a 4-vCPU host, even on a reused worker. The cost is not the
+engine's: ``pyspark.worker_util.setup_spark_files`` calls
+``importlib.invalidate_caches()`` at the start of every task, and under
+CPython 3.11 that re-reads the directory of ``pyspark.zip`` (on the
+worker's path) for each of its cached zip importers.
 """
 
 from __future__ import annotations

@@ -11,12 +11,25 @@ across engines and clusters.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
-# Defaults sized for the local[32] test harness; on a real cluster the
-# caller overrides master/shuffle partitions (rule of thumb: 2-3x total
-# cores, or rely on AQE coalescing from a high initial count).
+
+def _default_driver_memory() -> str:
+    """Half of the host's RAM in whole GiB, capped at 32g (the cap when
+    ``/proc/meminfo`` is unreadable)."""
+    try:
+        with open("/proc/meminfo") as fh:
+            kb = next(int(l.split()[1]) for l in fh if l.startswith("MemTotal"))
+    except (OSError, StopIteration, ValueError):
+        return "32g"
+    return f"{max(1, min(32, kb // (2 * 1024 * 1024)))}g"
+
+
+# Host-independent defaults; ``_session_conf`` adds the two values sized
+# from the host: shuffle partitions = 2 x the local task slots, driver
+# heap = half of RAM capped at 32g.
 _DEFAULTS: dict[str, str] = {
     # Adaptive execution: runtime shuffle-partition coalescing, skew-join
     # splitting, and plan re-optimization from runtime stats. This is the
@@ -43,16 +56,61 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # local-mode niceties; harmless on a cluster.
     "spark.ui.enabled": "false",
-    # Single-JVM local mode puts ALL 32 task slots in the driver heap.
-    # 8g was enough through sf1 but thrashes at sf10 (measured: q110's
-    # sort-merge spilled 13.4 GB and q16/q61 ran 10-15% GC,
-    # bench_artifacts/stage_profile_sf10_r06_8g.json); on this 128 GiB
-    # box 32g gives each of the 32 slots ~0.5 GB of execution memory,
-    # the same per-slot budget a real cluster executor would get.
-    # Cluster deployments size spark.executor.memory instead and this
-    # knob is inert.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
 }
+
+# Shuffle partitions for masters that are not local. On a real cluster
+# the caller passes shuffle_partitions (rule of thumb: 2-3x total cores,
+# or rely on AQE coalescing from a high initial count).
+_CLUSTER_SHUFFLE_PARTITIONS = 32
+
+
+def _local_slots(master: str) -> int | None:
+    """Task slots of a ``local``/``local[N]``/``local[*]`` master (a
+    ``,F`` retry suffix allowed), None for any other master. ``*`` is
+    the CPUs this process may run on, as the JVM counts them."""
+    m = re.fullmatch(r"local(?:\[(\*|\d+)(?:\s*,\s*\d+)?\])?", master)
+    if m is None:
+        return None
+    n = m.group(1)
+    if n is None:
+        return 1
+    return len(os.sched_getaffinity(0)) if n == "*" else int(n)
+
+
+def _session_conf(
+    master: str,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> dict[str, str]:
+    """The conf ``get_session`` applies: engine defaults, then
+    ``spark.sql.shuffle.partitions`` (the explicit argument, else 2 x the
+    local task slots, else the cluster default) and the driver heap
+    (``$SPARK_GRAFT_DRIVER_MEM``, else half of RAM capped at 32g), then
+    ``extra_conf``.
+
+    Two partitions per slot keeps every ``rebalance_by_key`` spread, and
+    the Python stage behind it, at one or two tasks per core; JVM
+    shuffles are coalesced by AQE either way."""
+    conf = dict(_DEFAULTS)
+    if shuffle_partitions is None:
+        slots = _local_slots(master)
+        shuffle_partitions = (
+            _CLUSTER_SHUFFLE_PARTITIONS if slots is None else 2 * slots
+        )
+    conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    # Single-JVM local mode puts ALL task slots in the driver heap: half
+    # of RAM, capped at 32g (~0.5 GB of execution memory for each of 32
+    # slots, the per-slot budget a real cluster executor would get; 8g
+    # thrashed at sf10 on 32 slots, bench_artifacts/
+    # stage_profile_sf10_r06_8g.json). The other half is left to the
+    # Python workers and the page cache. Cluster deployments size
+    # spark.executor.memory instead and this knob is inert.
+    conf["spark.driver.memory"] = (
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory()
+    )
+    if extra_conf:
+        conf.update(extra_conf)
+    return conf
 
 
 def get_session(
@@ -73,14 +131,7 @@ def get_session(
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
     builder = builder.master(master)
-    conf = dict(_DEFAULTS)
-    if shuffle_partitions is not None:
-        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    else:
-        conf.setdefault("spark.sql.shuffle.partitions", "32")
-    if extra_conf:
-        conf.update(extra_conf)
-    for k, v in conf.items():
+    for k, v in _session_conf(master, shuffle_partitions, extra_conf).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 

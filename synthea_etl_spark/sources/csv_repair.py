@@ -34,14 +34,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _read_header(spark: SparkSession, path: str) -> list[str]:
-    """First text line = header (reference: Source_Raw_Dynamic.py:93).
-    One tiny job; does not scan the file."""
+def _read_header(spark: SparkSession, path: str) -> tuple[list[str], str]:
+    """First text line = header (reference: Source_Raw_Dynamic.py:93):
+    (column names, the raw line). One tiny job; does not scan the file."""
     first = spark.read.text(path).limit(1).collect()
     if not first:
         raise ValueError(f"empty CSV at {path}")
-    header = next(csv.reader(io.StringIO(first[0].value), skipinitialspace=True))
-    return [h if h and h.strip() else f"unnamed_{i}" for i, h in enumerate(header)]
+    line = first[0].value
+    header = next(csv.reader(io.StringIO(line), skipinitialspace=True))
+    names = [h if h and h.strip() else f"unnamed_{i}" for i, h in enumerate(header)]
+    return names, line
 
 
 def _drop_one_header(lines: DataFrame, header_line: str) -> DataFrame:
@@ -67,10 +69,9 @@ def repair_csv(spark: SparkSession, path: str, drop_unnamed: bool = True) -> Dat
     Column set = header of the first line; every data row is padded
     (with '') or truncated to that width.
     """
-    header = _read_header(spark, path)
+    header, header_line = _read_header(spark, path)
     schema = ", ".join(f"`{c}` string" for c in header)
     lines = spark.read.text(path)
-    header_line = lines.limit(1).collect()[0].value
     parsed = (
         _drop_one_header(lines, header_line)
         .filter(F.length(F.trim(F.col("value"))) > 0)  # and blank lines
@@ -92,10 +93,9 @@ def repair_csv_python(spark: SparkSession, path: str) -> DataFrame:
     (`Source_Raw_Dynamic.py:60-69`), as mapPartitions (batch-per-task,
     not the reference's row lambdas). Use only when univocity's quote
     handling materially differs."""
-    header = _read_header(spark, path)
+    header, header_line = _read_header(spark, path)
     n = len(header)
     lines = spark.read.text(path)
-    header_line = lines.limit(1).collect()[0].value
 
     def fix_partition(rows):
         for row in rows:

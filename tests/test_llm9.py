@@ -6,6 +6,7 @@ q184/q192) against a pure-Python recount."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -176,16 +177,24 @@ def test_dataset_card_rates(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def test_repetition_covs_match_brute_force(spark):
+@pytest.mark.parametrize("shuffle_partitions", [1, 3, 8, 32])
+def test_repetition_covs_match_brute_force(spark, shuffle_partitions):
+    """The covs do not depend on the shuffle parallelism, which sets the
+    rebalance spread in front of the map-only pass."""
     from synthea_etl_spark.operators.text import gopher_repetition_covs
     from synthea_etl_spark.plans.common import load
 
     sf = "/root/testdata/sf0.001"
     docs = load(spark, sf, "documents").select("doc_id", "text")
-    out = {
-        r.doc_id: (r.chars, r.cov2, r.cov3, r.cov5)
-        for r in gopher_repetition_covs(docs).collect()
-    }
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        out = {
+            r.doc_id: (r.chars, r.cov2, r.cov3, r.cov5)
+            for r in gopher_repetition_covs(docs).collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
     rows = docs.collect()
     import re
 
