@@ -2012,7 +2012,7 @@ def purge_prompt_key_cluster(
     safe.
 
     Post-condition (pinned in tests/test_purge.py and
-    tools/purge_lifecycle_drive.py): the agg store answers
+    ``python tools/stream_drive.py purge``): the agg store answers
     bit-identically to one rebuilt from only the surviving
     documents."""
     import os

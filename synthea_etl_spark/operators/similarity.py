@@ -219,19 +219,6 @@ def knn_ann_lsh(
 # ---------------------------------------------------------------------------
 
 
-def _lit_vec(v: list[float]) -> Column:
-    return F.array(*[F.lit(float(x)) for x in v])
-
-
-def _centroid_sims(vec: Column, centroids: list[list[float]]) -> Column:
-    """array<double> of cosine(vec, centroid_i) — JVM-side, one pass.
-    For per-row expressions only (query-side probing, where rows are
-    few); corpus-side assignment uses the Arrow/numpy UDF below —
-    higher-order-function lambdas run interpreted, and k*dim
-    interpreted ops per corpus row dominate everything else."""
-    return F.array(*[F.round(cosine(vec, _lit_vec(c)), 9) for c in centroids])
-
-
 def make_assign_udf(centroids: list[list[float]]):
     """Arrow-batched nearest-centroid assignment: one numpy matmul per
     batch ((batch x dim) @ (dim x k)) instead of k*dim interpreted
@@ -290,14 +277,6 @@ def make_cosine_udf():
         return pd.Series(num / den)
 
     return cos
-
-
-def assign_cluster(vec: Column, centroids: list[list[float]]) -> Column:
-    """Nearest-centroid (max cosine) index, 0-based, deterministic
-    (array_position takes the FIRST max on ties). Expression form —
-    use make_assign_udf for corpus-scale assignment."""
-    sims = _centroid_sims(vec, centroids)
-    return (F.array_position(sims, F.array_max(sims)) - 1).cast("int")
 
 
 def ivf_train_centroids(

@@ -160,17 +160,6 @@ def q206_sampled_embedding_recall(
     )
 
 
-def _sampled(inner: str, table: str, alias: str, id_expr: str) -> str:
-    """Wrap an oracle that reads ``table`` so it reads the sampled
-    CTE instead — the SQL twin of plans/llm12._md5_sample."""
-    cond = _sql_md5_sample(id_expr, _RECALL_SAMPLE_FRACTION)
-    body = re.sub(rf"\bFROM {table}\b", f"FROM {alias}", inner)
-    assert body != inner
-    return (
-        f"WITH {alias} AS (SELECT * FROM {table} WHERE {cond})\n{body}"
-    )
-
-
 def _q205_oracle() -> str:
     from synthea_etl_spark.plans.llm12 import _q202_oracle
 

@@ -134,8 +134,3 @@ def get_session(
     for k, v in _session_conf(master, shuffle_partitions, extra_conf).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str):
-    """Read one TESTDATA parquet table (see TESTDATA.md)."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")

@@ -89,24 +89,3 @@ def hourly_rollup(events: DataFrame) -> DataFrame:
             F.sum(F.col("value").cast(DEC)).cast("double").alias("sum_value"),
         )
     )
-
-
-def streaming_hourly_rollup(
-    spark: SparkSession,
-    src_dir: str,
-    schema: StructType,
-    watermark: str = "2 hours",
-):
-    """Streaming flavor with late-data handling: watermarked event-time
-    tumbling window. Returns the streaming DataFrame (caller picks sink
-    + trigger)."""
-    stream = spark.readStream.schema(schema).parquet(src_dir)
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum(F.col("value").cast(DEC)).cast("double").alias("sum_value"),
-        )
-        .select(F.col("w.start").alias("hour"), "event_type", "cnt", "sum_value")
-    )
