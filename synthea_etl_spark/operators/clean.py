@@ -6,9 +6,12 @@ function, all expressed with built-in (JVM/codegen) expressions — no
 Python UDFs anywhere on the data path. Divergences from the reference
 are deliberate and documented per function:
 
-- the multi-value probe runs as ONE aggregate job over all string
-  columns instead of a count() action per column
-  (`Raw_To_Staging.py:118` — N full scans at 100 TB is a non-starter);
+- the multi-value probe runs as ONE aggregate job instead of a
+  count() action per column (`Raw_To_Staging.py:118` — N full scans at
+  100 TB is a non-starter). Against a declared schema it runs only for
+  the few columns whose answer the output can depend on (see
+  `clean_pipeline`); every other declared column takes its split as a
+  per-row expression, so the registry path usually runs no probe job;
 - everything else preserves reference semantics exactly, including the
   null->'None' sentinel + cast interplay (sentinel survives only in
   string-typed columns; 'None' cast to int/double/date yields null).
@@ -57,14 +60,14 @@ def trim_strings(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     )
 
 
+def _phone_like(c: str) -> bool:
+    return "phone" in c.lower() or "mobile" in c.lower()
+
+
 def fix_phone_columns(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     """X2: strip '-' from phone-like columns
     (reference: Raw_To_Staging.py:114-115)."""
-    targets = (
-        columns
-        if columns is not None
-        else [c for c in df.columns if "phone" in c.lower() or "mobile" in c.lower()]
-    )
+    targets = columns if columns is not None else [c for c in df.columns if _phone_like(c)]
     out = df
     for c in targets:
         out = out.withColumn(c, F.regexp_replace(F.col(c), "-", ""))
@@ -92,6 +95,12 @@ def find_multivalue_columns(df: DataFrame, columns: list[str] | None = None) -> 
     return [c for c in cands if row[c] == 1]
 
 
+def _part(c: str, i: int):
+    """Trimmed ``i``-th ' or '-separated part of ``c``; F.get (not
+    getItem): a missing part is NULL under ANSI mode."""
+    return F.trim(F.get(F.split(F.trim(F.col(c)), MULTIVALUE_PATTERN), i))
+
+
 def split_multivalue(
     df: DataFrame,
     columns: list[str] | None = None,
@@ -112,10 +121,8 @@ def split_multivalue(
     declared = schema_columns or set()
     out = df
     for c in targets:
-        parts = F.split(F.trim(F.col(c)), MULTIVALUE_PATTERN)
-        # F.get (not getItem): missing part -> NULL under ANSI mode
-        out = out.withColumn(f"{c}_part1", F.trim(F.get(parts, 0))).withColumn(
-            f"{c}_part2", F.trim(F.get(parts, 1))
+        out = out.withColumn(f"{c}_part1", _part(c, 0)).withColumn(
+            f"{c}_part2", _part(c, 1)
         )
         if c in declared:
             out = out.withColumn(c, F.col(f"{c}_part1"))
@@ -198,24 +205,60 @@ def dedup_by_key(df: DataFrame, keys: list[str], order_by: list[str]) -> DataFra
     )
 
 
+def _split_declared(df: DataFrame, schema: StructType) -> DataFrame:
+    """``split_multivalue(df, schema_columns=<schema's names>)`` as far
+    as ``cast_to_schema(_, schema)`` can tell, on trimmed input, with a
+    probe job only where the declared output depends on it.
+
+    The probe decides two things per column: whether ``c_part1`` /
+    ``c_part2`` exist, and whether a declared ``c`` is replaced by its
+    part1. The cast keeps only declared fields, so the first matters
+    only when a part is declared. The second can be decided per row:
+    on a row without the marker, part1 of a trimmed value is the value
+    itself, so ``when(c.rlike(P), part1).otherwise(c)`` is exact. That
+    fails only when the value is not a trim fixed point, which after
+    ``trim_strings`` means a phone/mobile column rewritten by
+    ``fix_phone_columns`` (``'- 555'`` -> ``' 555'``). So the probe
+    covers string columns with a declared part and declared phone-like
+    columns; no job runs when there are none."""
+    declared = {f.name for f in schema.fields}
+    strings = [f.name for f in df.schema.fields if isinstance(f.dataType, StringType)]
+    probed = [
+        c
+        for c in strings
+        if f"{c}_part1" in declared
+        or f"{c}_part2" in declared
+        or (c in declared and _phone_like(c))
+    ]
+    out = split_multivalue(df, find_multivalue_columns(df, probed), declared)
+    rowwise = {c for c in strings if c in declared and c not in probed}
+
+    def part1(c: str):
+        return F.when(F.col(c).rlike(MULTIVALUE_PATTERN), _part(c, 0)).otherwise(F.col(c)).alias(c)
+
+    return out.select(*[part1(c) if c in rowwise else F.col(c) for c in out.columns])
+
+
 def clean_pipeline(
     df: DataFrame,
     schema: StructType | None = None,
     sentinel: str = "None",
-    multivalue_columns: list[str] | None = None,
 ) -> DataFrame:
     """The reference's full Raw->Staging transform chain
     (`Raw_To_Staging.py:100-140`): normalize names -> trim -> phone fix
-    -> multi-value split -> null sentinel -> schema cast -> full dedup."""
+    -> multi-value split -> null sentinel -> schema cast -> full dedup.
+
+    With a ``schema`` the split is ``_split_declared``: the same rows as
+    probing every string column, but the probe job runs only for string
+    columns with a declared ``_part1``/``_part2`` and for declared
+    phone/mobile columns, so a registry schema with neither builds the
+    frame without a job. Without a schema every string column is
+    probed, one aggregate job."""
     out = normalize_column_names(df)
     out = drop_unnamed_columns(out)
     out = trim_strings(out)
     out = fix_phone_columns(out)
-    out = split_multivalue(
-        out,
-        multivalue_columns,
-        schema_columns={f.name for f in schema.fields} if schema is not None else None,
-    )
+    out = _split_declared(out, schema) if schema is not None else split_multivalue(out)
     out = empty_to_null(out)
     out = null_sentinel(out, sentinel)
     if schema is not None:

@@ -71,7 +71,13 @@ def stage_table(
         )
     else:
         writer.parquet(path)
-    return spark.read.parquet(path).filter(F.col("load_date") == load_date)
+    # the written columns are known: passing them skips the footer-merge
+    # job of schema inference; discovery still types load_date as DATE
+    return (
+        spark.read.schema(cleaned.drop("load_date").schema)
+        .parquet(path)
+        .filter(F.col("load_date") == load_date)
+    )
 
 
 def run_batch_pipeline(
@@ -107,7 +113,8 @@ def run_batch_pipeline(
     for name in sorted(mart, key=lambda n: n != "fact_patient"):
         write_swap(mart[name], os.path.join(mart_dir, name))
     return {
-        name: spark.read.parquet(os.path.join(mart_dir, name)) for name in mart
+        name: spark.read.schema(mart[name].schema).parquet(os.path.join(mart_dir, name))
+        for name in mart
     }
 
 

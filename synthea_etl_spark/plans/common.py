@@ -23,6 +23,8 @@ timestamp_ntz<->TIMESTAMP).
 
 from __future__ import annotations
 
+import glob
+import os
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
@@ -435,12 +437,23 @@ DRIVER_CERTIFIED = frozenset({
     "q271_response_dedup",
 })
 
-# Round counter, bumped alongside DRIVER_CERTIFIED each round: the
-# gate slots left over after the never-certified block are filled by
-# rotating the certified list with a per-round stride, so every
-# certified query keeps getting re-verified by the driver on a
-# rolling schedule instead of the same module-order prefix each round.
-GATE_ROUND = 15
+# Round counter: the gate slots left over after the never-certified
+# block are filled by rotating the certified list with a per-round
+# stride, so every certified query keeps getting re-verified by the
+# driver on a rolling schedule instead of the same module-order prefix
+# each round. Each finished round leaves one CORRECTNESS_r<NN>.json at
+# the repository root, so the round in progress is their count + 1.
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+GATE_ROUND_FALLBACK = 17
+
+
+def gate_round(root: str = REPO_ROOT) -> int:
+    """The current gate round: one more than the number of
+    ``CORRECTNESS_r*.json`` files in ``root``, or
+    ``GATE_ROUND_FALLBACK`` when there are none (an installed package
+    without the repository's round records)."""
+    n = len(glob.glob(os.path.join(root, "CORRECTNESS_r*.json")))
+    return n + 1 if n else GATE_ROUND_FALLBACK
 
 
 def all_queries() -> dict[str, QuerySpec]:
@@ -558,7 +571,7 @@ def all_queries() -> dict[str, QuerySpec]:
     # stride 37 is coprime with any realistic inventory size, so
     # successive rounds start the certified block at well-spread
     # offsets and the driver's 50-row window sweeps the whole set
-    k = (GATE_ROUND * 37) % len(certified) if certified else 0
+    k = (gate_round() * 37) % len(certified) if certified else 0
     for name in certified[k:] + certified[:k]:
         out[name] = merged[name]
     return out

@@ -47,20 +47,17 @@ def _read_header(spark: SparkSession, path: str) -> tuple[list[str], str]:
 
 
 def _drop_one_header(lines: DataFrame, header_line: str) -> DataFrame:
-    """Remove exactly ONE occurrence of the header line.
+    """Remove exactly ONE occurrence of the header line: the physical
+    first line, which ``_read_header`` read.
 
     A plain ``value != header`` filter silently deletes every DATA row
     that textually equals the header, not just the physical first line.
-    Rows equal to the header are byte-identical, so removing "the
-    first" and removing "any one" are the same multiset — filter them
-    all out, then union back all-but-one via offset(1). The offset
-    branch only ever sees the handful of header-equal rows (the filter
-    pushes to the scan), so its single-task coalesce is free at any
-    scale."""
-    matches = lines.filter(F.col("value") == F.lit(header_line))
-    return lines.filter(F.col("value") != F.lit(header_line)).unionByName(
-        matches.offset(1)
-    )
+    ``_read_header``'s ``limit(1)`` returns the first row of partition
+    0, the one row whose ``monotonically_increasing_id()`` is 0, so
+    dropping that row when it equals the header removes the header and
+    nothing else. A filter with no shuffle: the read stays one stage."""
+    first = (F.monotonically_increasing_id() == 0) & (F.col("value") == F.lit(header_line))
+    return lines.filter(~first)
 
 
 def repair_csv(spark: SparkSession, path: str, drop_unnamed: bool = True) -> DataFrame:

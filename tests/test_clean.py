@@ -125,3 +125,77 @@ def test_clean_pipeline_end_to_end(spark):
     assert r.id == 1 and r.name == "Bob"
     assert r.pets_part1 == "cat" and r.pets_part2 == "dog"
     assert "unnamed_3" not in out.columns
+
+
+def _probe_everything(df, schema):
+    """The chain with the multi-value probe over every string column:
+    ``split_multivalue`` with the declared names, then the rest."""
+    out = clean.fix_phone_columns(
+        clean.trim_strings(clean.drop_unnamed_columns(clean.normalize_column_names(df)))
+    )
+    out = clean.split_multivalue(out, schema_columns={f.name for f in schema.fields})
+    out = clean.cast_to_schema(clean.null_sentinel(clean.empty_to_null(out)), schema)
+    return clean.dedup_full(out)
+
+
+def test_clean_pipeline_equals_probe_everything(spark):
+    """The registry path probes only columns with a declared part and
+    declared phone columns; every other declared column splits per row.
+    Row for row that is the probe-everything result."""
+    df = spark.createDataFrame(
+        [
+            # mixed: matching and plain rows in the declared column
+            ("cat or dog", "red", "a or b", "Pen", "x", "- 555", " 1 "),
+            ("fish", "blue", "c", "Ink", "y", "555 or 666", "2"),
+            (" bird  óR  bee ", None, "d", "Cap", "z", "5-5", "3"),
+            (None, "green", "", "Hat", "w", None, "4"),
+        ],
+        ["Pets", "colour", "tags", "toy", "note", "phone", "id"],
+    )
+    schema = schema_from_fields(
+        [
+            {"name": "id", "type": "int"},
+            # declared, some rows match
+            {"name": "pets", "type": "string"},
+            # declared, no row matches
+            {"name": "colour", "type": "string"},
+            # declared parts of a column with matching rows ...
+            {"name": "tags_part1", "type": "string"},
+            {"name": "tags_part2", "type": "string"},
+            # ... and of one with none (no _part columns exist)
+            {"name": "toy_part1", "type": "string"},
+            {"name": "toy_part2", "type": "string"},
+            # '- 555' -> ' 555' by the phone fix, which no per-row form trims
+            {"name": "phone", "type": "string"},
+        ]
+    )
+    # "note" matches nowhere but is undeclared; "tags" is undeclared and
+    # matches: both are dropped by the cast either way
+    got = clean.clean_pipeline(df, schema=schema)
+    want = _probe_everything(df, schema)
+    assert got.schema == want.schema
+    rows = got.collect()
+    assert sorted(rows, key=repr) == sorted(want.collect(), key=repr)
+    by_id = {r.id: r for r in rows}
+    assert by_id[1].pets == "cat" and by_id[2].pets == "fish"
+    assert by_id[3].pets == "bird" and by_id[3].colour == "None"
+    assert by_id[1].tags_part1 == "a" and by_id[1].tags_part2 == "b"
+    assert by_id[1].toy_part1 is None and by_id[1].toy_part2 is None
+    assert by_id[1].phone == "555" and by_id[2].phone == "555"
+
+
+def test_clean_pipeline_undeclared_match_and_plain_phone(spark):
+    """An undeclared matching column and a declared phone column with no
+    matching row: nothing to split in the declared output, and the phone
+    keeps the fix's untrimmed value."""
+    df = spark.createDataFrame(
+        [("a or b", "- 555", "k1"), ("c", "555-1", "k2")], ["extra", "mobile", "key"]
+    )
+    schema = schema_from_fields(
+        [{"name": "key", "type": "string"}, {"name": "mobile", "type": "string"}]
+    )
+    got = clean.clean_pipeline(df, schema=schema)
+    want = _probe_everything(df, schema)
+    assert got.schema == want.schema
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    assert sorted(map(tuple, got.collect())) == [("k1", " 555"), ("k2", "5551")]

@@ -72,3 +72,25 @@ def test_empty_file_raises(spark, tmp_path):
     p.write_text("")
     with pytest.raises(Exception):
         repair_csv(spark, str(p))
+
+
+def test_header_dropped_once_across_partitions(spark, tmp_path):
+    """A CSV split over several read partitions, with header-equal data
+    rows in the later ones: only the physical first line goes."""
+    lines = ["id,name"] + [f"{i},name{i:03d}" for i in range(60)]
+    lines[25:25] = ["id,name"]
+    lines[50:50] = ["id,name"]
+    p = tmp_path / "split.csv"
+    p.write_text("\n".join(lines) + "\n")
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "128")
+        assert spark.read.text(str(p)).rdd.getNumPartitions() >= 3
+        for reader in (repair_csv, repair_csv_python):
+            out = reader(spark, str(p))
+            rows = sorted(map(tuple, out.collect()))
+            assert rows.count(("id", "name")) == 2
+            assert len(rows) == 62
+    finally:
+        spark.conf.set(key, prev)

@@ -153,6 +153,86 @@ def test_batch_pipeline_second_load_over_existing_mart(spark, tmp_path):
     assert fact["p1"].total_encounters == 2
     assert fact["p2"].total_encounters == 1
 
+
+MART_TABLES = ("patients", "encounters", "conditions", "payer_transitions")
+
+
+def _jobs_in_group(spark, group, build):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_registry_clean_submits_no_job(spark):
+    """Building the clean chain of the four mart tables against the
+    bundled registry runs no probe job: none of them declares a
+    ``_part`` column or a phone column. Without a schema every string
+    column is probed, which the same instrument sees."""
+    from synthea_etl_spark.operators.clean import clean_pipeline
+    from synthea_etl_spark.sources.schema_registry import (
+        bundled_registry_dir,
+        load_schema,
+    )
+
+    frames = {}
+    for table in MART_TABLES:
+        schema = load_schema(bundled_registry_dir(), table)
+        names = [f.name.upper() for f in schema.fields] + ["Unnamed_9"]
+        row = tuple(f" v{i} or w " for i in range(len(names)))
+        frames[table] = (spark.createDataFrame([row], names), schema)
+
+    def build():
+        for df, schema in frames.values():
+            clean_pipeline(df, schema=schema)
+
+    assert _jobs_in_group(spark, "registry-clean", build) == []
+    probe = _jobs_in_group(
+        spark, "schemaless-clean", lambda: clean_pipeline(frames["patients"][0])
+    )
+    assert probe
+
+
+def test_staged_and_mart_frames_match_inferred_schema(spark, tmp_path):
+    """The frames ``stage_table`` and ``run_batch_pipeline`` return are
+    read with the schema the engine wrote; it must equal what a fresh
+    ``spark.read.parquet`` infers, ``load_date`` included as DATE."""
+    from pyspark.sql.types import DateType
+
+    from synthea_etl_spark.pipeline import stage_table
+    from synthea_etl_spark.sources.schema_registry import bundled_registry_dir
+
+    landing = _landing(tmp_path, "2024-01-01")
+    typed = stage_table(
+        spark,
+        str(landing / "2024-01-01" / "patients"),
+        "patients",
+        bundled_registry_dir(),
+        str(tmp_path / "typed"),
+        "2024-01-01",
+    )
+    inferred = spark.read.parquet(str(tmp_path / "typed" / "patients"))
+    assert typed.schema == inferred.schema
+    assert inferred.schema["load_date"].dataType == DateType()
+    assert inferred.schema["zip"].dataType.simpleString() == "int"
+    assert sorted(map(tuple, typed.collect())) == sorted(map(tuple, inferred.collect()))
+
+    martd = tmp_path / "mart"
+    martd.mkdir()
+    staging = tmp_path / "staging"
+    mart = run_batch_pipeline(
+        spark, str(landing), str(_registry(tmp_path)), str(staging), str(martd),
+        "2024-01-01", ["patients", "payers", "encounters", "conditions"],
+    )
+    assert sorted(mart) == ["dim_location", "dim_patient", "dim_payer", "fact_patient"]
+    for name, df in mart.items():
+        assert df.schema == spark.read.parquet(str(martd / name)).schema, name
+
+
 def test_streaming_scd2_refresh_two_snapshots(spark, tmp_path):
     snaps, dim, ckpt = (str(tmp_path / d) for d in ("snaps", "dim", "ckpt"))
     schema = "k string, name string"

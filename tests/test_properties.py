@@ -121,6 +121,37 @@ def test_exact_dedup_idempotent_and_minimal(spark, vals):
     assert len(r1) == len(set(r1)) == len(set(vals))
 
 
+cell_st = st.one_of(
+    st.none(),
+    st.lists(st.sampled_from(["x", "5", " ", "-", "or", "óR", " or ", "  OR "]), max_size=5).map(
+        "".join
+    ),
+)
+
+
+@given(
+    rows=st.lists(st.tuples(cell_st, cell_st, cell_st), min_size=1, max_size=6),
+    declared=st.sets(
+        st.sampled_from(["a", "a_part1", "a_part2", "b", "b_part2", "phone", "phone_part1"])
+    ),
+)
+@settings(**SETTINGS)
+def test_registry_clean_equals_probe_everything(spark, rows, declared):
+    """For ANY cells and ANY declared subset: the registry clean chain,
+    which probes only declared parts and declared phone columns, returns
+    the rows of the chain that probes every string column."""
+    from synthea_etl_spark.operators.clean import clean_pipeline
+    from synthea_etl_spark.sources.schema_registry import schema_from_fields
+    from tests.test_clean import _probe_everything
+
+    df = spark.createDataFrame(rows, "a string, b string, phone string")
+    schema = schema_from_fields([{"name": c, "type": "string"} for c in sorted(declared | {"b"})])
+    got = clean_pipeline(df, schema=schema)
+    want = _probe_everything(df, schema)
+    assert got.schema == want.schema
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
 @given(
     left=st.lists(st.integers(0, 50), min_size=1, max_size=8),
     right=st.lists(st.integers(0, 50), min_size=0, max_size=8),
