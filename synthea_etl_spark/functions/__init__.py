@@ -22,7 +22,6 @@ from synthea_etl_spark.operators.text import (  # noqa: F401
     shingles,
     token_count,
     tokens,
-    winnow_fingerprints,
 )
 
 __all__ = [
@@ -37,5 +36,4 @@ __all__ = [
     "shingles",
     "token_count",
     "tokens",
-    "winnow_fingerprints",
 ]

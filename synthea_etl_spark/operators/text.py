@@ -272,35 +272,6 @@ def make_sentence_udtf():
     return SplitSentences
 
 
-def winnow_fingerprints(
-    col: Column | str, shingle_n: int = 3, window: int = 4
-) -> Column:
-    """Winnowing document fingerprints (the MOSS scheme): hash every
-    word n-gram, slide a window of ``window`` consecutive hashes, keep
-    each window's minimum, return the distinct selected hashes.
-
-    Guarantees: any shared run of ``window + shingle_n - 1`` tokens
-    between two documents shares at least one fingerprint, and ~2/w of
-    all hashes are kept — a position-aware sketch (unlike bottom-k)
-    at a fraction of full-shingle storage. Entirely JVM array
-    expressions (transform/slice/array_min): per-row and shuffle-free,
-    but higher-order-function lambdas run interpreted — for corpus-
-    scale runs prefer operators/dedup.winnow_fingerprints (exploded,
-    codegen'd md5 hot loop; same results)."""
-    sh = shingles(col, shingle_n)
-    hs = F.transform(
-        sh, lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
-    )
-    m = F.size(hs)
-    wins = F.transform(
-        F.sequence(F.lit(1), m - window + 1),
-        lambda i: F.array_min(F.slice(hs, i, window)),
-    )
-    return F.when(m >= window, F.array_distinct(wins)).otherwise(
-        F.array().cast("array<long>")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Value-decile quality binning + curation sampling
 # ---------------------------------------------------------------------------

@@ -1,5 +1,6 @@
 """Session sizing: shuffle partitions derived from the master's task
-slots, without building a second SparkSession."""
+slots, without building a second SparkSession, and a codegen cache that
+holds more compiled classes than Spark's default of 100."""
 
 from __future__ import annotations
 
@@ -8,6 +9,7 @@ import os
 from synthea_etl_spark.session import _session_conf
 
 KEY = "spark.sql.shuffle.partitions"
+CODEGEN_CACHE = "spark.sql.codegen.cache.maxEntries"
 
 
 def test_shuffle_partitions_are_twice_the_local_task_slots():
@@ -21,3 +23,21 @@ def test_shuffle_partitions_are_twice_the_local_task_slots():
     # masters that are not local keep the cluster default
     for master in ("spark://head:7077", "yarn", "local-cluster[2,1,1024]"):
         assert _session_conf(master)[KEY] == "32"
+
+
+def test_codegen_cache_keeps_compiled_classes(spark):
+    assert _session_conf("local[4]")[CODEGEN_CACHE] == "2000"
+    assert _session_conf("local[4]", extra_conf={CODEGEN_CACHE: "50"})[CODEGEN_CACHE] == "50"
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def run_set():
+        # integer literals are inlined into the generated code, so each
+        # frame compiles its own class: 150 of them, more than Spark's
+        # default cache of 100 holds
+        for i in range(2, 152):
+            spark.range(1).selectExpr(f"id * {i} + {i}").collect()
+
+    run_set()
+    before = compiles.getCount()
+    run_set()
+    assert compiles.getCount() - before == 0
