@@ -20,14 +20,14 @@ no-op — no shuffle is added.
 
 The spread count is the session's shuffle parallelism, which a local
 session sets to 2 x its task slots (``session._session_conf``), so the
-spread runs one or two tasks per core. More tasks than that buy no CPU
-spread and cost a fixed amount each wherever the stage runs Python
-(``mapInPandas``/``mapInArrow``): about 170 ms of worker CPU per task
-on a 4-vCPU host, even on a reused worker. The cost is not the
-engine's: ``pyspark.worker_util.setup_spark_files`` calls
-``importlib.invalidate_caches()`` at the start of every task, and under
-CPython 3.11 that re-reads the directory of ``pyspark.zip`` (on the
-worker's path) for each of its cached zip importers.
+spread runs one or two tasks per core: more tasks than that buy no CPU
+spread. A Python task (``mapInPandas``/``mapInArrow``) no longer costs
+much by itself: under the engine's worker daemon
+(``synthea_etl_spark.worker_daemon``) an empty ``mapInArrow`` task takes
+about 2 ms of worker CPU on a 4-vCPU host, against about 260 ms under
+the stock ``pyspark.daemon``, which re-reads ``pyspark.zip`` and the
+spark-core jar at the start of every task and then walks the whole
+worker heap in a ``gc.collect()`` after it.
 """
 
 from __future__ import annotations
