@@ -15,6 +15,19 @@ are deliberate and documented per function:
 - everything else preserves reference semantics exactly, including the
   null->'None' sentinel + cast interplay (sentinel survives only in
   string-typed columns; 'None' cast to int/double/date yields null).
+
+Each per-column step builds its projection as SQL text (``selectExpr``
+strings quoted by ``util.sql_ident``/``sql_string``), not as ``Column``
+objects. Building a frame is plan construction on the driver, and with
+``Column`` objects every ``F.col``/``F.trim``/``alias`` is its own py4j
+round trip to the JVM (about nine each while PySpark's DataFrame
+debugging captures call sites; ``session`` turns that off). One SQL
+string per output column costs one round trip, and the JVM parses it
+into the same expressions. The four tables of the patient mart (~60
+columns) are cleaned in about 500 round trips instead of about 16k, a
+cost paid on every load of every landed table. The quoting also keeps
+names with dots, spaces or quotes working: every column is one backtick
+identifier, never a path.
 """
 
 from __future__ import annotations
@@ -25,23 +38,26 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructType
 
+from synthea_etl_spark.operators.util import sql_ident, sql_string
+
 # The reference's multi-value cell marker: ' or ' with optional accents
 # (`Raw_To_Staging.py:106` — locale regex preserved exactly).
 MULTIVALUE_PATTERN = r"\s+[oOóÓ][rR]\s+"
+_PATTERN_SQL = sql_string(MULTIVALUE_PATTERN)
 
 
 def normalize_column_names(df: DataFrame) -> DataFrame:
     """P2: lowercase, collapse non-word runs to '_', strip edges
     (reference: Raw_To_Staging.py:103-104). Pure metadata — no job."""
     names = [re.sub(r"\W+", "_", c.strip().lower()).strip("_") for c in df.columns]
-    return df.toDF(*names)
+    return df if names == df.columns else df.toDF(*names)
 
 
 def drop_unnamed_columns(df: DataFrame) -> DataFrame:
     """P4: drop columns with empty/placeholder names
     (reference: Source_Raw_Dynamic.py:72-73)."""
     keep = [c for c in df.columns if c and not c.lower().startswith("unnamed")]
-    return df.select(*keep)
+    return df if keep == df.columns else df.selectExpr(*map(sql_ident, keep))
 
 
 def trim_strings(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
@@ -52,9 +68,9 @@ def trim_strings(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
         if columns is not None
         else [f.name for f in df.schema.fields if isinstance(f.dataType, StringType)]
     )
-    return df.select(
+    return df.selectExpr(
         *[
-            F.trim(F.col(c)).alias(c) if c in targets else F.col(c)
+            f"trim({sql_ident(c)}) AS {sql_ident(c)}" if c in targets else sql_ident(c)
             for c in df.columns
         ]
     )
@@ -68,10 +84,9 @@ def fix_phone_columns(df: DataFrame, columns: list[str] | None = None) -> DataFr
     """X2: strip '-' from phone-like columns
     (reference: Raw_To_Staging.py:114-115)."""
     targets = columns if columns is not None else [c for c in df.columns if _phone_like(c)]
-    out = df
-    for c in targets:
-        out = out.withColumn(c, F.regexp_replace(F.col(c), "-", ""))
-    return out
+    return _project(
+        df, {c: f"regexp_replace({sql_ident(c)}, '-', '')" for c in targets}
+    )
 
 
 def find_multivalue_columns(df: DataFrame, columns: list[str] | None = None) -> list[str]:
@@ -88,17 +103,34 @@ def find_multivalue_columns(df: DataFrame, columns: list[str] | None = None) -> 
     if not cands:
         return []
     probes = [
-        F.max(F.coalesce(F.col(c).rlike(MULTIVALUE_PATTERN), F.lit(False)).cast("int")).alias(c)
+        f"max(cast(coalesce({sql_ident(c)} rlike {_PATTERN_SQL}, false) AS int)) AS {sql_ident(c)}"
         for c in cands
     ]
-    row = df.agg(*probes).collect()[0]
+    row = df.selectExpr(*probes).collect()[0]
     return [c for c in cands if row[c] == 1]
 
 
-def _part(c: str, i: int):
-    """Trimmed ``i``-th ' or '-separated part of ``c``; F.get (not
-    getItem): a missing part is NULL under ANSI mode."""
-    return F.trim(F.get(F.split(F.trim(F.col(c)), MULTIVALUE_PATTERN), i))
+def _part(c: str, i: int) -> str:
+    """SQL text of the trimmed ``i``-th ' or '-separated part of ``c``;
+    get (not ``[i]``): a missing part is NULL under ANSI mode."""
+    return f"trim(get(split(trim({sql_ident(c)}), {_PATTERN_SQL}), {i}))"
+
+
+def _project(df: DataFrame, exprs: dict[str, str | None]) -> DataFrame:
+    """One ``selectExpr`` doing what ``withColumn(name, expr)`` (or
+    ``drop(name)`` for ``None``) per ``exprs`` entry would: an existing
+    name keeps its position, a new one is appended, and every
+    expression reads the columns of ``df``."""
+    if not exprs:
+        return df
+    have = df.columns
+    return df.selectExpr(
+        *[
+            f"{exprs[c]} AS {sql_ident(c)}" if c in exprs else sql_ident(c)
+            for c in have + [c for c in exprs if c not in have]
+            if c not in exprs or exprs[c] is not None
+        ]
+    )
 
 
 def split_multivalue(
@@ -119,16 +151,12 @@ def split_multivalue(
     play and downstream reads *_part1/_part2."""
     targets = columns if columns is not None else find_multivalue_columns(df)
     declared = schema_columns or set()
-    out = df
+    exprs: dict[str, str | None] = {}
     for c in targets:
-        out = out.withColumn(f"{c}_part1", _part(c, 0)).withColumn(
-            f"{c}_part2", _part(c, 1)
-        )
-        if c in declared:
-            out = out.withColumn(c, F.col(f"{c}_part1"))
-        else:
-            out = out.drop(c)
-    return out
+        exprs[f"{c}_part1"] = _part(c, 0)
+        exprs[f"{c}_part2"] = _part(c, 1)
+        exprs[c] = _part(c, 0) if c in declared else None
+    return _project(df, exprs)
 
 
 def empty_to_null(df: DataFrame) -> DataFrame:
@@ -137,11 +165,11 @@ def empty_to_null(df: DataFrame) -> DataFrame:
     and the next stage's CSV read parses '' as null,
     Source_Raw_Dynamic.py:122 -> Raw_To_Staging.py:166); a single-pass
     pipeline must apply it explicitly before the null sentinel."""
-    return df.select(
+    return df.selectExpr(
         *[
-            F.when(F.col(c) == "", None).otherwise(F.col(c)).alias(c)
+            f"CASE WHEN {sql_ident(c)} = '' THEN NULL ELSE {sql_ident(c)} END AS {sql_ident(c)}"
             if t == "string"
-            else F.col(c)
+            else sql_ident(c)
             for c, t in df.dtypes
         ]
     )
@@ -164,23 +192,22 @@ def cast_to_schema(df: DataFrame, schema: StructType, timestamps_as_iso_strings:
     behavior."""
     from pyspark.sql.types import TimestampType
 
+    have = set(df.columns)
+    iso = sql_string("yyyy-MM-dd'T'H:mm:ss")
     cols = []
     for f_ in schema.fields:
-        if f_.name not in df.columns:
-            cols.append(F.lit(None).cast(f_.dataType).alias(f_.name))
+        c, t = sql_ident(f_.name), f_.dataType.simpleString()
+        if f_.name not in have:
+            cols.append(f"CAST(NULL AS {t}) AS {c}")
         elif isinstance(f_.dataType, TimestampType) and timestamps_as_iso_strings:
-            cols.append(
-                F.date_format(
-                    F.col(f_.name).cast("timestamp"), "yyyy-MM-dd'T'H:mm:ss"
-                ).alias(f_.name)
-            )
+            cols.append(f"date_format(CAST({c} AS timestamp), {iso}) AS {c}")
         else:
             # try_cast, not cast: under ANSI mode (Spark 4 default) a
             # plain cast of the 'None' sentinel to int/double/date
             # throws; the reference ran non-ANSI where it yields null.
             # try_cast reproduces that null-on-malformed semantics.
-            cols.append(F.col(f_.name).try_cast(f_.dataType).alias(f_.name))
-    return df.select(*cols)
+            cols.append(f"try_cast({c} AS {t}) AS {c}")
+    return df.selectExpr(*cols)
 
 
 def dedup_full(df: DataFrame) -> DataFrame:
@@ -232,11 +259,15 @@ def _split_declared(df: DataFrame, schema: StructType) -> DataFrame:
     ]
     out = split_multivalue(df, find_multivalue_columns(df, probed), declared)
     rowwise = {c for c in strings if c in declared and c not in probed}
-
-    def part1(c: str):
-        return F.when(F.col(c).rlike(MULTIVALUE_PATTERN), _part(c, 0)).otherwise(F.col(c)).alias(c)
-
-    return out.select(*[part1(c) if c in rowwise else F.col(c) for c in out.columns])
+    return _project(
+        out,
+        {
+            c: f"CASE WHEN {sql_ident(c)} rlike {_PATTERN_SQL} "
+            f"THEN {_part(c, 0)} ELSE {sql_ident(c)} END"
+            for c in out.columns
+            if c in rowwise
+        },
+    )
 
 
 def clean_pipeline(

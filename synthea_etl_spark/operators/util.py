@@ -36,6 +36,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def sql_ident(name: str) -> str:
+    """``name`` as one backtick-quoted Spark SQL identifier, inner
+    backticks doubled: dots, spaces and quotes stay part of the name."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_string(value: str) -> str:
+    """``value`` as a single-quoted Spark SQL string literal, ``\\`` and
+    ``'`` backslash-escaped (the parser's default string escaping)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def shuffle_parallelism(df: DataFrame) -> int:
     """The session's target shuffle parallelism (fallback 200)."""
     try:

@@ -7,9 +7,23 @@ at scale: AQE (runtime coalescing, skew-join splitting), Arrow for any
 pandas exchange, UTC session time so results are reproducible across
 engines and clusters, a whole-stage codegen cache large enough that
 repeated plans reuse their compiled classes instead of recompiling them,
-and the engine's Python worker daemon (``worker_daemon``), whose workers
+the engine's Python worker daemon (``worker_daemon``), whose workers
 skip the per-task re-read of ``pyspark.zip`` and the spark-core jar and
-the per-task collection of the Arrow stack's objects.
+the per-task collection of the Arrow stack's objects, and plan building
+without PySpark's DataFrame-debugging call-site capture.
+
+That capture (``spark.python.sql.dataFrameDebugging.enabled``, on by
+default in PySpark 4.1) wraps every ``functions.*`` and ``Column`` call:
+each call reads a conf over py4j, walks the Python stack (including a
+failing ``import IPython`` that searches all of ``sys.path``), and sets
+and clears the JVM's current origin, about nine driver->JVM round trips
+where the call itself needs one. What it buys is the Python ``file:line``
+"DataFrame context" attached to errors raised from DataFrame
+expressions; with it off those errors carry only the JVM message and
+stack, which are unchanged. PySpark reads the value once per Python
+process, at the first wrapped call, so it is a session-build default:
+pass ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
+"true"}`` to the first ``get_session`` of a process to keep origins.
 """
 
 from __future__ import annotations
@@ -82,6 +96,17 @@ _DEFAULTS: dict[str, str] = {
     # spark.executorEnv.PYTHONPATH on a cluster. "pyspark.daemon"
     # restores the stock daemon.
     "spark.python.daemon.module": "synthea_etl_spark.worker_daemon",
+    # No call-site capture while building plans. With it on, every
+    # functions.*/Column call costs ~9 py4j round trips instead of one
+    # (a conf read, a stack walk with a failing IPython import, origin
+    # set/clear), paid in per-column cleaning on every load of every
+    # landed table: with it on, a mart_etl op made ~22k round trips,
+    # most of them building the staging frames. Lost: the Python
+    # file:line "DataFrame context" in errors from DataFrame
+    # expressions; the JVM message and stack are unchanged. PySpark
+    # reads it once per Python process at the first wrapped call, so it
+    # only takes effect as a session-build default; "true" restores it.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     # local-mode niceties; harmless on a cluster.
     "spark.ui.enabled": "false",
 }

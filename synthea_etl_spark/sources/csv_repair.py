@@ -23,6 +23,15 @@ Divergences (deliberate, documented):
 For pathological quoting that univocity and Python's csv disagree on,
 ``repair_csv_python`` keeps a mapPartitions fallback with the
 reference's exact csv.reader semantics.
+
+The per-column projections (pad, keep) are SQL text in one
+``selectExpr`` each, with every header cell quoted by
+``operators.util.sql_ident``, and the ``from_csv`` schema string uses
+the same quoting. Built as ``Column`` objects they would cost several
+py4j round trips per column on every landed file (see
+``operators.clean``). The quoting keeps any header cell, one with a dot
+(``Patient.Id``), a backtick, a quote or a space included, one column
+name rather than a struct path or broken SQL.
 """
 
 from __future__ import annotations
@@ -32,6 +41,8 @@ import io
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from synthea_etl_spark.operators.util import sql_ident
 
 
 def _read_header(spark: SparkSession, path: str) -> tuple[list[str], str]:
@@ -67,22 +78,20 @@ def repair_csv(spark: SparkSession, path: str, drop_unnamed: bool = True) -> Dat
     (with '') or truncated to that width.
     """
     header, header_line = _read_header(spark, path)
-    schema = ", ".join(f"`{c}` string" for c in header)
+    schema = ", ".join(f"{sql_ident(c)} string" for c in header)
     lines = spark.read.text(path)
     parsed = (
         _drop_one_header(lines, header_line)
-        .filter(F.length(F.trim(F.col("value"))) > 0)  # and blank lines
+        .filter("length(trim(value)) > 0")  # and blank lines
         .select(
             F.from_csv(
                 "value", schema, {"ignoreLeadingWhiteSpace": "true"}
             ).alias("r")
         )
-        .select([F.coalesce(F.col(f"r.`{c}`"), F.lit("")).alias(c) for c in header])
+        .selectExpr(*[f"coalesce(r.{sql_ident(c)}, '') AS {sql_ident(c)}" for c in header])
     )
-    if drop_unnamed:
-        keep = [c for c in header if not c.startswith("unnamed_")]
-        parsed = parsed.select(*keep)
-    return parsed
+    keep = [c for c in header if not (drop_unnamed and c.startswith("unnamed_"))]
+    return parsed if keep == header else parsed.selectExpr(*map(sql_ident, keep))
 
 
 def repair_csv_python(spark: SparkSession, path: str) -> DataFrame:

@@ -4,6 +4,7 @@ null->'None'->cast interplay quirk."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from synthea_etl_spark.operators import clean
@@ -48,6 +49,31 @@ def test_multivalue_probe_and_split(spark):
     # accented variant from the reference's locale regex
     df2 = spark.createDataFrame([("uno óR dos",)], ["v"])
     assert clean.find_multivalue_columns(df2) == ["v"]
+
+
+@pytest.mark.parametrize(
+    "name", ["a.b", "a`b", "it's", "a b"], ids=["dot", "backtick", "quote", "space"]
+)
+def test_steps_take_names_with_sql_characters(spark, name):
+    """Each step quotes every column as one identifier: a dot is not a
+    struct path, and a backtick, quote or space does not break the SQL
+    text of its projection."""
+    df = spark.createDataFrame([(" 5-1 or 2 ", "", "k")], [name, "unnamed_1", "key"])
+    assert clean.drop_unnamed_columns(df).columns == [name, "key"]
+    out = clean.empty_to_null(clean.trim_strings(df))
+    assert tuple(out.collect()[0]) == ("5-1 or 2", None, "k")
+    assert clean.find_multivalue_columns(out) == [name]
+    assert clean.fix_phone_columns(out, [name]).collect()[0][name] == "51 or 2"
+    split = clean.split_multivalue(out, schema_columns={name})
+    assert split.columns == [name, "unnamed_1", "key", f"{name}_part1", f"{name}_part2"]
+    assert tuple(split.collect()[0]) == ("5-1", None, "k", "5-1", "2")
+    schema = schema_from_fields(
+        [{"name": f"{name}_part2", "type": "int"}, {"name": f"{name}.x", "type": "int"},
+         {"name": name, "type": "string"}]
+    )
+    cast = clean.cast_to_schema(split, schema)
+    assert cast.dtypes == [(f"{name}_part2", "int"), (f"{name}.x", "int"), (name, "string")]
+    assert tuple(cast.collect()[0]) == (2, None, "5-1")
 
 
 def test_multivalue_schema_declared_column_kept(spark):

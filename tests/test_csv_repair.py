@@ -94,3 +94,23 @@ def test_header_dropped_once_across_partitions(spark, tmp_path):
             assert len(rows) == 62
     finally:
         spark.conf.set(key, prev)
+
+
+@pytest.mark.parametrize(
+    "name", ["Patient.Id", "we`ird", "it's", "two words"], ids=["dot", "backtick", "quote", "space"]
+)
+def test_header_cells_with_sql_characters(spark, tmp_path, name):
+    """A header cell is one column name, whatever it holds: a dot is not
+    a struct path and a backtick does not break the ``from_csv`` schema.
+    The trailing unnamed cell makes the keep projection run."""
+    p = tmp_path / "names.csv"
+    p.write_text(f'"{name}",plain,\n1,a,x\n2,"b, c"\n')
+    for drop, cols in ((True, [name, "plain"]), (False, [name, "plain", "unnamed_2"])):
+        out = repair_csv(spark, str(p), drop_unnamed=drop)
+        assert out.columns == cols
+        rows = sorted(map(tuple, out.collect()))
+        assert rows == [("1", "a", "x")[: len(cols)], ("2", "b, c", "")[: len(cols)]]
+    assert sorted(map(tuple, repair_csv_python(spark, str(p)).collect())) == [
+        ("1", "a", "x"),
+        ("2", "b, c", ""),
+    ]

@@ -197,6 +197,47 @@ def test_registry_clean_submits_no_job(spark):
     assert probe
 
 
+# py4j round trips to build every registry table's minor+major clean
+# from the test landing: about 3,900 with each step's projection as SQL
+# text and call-site capture off; about 89,000 with Column objects and
+# capture on
+CLEAN_BUILD_ROUND_TRIPS = 8_000
+
+
+def test_clean_build_round_trips(spark, tmp_path, monkeypatch):
+    """Building ``clean_pipeline(repair_csv(...))`` for all 18 registry
+    tables stays within a fixed number of driver->JVM round trips: the
+    projections are SQL text, one string per column, and no call is
+    wrapped in call-site capture. The header reads are the only jobs."""
+    from py4j.clientserver import ClientServerConnection
+
+    from synthea_etl_spark.operators.clean import clean_pipeline
+    from synthea_etl_spark.sources.csv_repair import repair_csv
+    from synthea_etl_spark.sources.schema_registry import (
+        SYNTHEA_TABLES,
+        bundled_registry_dir,
+        load_schema,
+    )
+    from tests.synthea_fixtures import write_landing
+
+    write_landing(str(tmp_path), "2024-01-01")
+    calls = [0]
+    stock = ClientServerConnection.send_command
+
+    def counted(self, command, *args, **kwargs):
+        calls[0] += 1
+        return stock(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    for table in SYNTHEA_TABLES:
+        clean_pipeline(
+            repair_csv(spark, str(tmp_path / "2024-01-01" / table)),
+            schema=load_schema(bundled_registry_dir(), table),
+        )
+    monkeypatch.undo()
+    assert 0 < calls[0] < CLEAN_BUILD_ROUND_TRIPS
+
+
 def test_staged_and_mart_frames_match_inferred_schema(spark, tmp_path):
     """The frames ``stage_table`` and ``run_batch_pipeline`` return are
     read with the schema the engine wrote; it must equal what a fresh

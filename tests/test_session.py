@@ -1,15 +1,19 @@
 """Session sizing: shuffle partitions derived from the master's task
-slots, without building a second SparkSession, and a codegen cache that
-holds more compiled classes than Spark's default of 100."""
+slots, without building a second SparkSession, a codegen cache that
+holds more compiled classes than Spark's default of 100, and plan
+building without PySpark's call-site capture."""
 
 from __future__ import annotations
 
 import os
 
+from pyspark.errors import utils as errors_utils
+
 from synthea_etl_spark.session import _session_conf
 
 KEY = "spark.sql.shuffle.partitions"
 CODEGEN_CACHE = "spark.sql.codegen.cache.maxEntries"
+DEBUGGING = "spark.python.sql.dataFrameDebugging.enabled"
 
 
 def test_shuffle_partitions_are_twice_the_local_task_slots():
@@ -41,3 +45,16 @@ def test_codegen_cache_keeps_compiled_classes(spark):
     before = compiles.getCount()
     run_set()
     assert compiles.getCount() - before == 0
+
+
+def test_dataframe_debugging_defaults_off():
+    assert _session_conf("local[4]")[DEBUGGING] == "false"
+    assert _session_conf("local[4]", extra_conf={DEBUGGING: "true"})[DEBUGGING] == "true"
+
+
+def test_session_builds_plans_without_call_site_capture(spark, monkeypatch):
+    """No call-site capture around functions.*/Column calls. PySpark
+    reads the conf once per process and caches it, so the cache is
+    cleared to read it again from the test session."""
+    monkeypatch.setattr(errors_utils, "_enable_debugging_cache", None)
+    assert errors_utils.is_debugging_enabled() is False
