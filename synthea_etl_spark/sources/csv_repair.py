@@ -45,10 +45,13 @@ from pyspark.sql import functions as F
 from synthea_etl_spark.operators.util import sql_ident
 
 
-def _read_header(spark: SparkSession, path: str) -> tuple[list[str], str]:
-    """First text line = header (reference: Source_Raw_Dynamic.py:93):
-    (column names, the raw line). One tiny job; does not scan the file."""
-    first = spark.read.text(path).limit(1).collect()
+def _read_header(lines: DataFrame, path: str) -> tuple[list[str], str]:
+    """First text line of ``lines`` (the ``spark.read.text`` relation of
+    ``path``) = header (reference: Source_Raw_Dynamic.py:93): (column
+    names, the raw line). One tiny job; does not scan the file. Taking
+    the relation the parse reads, not a path, resolves and lists the
+    landed directory once."""
+    first = lines.limit(1).collect()
     if not first:
         raise ValueError(f"empty CSV at {path}")
     line = first[0].value
@@ -77,9 +80,9 @@ def repair_csv(spark: SparkSession, path: str, drop_unnamed: bool = True) -> Dat
     Column set = header of the first line; every data row is padded
     (with '') or truncated to that width.
     """
-    header, header_line = _read_header(spark, path)
-    schema = ", ".join(f"{sql_ident(c)} string" for c in header)
     lines = spark.read.text(path)
+    header, header_line = _read_header(lines, path)
+    schema = ", ".join(f"{sql_ident(c)} string" for c in header)
     parsed = (
         _drop_one_header(lines, header_line)
         .filter("length(trim(value)) > 0")  # and blank lines
@@ -99,9 +102,9 @@ def repair_csv_python(spark: SparkSession, path: str) -> DataFrame:
     (`Source_Raw_Dynamic.py:60-69`), as mapPartitions (batch-per-task,
     not the reference's row lambdas). Use only when univocity's quote
     handling materially differs."""
-    header, header_line = _read_header(spark, path)
-    n = len(header)
     lines = spark.read.text(path)
+    header, header_line = _read_header(lines, path)
+    n = len(header)
 
     def fix_partition(rows):
         for row in rows:

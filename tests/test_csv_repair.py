@@ -114,3 +114,23 @@ def test_header_cells_with_sql_characters(spark, tmp_path, name):
         ("1", "a", "x"),
         ("2", "b, c", ""),
     ]
+
+
+def test_landed_directory_read_once(spark, dirty_csv, monkeypatch):
+    """One text relation per repair: the header job and the parse read
+    the same relation, so a landed directory is resolved and listed
+    once."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    calls = []
+    stock = DataFrameReader.text
+
+    def counted(self, *args, **kwargs):
+        calls.append(args)
+        return stock(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameReader, "text", counted)
+    for reader in (repair_csv, repair_csv_python):
+        calls.clear()
+        reader(spark, dirty_csv)
+        assert len(calls) == 1, reader.__name__

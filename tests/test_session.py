@@ -1,7 +1,8 @@
 """Session sizing: shuffle partitions derived from the master's task
 slots, without building a second SparkSession, a codegen cache that
-holds more compiled classes than Spark's default of 100, and plan
-building without PySpark's call-site capture."""
+holds more compiled classes than Spark's default of 100, plan
+building without PySpark's call-site capture, and a driver JVM whose C2
+compiles only hot code."""
 
 from __future__ import annotations
 
@@ -14,6 +15,13 @@ from synthea_etl_spark.session import _session_conf
 KEY = "spark.sql.shuffle.partitions"
 CODEGEN_CACHE = "spark.sql.codegen.cache.maxEntries"
 DEBUGGING = "spark.python.sql.dataFrameDebugging.enabled"
+DEFAULT_JAVA = "spark.driver.defaultJavaOptions"
+C2_FLAGS = {
+    "-XX:Tier4InvocationThreshold=15000",
+    "-XX:Tier4MinInvocationThreshold=1800",
+    "-XX:Tier4CompileThreshold=45000",
+    "-XX:Tier4BackEdgeThreshold=120000",
+}
 
 
 def test_shuffle_partitions_are_twice_the_local_task_slots():
@@ -58,3 +66,22 @@ def test_session_builds_plans_without_call_site_capture(spark, monkeypatch):
     cleared to read it again from the test session."""
     monkeypatch.setattr(errors_utils, "_enable_debugging_cache", None)
     assert errors_utils.is_debugging_enabled() is False
+
+
+def test_c2_thresholds_are_engine_defaults():
+    assert set(_session_conf("local[4]")[DEFAULT_JAVA].split()) == C2_FLAGS
+    # a caller's extraJavaOptions (perfbench passes its tmpdir flags so)
+    # leave them in place; an empty defaultJavaOptions clears them
+    conf = _session_conf("local[4]", extra_conf={"spark.driver.extraJavaOptions": "-Dx=1"})
+    assert set(conf[DEFAULT_JAVA].split()) == C2_FLAGS
+    assert conf["spark.driver.extraJavaOptions"] == "-Dx=1"
+    assert _session_conf("local[4]", extra_conf={DEFAULT_JAVA: ""})[DEFAULT_JAVA] == ""
+
+
+def test_session_jvm_runs_with_c2_thresholds(spark):
+    jvm = spark._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    assert bean.getVMOption("Tier4InvocationThreshold").getValue() == "15000"
+    assert bean.getVMOption("Tier4BackEdgeThreshold").getValue() == "120000"
