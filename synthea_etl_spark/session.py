@@ -25,25 +25,13 @@ process, at the first wrapped call, so it is a session-build default:
 pass ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
 "true"}`` to the first ``get_session`` of a process to keep origins.
 
-The JVM that ``get_session`` launches leaves lukewarm code to C1: its
-tier-4 (C2) thresholds are three times JDK 17's. Catalyst's analyzer
-and optimizer rules, expression trees and parquet footer code run
-thousands of times per op, enough to cross the stock thresholds but not
-long enough to repay a C2 compile. With the stock policy the C1/C2
-compiler threads used about 10 of the 15 s of JVM CPU in a ``mart_etl``
-op 1, and the fourth op still spent 4.4 s in the JIT. At x3 JIT time
-on op 1 falls to about 7 s on both perfbench workloads (4 cores), and a
-per-row loop still crosses the back-edge threshold within one task and
-reaches C2. x10 cut the JIT further, to about 4-5 s, but made later
-ops slower: code kept below C2 runs as profiling C1 code, and the walls
-of ops 5-7 rose by about 7%.
-The flags go in ``spark.driver.defaultJavaOptions``, which Spark puts
-before ``spark.driver.extraJavaOptions``, so a caller's
-``extraJavaOptions`` still apply. They take effect only where
-``get_session`` starts the JVM (local runs, tests, the per-file job);
-a driver started by spark-submit and cluster executors keep their own
-options, as with ``spark.driver.memory``. ``extra_conf={
-"spark.driver.defaultJavaOptions": ""}`` restores the JDK's policy.
+The JVM that ``get_session`` launches runs with JDK 17's tier-4 (C2)
+thresholds x3 (``spark.driver.defaultJavaOptions``), so lukewarm
+Catalyst planning code stays at C1 instead of being C2-compiled op after
+op. A spark-submit or Glue driver and cluster executors do not get
+them. The value replaces any ``spark.driver.defaultJavaOptions`` from
+``spark-defaults.conf``; ``extra_conf={"spark.driver.defaultJavaOptions":
+""}`` restores the JDK policy. Measurements and rejected options: SCALE.md, "Session defaults".
 """
 
 from __future__ import annotations
@@ -129,12 +117,9 @@ _DEFAULTS: dict[str, str] = {
     "spark.python.sql.dataFrameDebugging.enabled": "false",
     # C2 compiles only hot code: JDK 17's tier-4 thresholds (5000
     # invocations, 600 minimum, 15000 invocations plus loops, 40000 back
-    # edges) times three; see the module docstring. With the stock ones
-    # op 1 spent ~11-12 s in the JIT on both perfbench workloads, ~7 s
-    # at x3 (4 cores). x10 and C1 only (TieredStopAtLevel=1) cut more
-    # CPU but made op walls slower, by ~7% (ops 5-7) and 5-15%. A JVM
-    # launch option: inert for a spark-submit driver and for cluster
-    # executors. "" restores the JDK policy.
+    # edges) x3; see the module docstring. A launch option of the JVM
+    # get_session starts; it replaces a spark-defaults.conf value, and
+    # "" restores the JDK policy.
     "spark.driver.defaultJavaOptions": (
         "-XX:Tier4InvocationThreshold=15000 -XX:Tier4MinInvocationThreshold=1800 "
         "-XX:Tier4CompileThreshold=45000 -XX:Tier4BackEdgeThreshold=120000"
