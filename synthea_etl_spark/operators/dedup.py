@@ -31,10 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from synthea_etl_spark.operators import store
-from synthea_etl_spark.operators.store import (  # noqa: F401 (public names)
-    watermark as compaction_watermark,
-    watermark_path as _compaction_watermark_path,
-)
+from synthea_etl_spark.operators.store import watermark as compaction_watermark
 from synthea_etl_spark.operators.text import fingerprint, shingles, tokens
 from synthea_etl_spark.operators.util import rebalance_by_key
 

@@ -9,10 +9,9 @@ width...) prune row groups WITHOUT touching payload bytes, and decode
 runs distributed via mapInPandas (Arrow batches, bounded memory per
 task via maxRecordsPerBatch).
 
-The COMPRESSED-codec step is STUBBED: this container ships no
-image/audio libraries, so ``decode_features`` raises
-NotImplementedError unless ``fake=True``, which substitutes a
-deterministic byte-level stand-in. ``resize_payloads`` and
+No image/audio codec library is a dependency. ``decode_features``
+is a deterministic byte-level feature pass (the payload-plumbing
+smoke path), not a media decode. ``resize_payloads`` and
 ``sample_frames`` now have REAL codec-free paths (uncompressed
 rasters / Y4M containers — see below) and keep the fake stand-in only
 for codec formats. The Spark-side plumbing — schema, batch shape,
@@ -48,10 +47,11 @@ These paths are REAL, no codec dependency:
   (``decode_raster``: BMP, PPM, baseline TIFF, 8-bit PNG —
   interlaced or not, Adam7 spatially reassembled),
   nearest-neighbor resamples with exact integer index arithmetic,
-  and re-encodes as binary PPM (``encode_ppm``). The NotImplementedError scope is therefore
-  arithmetic-coded JPEG, compressed video, and compressed audio
-  only — every common still-image format, INCLUDING progressive
-  (SOF2) JPEG, decodes for real (operators/jpeg.py).
+  and re-encodes as binary PPM (``encode_ppm``). What still needs a
+  codec is therefore arithmetic-coded JPEG, compressed video, and
+  compressed audio only — every common still-image format,
+  INCLUDING progressive (SOF2) JPEG, decodes for real
+  (operators/jpeg.py).
 """
 
 from __future__ import annotations
@@ -84,26 +84,18 @@ def attach_payload(df: DataFrame, text_col: str, id_col: str, content_type: str 
     )
 
 
-def decode_features(df: DataFrame, fake: bool = False) -> DataFrame:
+def decode_features(df: DataFrame) -> DataFrame:
     """BYTE-level feature extraction over payloads via mapInPandas —
     the payload-plumbing smoke path (binaryFile source contract,
     batch shape). For real media decode use ``pixel_stats`` /
     ``image_metadata`` / ``dhash_fingerprints`` / the audio+video
     stats operators, which decode PNG/JPEG/GIF/BMP/TIFF/WAV/FLAC/...
-    from scratch; ``fake=False`` here is the historical guard for the
-    codec-library decode this engine never took a dependency on and
-    raises. Features are vectorized per Arrow batch: payload bytes
-    concatenate once (C-speed) and per-row sums come from one
+    from scratch. Features are vectorized per Arrow batch: payload
+    bytes concatenate once (C-speed) and per-row sums come from one
     ``np.add.reduceat`` — no per-row Python arithmetic."""
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not fake:
-                raise NotImplementedError(
-                    "library-backed media decode was never added; use the "
-                    "from-scratch decoders (pixel_stats et al.) or fake=True "
-                    "for the byte-level stand-in"
-                )
             blobs = [bytes(b) for b in pdf["payload"]]
             lens = np.fromiter((len(b) for b in blobs), dtype=np.int64,
                                count=len(blobs))
@@ -205,9 +197,9 @@ IMAGE_META_SCHEMA = (
 def image_metadata(df: DataFrame) -> DataFrame:
     """REAL distributed image-metadata extraction: parse container
     dimensions from payload headers via ``parse_image_dims`` in
-    Arrow-batched mapInPandas. Unlike ``decode_features`` this needs
-    no codec — it reads fixed-layout header bytes only — so there is
-    no ``fake`` flag; unrecognized payloads yield null format/dims."""
+    Arrow-batched mapInPandas. It needs no codec — it reads
+    fixed-layout header bytes only; unrecognized payloads yield null
+    format/dims."""
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1094,8 +1086,7 @@ def decode_pixels(
     height, mean_r, mean_g, mean_b) with channel means computed as
     exact int64 sums over the pixel array divided by the pixel
     count — deterministic at any parallelism. None for anything else
-    (arithmetic-coded JPEG and compressed video need a codec: see
-    decode_features' fake path)."""
+    (arithmetic-coded JPEG and compressed video need a codec)."""
     b = bytes(b)
     if b[:8] == b"\x89PNG\r\n\x1a\n":
         png = _decode_png_pixels(b)

@@ -31,6 +31,8 @@ from typing import Callable, Optional
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from synthea_etl_spark.operators.util import rebalance_by_key
+
 TABLES = (
     "region",
     "nation",
@@ -122,6 +124,31 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         ts = F.col("ts").cast("timestamp_ntz")
     return df.select(
         "event_id", ts.alias("ts"), "user_id", "event_type", "value", "props"
+    )
+
+
+def doc_payloads(
+    spark: SparkSession, sf_dir: str, payload: Callable[[int], bytes]
+) -> DataFrame:
+    """One synthetic media payload per document, ``(id long, payload
+    binary)``, where ``payload(doc_id)`` builds the bytes. The doc_id
+    frame goes through ``rebalance_by_key`` (the narrow scan's only
+    shuffle), then one Arrow-batched mapInPandas stage builds the
+    payloads: no other shuffle, no collect, and payloads never leave
+    the executor."""
+
+    def build(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            ids = pdf["doc_id"]
+            yield pd.DataFrame(
+                {"id": ids, "payload": [payload(int(i)) for i in ids]}
+            )
+
+    docs = load(spark, sf_dir, "documents").select("doc_id")
+    return rebalance_by_key(docs, "doc_id").mapInPandas(
+        build, schema="id long, payload binary"
     )
 
 

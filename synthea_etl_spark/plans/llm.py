@@ -13,6 +13,10 @@ tests/test_llm.py instead).
 
 from __future__ import annotations
 
+import math
+import struct
+
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -20,7 +24,7 @@ from synthea_etl_spark.operators import dedup as D
 from synthea_etl_spark.operators import similarity as S
 from synthea_etl_spark.operators import text as T
 from synthea_etl_spark.operators.util import rebalance_by_key
-from synthea_etl_spark.plans.common import QuerySpec, load
+from synthea_etl_spark.plans.common import QuerySpec, doc_payloads, load
 
 # Shared oracle CTEs ---------------------------------------------------------
 
@@ -981,46 +985,31 @@ def q126_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     int64 sums). The DuckDB oracle recomputes the means arithmetically
     — gray color types report the gray mean on all three channels — so
     a hash match proves chunk walking, decompression, every filter's
-    reversal, and palette indexing. Both stages are Arrow-batched
-    mapInPandas: no shuffle, no collect, payloads never leave the
-    executor."""
+    reversal, and palette indexing."""
     from synthea_etl_spark.operators.multimodal import encode_png, pixel_stats
 
-    d = rebalance_by_key(
-        load(spark, sf_dir, "documents").select("doc_id"), "doc_id"
-    )
+    def payload(doc_id):
+        w, h = doc_id % 3 + 2, doc_id % 2 + 1
+        base = doc_id % 200
+        px = [
+            (base + 3 * j, base + 3 * j + 1, base + 3 * j + 2)
+            for j in range(w * h)
+        ]
+        ct = _PNG_CT_CYCLE[doc_id % 5]
+        # depth/interlace cycle is oracle-neutral: means are
+        # over raw samples, and the same 0..255 values are
+        # valid 16-bit samples; palette stays 8-bit (spec)
+        return encode_png(
+            w,
+            h,
+            px,
+            colortype=ct,
+            filters=[doc_id % 5] * h,
+            bitdepth=16 if doc_id % 3 == 0 and ct != 3 else 8,
+            interlace=1 if doc_id % 7 == 0 else 0,
+        )
 
-    def build(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h = doc_id % 3 + 2, doc_id % 2 + 1
-                base = doc_id % 200
-                px = [
-                    (base + 3 * j, base + 3 * j + 1, base + 3 * j + 2)
-                    for j in range(w * h)
-                ]
-                ct = _PNG_CT_CYCLE[doc_id % 5]
-                # depth/interlace cycle is oracle-neutral: means are
-                # over raw samples, and the same 0..255 values are
-                # valid 16-bit samples; palette stays 8-bit (spec)
-                payloads.append(
-                    encode_png(
-                        w,
-                        h,
-                        px,
-                        colortype=ct,
-                        filters=[doc_id % 5] * h,
-                        bitdepth=16 if doc_id % 3 == 0 and ct != 3 else 8,
-                        interlace=1 if doc_id % 7 == 0 else 0,
-                    )
-                )
-            yield pd.DataFrame({"id": pdf["doc_id"], "payload": payloads})
-
-    shaped = d.mapInPandas(build, schema="id long, payload binary")
+    shaped = doc_payloads(spark, sf_dir, payload)
     return pixel_stats(shaped)
 
 
@@ -1066,46 +1055,31 @@ def q127_jpeg_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the JFIF YCbCr round trip, whose floor(x+0.5) arithmetic the
     oracle mirrors verbatim). The AC/zigzag/ZRL paths that cannot be
     made arithmetically exact are covered by property tests against
-    an independent loop-written IDCT (tests/test_multimodal_pixels).
-    Both stages are Arrow-batched mapInPandas: no shuffle, no
-    collect, payloads never leave the executor."""
+    an independent loop-written IDCT (tests/test_multimodal_pixels)."""
     from synthea_etl_spark.operators.jpeg import encode_jpeg
     from synthea_etl_spark.operators.multimodal import pixel_stats
 
-    d = rebalance_by_key(
-        load(spark, sf_dir, "documents").select("doc_id"), "doc_id"
-    )
+    def payload(doc_id):
+        if doc_id % 2 == 0:
+            v0, v1 = doc_id % 251, (doc_id * 3 + 17) % 251
+            pix = [
+                ((v0 if x < 8 else v1),) * 3
+                for _ in range(8)
+                for x in range(16)
+            ]
+            return encode_jpeg(
+                16, 8, pix, gray=True,
+                restart_interval=1 if doc_id % 6 == 0 else 0,
+            )
+        else:
+            rgb = (
+                doc_id % 256,
+                (doc_id * 5 + 3) % 256,
+                (doc_id * 11 + 7) % 256,
+            )
+            return encode_jpeg(8, 8, [rgb] * 64)
 
-    def build(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                if doc_id % 2 == 0:
-                    v0, v1 = doc_id % 251, (doc_id * 3 + 17) % 251
-                    pix = [
-                        ((v0 if x < 8 else v1),) * 3
-                        for _ in range(8)
-                        for x in range(16)
-                    ]
-                    payloads.append(
-                        encode_jpeg(
-                            16, 8, pix, gray=True,
-                            restart_interval=1 if doc_id % 6 == 0 else 0,
-                        )
-                    )
-                else:
-                    rgb = (
-                        doc_id % 256,
-                        (doc_id * 5 + 3) % 256,
-                        (doc_id * 11 + 7) % 256,
-                    )
-                    payloads.append(encode_jpeg(8, 8, [rgb] * 64))
-            yield pd.DataFrame({"id": pdf["doc_id"], "payload": payloads})
-
-    shaped = d.mapInPandas(build, schema="id long, payload binary")
+    shaped = doc_payloads(spark, sf_dir, payload)
     return pixel_stats(shaped)
 
 
@@ -1169,51 +1143,38 @@ def q128_y4m_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact int64 sums / plane size, so the DuckDB oracle recovers them
     arithmetically — a hash match proves header tokenization, marker
     walking, plane-size arithmetic under each subsampling, AND the
-    frame sampling stride. Both stages are Arrow-batched mapInPandas:
-    no shuffle, no collect, payloads never leave the executor."""
+    frame sampling stride."""
     from synthea_etl_spark.operators.multimodal import (
         encode_y4m,
         video_frame_stats,
     )
 
-    d = rebalance_by_key(
-        load(spark, sf_dir, "documents").select("doc_id"), "doc_id"
-    )
+    cs_cycle = ("C420jpeg", "C444", "C422", "Cmono")
 
-    def build(batches):
-        import pandas as pd
+    def payload(doc_id):
+        w = (doc_id % 2 + 1) * 2          # 2 or 4 (even: 420-safe)
+        h = (doc_id % 3 + 1) * 2          # 2, 4, 6
+        n_frames = doc_id % 3 + 2         # 2..4
+        cs = cs_cycle[doc_id % 4]
+        wd, hd = (2, 2) if cs.startswith("C420") else \
+            (1, 1) if cs == "C444" else (2, 1)
+        n_chroma = (w // wd) * (h // hd)
+        frames = []
+        for k in range(n_frames):
+            base = doc_id % 100 + 17 * k
+            y = bytes(base + j for j in range(w * h))
+            if cs == "Cmono":
+                frames.append((y, None, None))
+            else:
+                u = bytes(base + 29 + j for j in range(n_chroma))
+                v = bytes(base + 58 + j for j in range(n_chroma))
+                frames.append((y, u, v))
+        return encode_y4m(
+            w, h, frames, cs,
+            frame_params="Xsparkgraft" if doc_id % 5 == 0 else "",
+        )
 
-        cs_cycle = ("C420jpeg", "C444", "C422", "Cmono")
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w = (doc_id % 2 + 1) * 2          # 2 or 4 (even: 420-safe)
-                h = (doc_id % 3 + 1) * 2          # 2, 4, 6
-                n_frames = doc_id % 3 + 2         # 2..4
-                cs = cs_cycle[doc_id % 4]
-                wd, hd = (2, 2) if cs.startswith("C420") else \
-                    (1, 1) if cs == "C444" else (2, 1)
-                n_chroma = (w // wd) * (h // hd)
-                frames = []
-                for k in range(n_frames):
-                    base = doc_id % 100 + 17 * k
-                    y = bytes(base + j for j in range(w * h))
-                    if cs == "Cmono":
-                        frames.append((y, None, None))
-                    else:
-                        u = bytes(base + 29 + j for j in range(n_chroma))
-                        v = bytes(base + 58 + j for j in range(n_chroma))
-                        frames.append((y, u, v))
-                payloads.append(
-                    encode_y4m(
-                        w, h, frames, cs,
-                        frame_params="Xsparkgraft" if doc_id % 5 == 0 else "",
-                    )
-                )
-            yield pd.DataFrame({"id": pdf["doc_id"], "payload": payloads})
-
-    shaped = d.mapInPandas(build, schema="id long, payload binary")
+    shaped = doc_payloads(spark, sf_dir, payload)
     return video_frame_stats(shaped, every_n=2)
 
 
@@ -1268,53 +1229,37 @@ def q129_wav_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     path). audio_stats recovers exact int64-sum means distributed —
     a hash match proves RIFF chunk walking, fmt parsing, channel
     de-interleaving for both sample widths, and signed 16-bit
-    arithmetic. Both stages are Arrow-batched mapInPandas: no
-    shuffle, no collect, payloads never leave the executor."""
+    arithmetic."""
     from synthea_etl_spark.operators.multimodal import (
         audio_stats,
         encode_wav,
     )
 
-    d = rebalance_by_key(
-        load(spark, sf_dir, "documents").select("doc_id"), "doc_id"
-    )
-
-    def build(batches):
-        import struct
-
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                nch = doc_id % 2 + 1
-                bits = 8 if doc_id % 3 == 0 else 16
-                n = doc_id % 50 + 10
-                rate = 8000 + doc_id % 5 * 1000
-                if bits == 8:
-                    base = doc_id % 100  # max 99 + 2*58 + 1 = 216 < 256
-                    chans = [
-                        bytes(base + 2 * j + c for j in range(n))
-                        for c in range(nch)
-                    ]
-                else:
-                    base = doc_id % 1000 - 500
-                    chans = [
-                        struct.pack(
-                            f"<{n}h", *(base + 2 * j + c for j in range(n))
-                        )
-                        for c in range(nch)
-                    ]
-                payloads.append(
-                    encode_wav(
-                        rate, chans, bits,
-                        junk_chunk=b"pad" if doc_id % 7 == 0 else None,
-                    )
+    def payload(doc_id):
+        nch = doc_id % 2 + 1
+        bits = 8 if doc_id % 3 == 0 else 16
+        n = doc_id % 50 + 10
+        rate = 8000 + doc_id % 5 * 1000
+        if bits == 8:
+            base = doc_id % 100  # max 99 + 2*58 + 1 = 216 < 256
+            chans = [
+                bytes(base + 2 * j + c for j in range(n))
+                for c in range(nch)
+            ]
+        else:
+            base = doc_id % 1000 - 500
+            chans = [
+                struct.pack(
+                    f"<{n}h", *(base + 2 * j + c for j in range(n))
                 )
-            yield pd.DataFrame({"id": pdf["doc_id"], "payload": payloads})
+                for c in range(nch)
+            ]
+        return encode_wav(
+            rate, chans, bits,
+            junk_chunk=b"pad" if doc_id % 7 == 0 else None,
+        )
 
-    shaped = d.mapInPandas(build, schema="id long, payload binary")
+    shaped = doc_payloads(spark, sf_dir, payload)
     return audio_stats(shaped)
 
 
@@ -1435,58 +1380,44 @@ def q131_media_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         pixel_stats,
     )
 
-    d = rebalance_by_key(
-        load(spark, sf_dir, "documents").select("doc_id"), "doc_id"
-    )
+    def payload(doc_id):
+        w, h = 2, 2
+        base = doc_id % 200
+        px = [
+            (base + 3 * j, base + 3 * j + 1, base + 3 * j + 2)
+            for j in range(w * h)
+        ]
+        kind = doc_id % 4
+        if kind == 0:  # 24-bit bottom-up BMP, stride pad at w=2
+            stride = 8
+            rows = []
+            for r in (1, 0):  # bottom-up storage
+                row = b"".join(
+                    bytes((px[r * 2 + c][2], px[r * 2 + c][1], px[r * 2 + c][0]))
+                    for c in range(2)
+                )
+                rows.append(row.ljust(stride, b"\x00"))
+            raster = b"".join(rows)
+            return (
+                b"BM"
+                + (54 + len(raster)).to_bytes(4, "little")
+                + b"\x00\x00\x00\x00" + (54).to_bytes(4, "little")
+                + (40).to_bytes(4, "little")
+                + (2).to_bytes(4, "little", signed=True)
+                + (2).to_bytes(4, "little", signed=True)
+                + (1).to_bytes(2, "little") + (24).to_bytes(2, "little")
+                + (0).to_bytes(4, "little") + len(raster).to_bytes(4, "little")
+                + b"\x00" * 16
+                + raster
+            )
+        elif kind == 1:  # binary PPM
+            return b"P6\n2 2\n255\n" + b"".join(bytes(p) for p in px)
+        elif kind == 2:  # PNG, RGB, filter 0
+            return encode_png(w, h, px, colortype=2)
+        else:  # garbage -- must degrade, not fail
+            return b"\x00GARBAGE" + doc_id.to_bytes(4, "big")
 
-    def build(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h = 2, 2
-                base = doc_id % 200
-                px = [
-                    (base + 3 * j, base + 3 * j + 1, base + 3 * j + 2)
-                    for j in range(w * h)
-                ]
-                kind = doc_id % 4
-                if kind == 0:  # 24-bit bottom-up BMP, stride pad at w=2
-                    stride = 8
-                    rows = []
-                    for r in (1, 0):  # bottom-up storage
-                        row = b"".join(
-                            bytes((px[r * 2 + c][2], px[r * 2 + c][1], px[r * 2 + c][0]))
-                            for c in range(2)
-                        )
-                        rows.append(row.ljust(stride, b"\x00"))
-                    raster = b"".join(rows)
-                    payloads.append(
-                        b"BM"
-                        + (54 + len(raster)).to_bytes(4, "little")
-                        + b"\x00\x00\x00\x00" + (54).to_bytes(4, "little")
-                        + (40).to_bytes(4, "little")
-                        + (2).to_bytes(4, "little", signed=True)
-                        + (2).to_bytes(4, "little", signed=True)
-                        + (1).to_bytes(2, "little") + (24).to_bytes(2, "little")
-                        + (0).to_bytes(4, "little") + len(raster).to_bytes(4, "little")
-                        + b"\x00" * 16
-                        + raster
-                    )
-                elif kind == 1:  # binary PPM
-                    payloads.append(
-                        b"P6\n2 2\n255\n"
-                        + b"".join(bytes(p) for p in px)
-                    )
-                elif kind == 2:  # PNG, RGB, filter 0
-                    payloads.append(encode_png(w, h, px, colortype=2))
-                else:  # garbage -- must degrade, not fail
-                    payloads.append(b"\x00GARBAGE" + doc_id.to_bytes(4, "big"))
-            yield pd.DataFrame({"id": pdf["doc_id"], "payload": payloads})
-
-    shaped = d.mapInPandas(build, schema="id long, payload binary")
+    shaped = doc_payloads(spark, sf_dir, payload)
     return (
         pixel_stats(shaped)
         .groupBy("format")
@@ -1534,33 +1465,18 @@ def q132_wav_dominant_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_wav,
     )
 
-    d = rebalance_by_key(
-        load(spark, sf_dir, "documents").select("doc_id"), "doc_id"
-    )
+    n = 64
 
-    def build(batches):
-        import math
-        import struct
+    def payload(doc_id):
+        k = doc_id % 31 + 1
+        amp = 1000 + doc_id % 500
+        samples = [
+            round(amp * math.sin(2 * math.pi * k * j / n))
+            for j in range(n)
+        ]
+        return encode_wav(8000, [struct.pack(f"<{n}h", *samples)], 16)
 
-        import pandas as pd
-
-        n = 64
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                k = doc_id % 31 + 1
-                amp = 1000 + doc_id % 500
-                samples = [
-                    round(amp * math.sin(2 * math.pi * k * j / n))
-                    for j in range(n)
-                ]
-                payloads.append(
-                    encode_wav(8000, [struct.pack(f"<{n}h", *samples)], 16)
-                )
-            yield pd.DataFrame({"id": pdf["doc_id"], "payload": payloads})
-
-    shaped = d.mapInPandas(build, schema="id long, payload binary")
+    shaped = doc_payloads(spark, sf_dir, payload)
     return audio_spectral(shaped, n_fft=64)
 
 
@@ -1634,38 +1550,25 @@ def q134_gif_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     interlace bit flips by parity (order-blind for means — the same
     observation the Adam7 path uses), and doc_id%3==0 prepends a
     comment extension (the skip path). A hash match therefore proves
-    the LZW decode itself plus every descriptor walk. Arrow-batched
-    mapInPandas both ways; one rebalance of the pre-payload frame."""
+    the LZW decode itself plus every descriptor walk."""
     from synthea_etl_spark.operators.gif import encode_gif
     from synthea_etl_spark.operators.multimodal import pixel_stats
 
-    d = rebalance_by_key(
-        load(spark, sf_dir, "documents").select("doc_id"), "doc_id"
-    )
+    geoms = ((3, 2), (2, 3), (6, 1))
+    sizes = (1, 2, 3, 6)
 
-    def build(batches):
-        import pandas as pd
+    def payload(doc_id):
+        w, h = geoms[doc_id % 3]
+        p = sizes[doc_id % 4]
+        base = doc_id % 150
+        palette = [(base + 7 * i, base + 7 * i + 1, base + 7 * i + 2) for i in range(p)]
+        return encode_gif(
+            w, h, [j % p for j in range(6)], palette,
+            interlace=doc_id % 2 == 1,
+            comment=b"sparkgraft" if doc_id % 3 == 0 else None,
+        )
 
-        geoms = ((3, 2), (2, 3), (6, 1))
-        sizes = (1, 2, 3, 6)
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h = geoms[doc_id % 3]
-                p = sizes[doc_id % 4]
-                base = doc_id % 150
-                palette = [(base + 7 * i, base + 7 * i + 1, base + 7 * i + 2) for i in range(p)]
-                payloads.append(
-                    encode_gif(
-                        w, h, [j % p for j in range(6)], palette,
-                        interlace=doc_id % 2 == 1,
-                        comment=b"sparkgraft" if doc_id % 3 == 0 else None,
-                    )
-                )
-            yield pd.DataFrame({"id": pdf["doc_id"], "payload": payloads})
-
-    shaped = d.mapInPandas(build, schema="id long, payload binary")
+    shaped = doc_payloads(spark, sf_dir, payload)
     return pixel_stats(shaped)
 
 
@@ -1714,28 +1617,13 @@ def q135_wav_rms_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_wav,
     )
 
-    d = rebalance_by_key(
-        load(spark, sf_dir, "documents").select("doc_id"), "doc_id"
-    )
+    def payload(doc_id):
+        base = doc_id % 800 - 400
+        n = 16 * (doc_id % 3 + 1) + doc_id % 5  # partial tail to drop
+        vals = [base + 2 * j for j in range(n)]
+        return encode_wav(8000, [struct.pack(f"<{n}h", *vals)], 16)
 
-    def build(batches):
-        import struct
-
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                base = doc_id % 800 - 400
-                n = 16 * (doc_id % 3 + 1) + doc_id % 5  # partial tail to drop
-                vals = [base + 2 * j for j in range(n)]
-                payloads.append(
-                    encode_wav(8000, [struct.pack(f"<{n}h", *vals)], 16)
-                )
-            yield pd.DataFrame({"id": pdf["doc_id"], "payload": payloads})
-
-    shaped = d.mapInPandas(build, schema="id long, payload binary")
+    shaped = doc_payloads(spark, sf_dir, payload)
     return audio_rms_windows(shaped, window=16)
 
 
@@ -1783,39 +1671,25 @@ def q136_gif_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from synthea_etl_spark.operators.gif import encode_gif_animation
     from synthea_etl_spark.operators.multimodal import gif_frame_stats
 
-    d = rebalance_by_key(
-        load(spark, sf_dir, "documents").select("doc_id"), "doc_id"
-    )
+    geoms = ((3, 2), (2, 3), (6, 1))
+    sizes = (1, 2, 3, 6)
 
-    def build(batches):
-        import pandas as pd
+    def payload(doc_id):
+        w, h = geoms[doc_id % 3]
+        p = sizes[doc_id % 4]
+        base = doc_id % 140
+        frames = []
+        for k in range(doc_id % 3 + 2):
+            pal = [
+                (base + 11 * k + 7 * i,
+                 base + 11 * k + 7 * i + 1,
+                 base + 11 * k + 7 * i + 2)
+                for i in range(p)
+            ]
+            frames.append(([j % p for j in range(6)], pal))
+        return encode_gif_animation(w, h, frames, loop=doc_id % 4 == 0)
 
-        geoms = ((3, 2), (2, 3), (6, 1))
-        sizes = (1, 2, 3, 6)
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h = geoms[doc_id % 3]
-                p = sizes[doc_id % 4]
-                base = doc_id % 140
-                frames = []
-                for k in range(doc_id % 3 + 2):
-                    pal = [
-                        (base + 11 * k + 7 * i,
-                         base + 11 * k + 7 * i + 1,
-                         base + 11 * k + 7 * i + 2)
-                        for i in range(p)
-                    ]
-                    frames.append(([j % p for j in range(6)], pal))
-                payloads.append(
-                    encode_gif_animation(
-                        w, h, frames, loop=doc_id % 4 == 0
-                    )
-                )
-            yield pd.DataFrame({"id": pdf["doc_id"], "payload": payloads})
-
-    shaped = d.mapInPandas(build, schema="id long, payload binary")
+    shaped = doc_payloads(spark, sf_dir, payload)
     return gif_frame_stats(shaped, every_n=2)
 
 
@@ -1872,51 +1746,36 @@ def q137_progressive_jpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirrored verbatim by the oracle). The nonzero-AC refinement paths
     that cannot be arithmetically exact are pinned by the
     baseline-vs-progressive differential property test
-    (tests/test_jpeg_progressive.py). Arrow-batched mapInPandas,
-    rebalanced off the narrow scan; payloads never leave executors."""
+    (tests/test_jpeg_progressive.py)."""
     from synthea_etl_spark.operators.jpeg import encode_jpeg_progressive
     from synthea_etl_spark.operators.multimodal import pixel_stats
 
-    d = rebalance_by_key(
-        load(spark, sf_dir, "documents").select("doc_id"), "doc_id"
-    )
+    splits = (1, 6, 33)
 
-    def build(batches):
-        import pandas as pd
+    def payload(doc_id):
+        kw = dict(
+            dc_al=doc_id % 3,
+            ac_al=doc_id % 4,
+            band_split=splits[doc_id % 3],
+            restart_interval=1 if doc_id % 6 == 0 else 0,
+        )
+        if doc_id % 2 == 0:
+            v0, v1 = doc_id % 251, (doc_id * 3 + 17) % 251
+            pix = [
+                ((v0 if x < 8 else v1),) * 3
+                for _ in range(8)
+                for x in range(16)
+            ]
+            return encode_jpeg_progressive(16, 8, pix, gray=True, **kw)
+        else:
+            rgb = (
+                doc_id % 256,
+                (doc_id * 5 + 3) % 256,
+                (doc_id * 11 + 7) % 256,
+            )
+            return encode_jpeg_progressive(8, 8, [rgb] * 64, **kw)
 
-        splits = (1, 6, 33)
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                kw = dict(
-                    dc_al=doc_id % 3,
-                    ac_al=doc_id % 4,
-                    band_split=splits[doc_id % 3],
-                    restart_interval=1 if doc_id % 6 == 0 else 0,
-                )
-                if doc_id % 2 == 0:
-                    v0, v1 = doc_id % 251, (doc_id * 3 + 17) % 251
-                    pix = [
-                        ((v0 if x < 8 else v1),) * 3
-                        for _ in range(8)
-                        for x in range(16)
-                    ]
-                    payloads.append(
-                        encode_jpeg_progressive(16, 8, pix, gray=True, **kw)
-                    )
-                else:
-                    rgb = (
-                        doc_id % 256,
-                        (doc_id * 5 + 3) % 256,
-                        (doc_id * 11 + 7) % 256,
-                    )
-                    payloads.append(
-                        encode_jpeg_progressive(8, 8, [rgb] * 64, **kw)
-                    )
-            yield pd.DataFrame({"id": pdf["doc_id"], "payload": payloads})
-
-    shaped = d.mapInPandas(build, schema="id long, payload binary")
+    shaped = doc_payloads(spark, sf_dir, payload)
     return pixel_stats(shaped)
 
 
@@ -1941,34 +1800,18 @@ def q138_g711_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Even doc_ids use mu-law, odd A-law; a hash match over all 256
     byte values (doc_id cycles them) proves the full expansion tables
     of BOTH laws, the 8-bit frame de-interleave, and the fmt-tag
-    routing in parse_wav. Same Arrow-batched no-shuffle shape as
-    q129."""
+    routing in parse_wav."""
     from synthea_etl_spark.operators.audio_codecs import encode_wav_g711
     from synthea_etl_spark.operators.multimodal import audio_stats
 
-    d = rebalance_by_key(
-        load(spark, sf_dir, "documents").select("doc_id"), "doc_id"
-    )
+    def payload(doc_id):
+        law = "ulaw" if doc_id % 2 == 0 else "alaw"
+        b0 = doc_id % 256
+        b1 = (doc_id * 7 + 13) % 256
+        n = doc_id % 5 + 2
+        return encode_wav_g711(8000, [bytes([b0] * n), bytes([b1] * n)], law)
 
-    def build(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                law = "ulaw" if doc_id % 2 == 0 else "alaw"
-                b0 = doc_id % 256
-                b1 = (doc_id * 7 + 13) % 256
-                n = doc_id % 5 + 2
-                payloads.append(
-                    encode_wav_g711(
-                        8000, [bytes([b0] * n), bytes([b1] * n)], law
-                    )
-                )
-            yield pd.DataFrame({"id": pdf["doc_id"], "payload": payloads})
-
-    shaped = d.mapInPandas(build, schema="id long, payload binary")
+    shaped = doc_payloads(spark, sf_dir, payload)
     return audio_stats(shaped)
 
 
@@ -2036,30 +1879,19 @@ def q139_adpcm_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     parsing, nibble unpacking, and the zero-delta fixed point of the
     step state machine; the nonzero-nibble dynamics are pinned by the
     encoder/decoder state-agreement property test
-    (tests/test_audio_codecs.py). Same no-shuffle shape as q129."""
+    (tests/test_audio_codecs.py)."""
     from synthea_etl_spark.operators.audio_codecs import encode_wav_ima_adpcm
     from synthea_etl_spark.operators.multimodal import audio_stats
 
-    d = rebalance_by_key(
-        load(spark, sf_dir, "documents").select("doc_id"), "doc_id"
-    )
+    def payload(doc_id):
+        nblocks = doc_id % 3 + 1
+        sig: list[int] = []
+        for k in range(nblocks):
+            p = (doc_id * 31 + 9973 * k) % 60001 - 30000
+            sig.extend([p] * 17)
+        return encode_wav_ima_adpcm(8000, [sig], 17)
 
-    def build(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                nblocks = doc_id % 3 + 1
-                sig: list[int] = []
-                for k in range(nblocks):
-                    p = (doc_id * 31 + 9973 * k) % 60001 - 30000
-                    sig.extend([p] * 17)
-                payloads.append(encode_wav_ima_adpcm(8000, [sig], 17))
-            yield pd.DataFrame({"id": pdf["doc_id"], "payload": payloads})
-
-    shaped = d.mapInPandas(build, schema="id long, payload binary")
+    shaped = doc_payloads(spark, sf_dir, payload)
     return audio_stats(shaped)
 
 
@@ -2140,53 +1972,37 @@ def q141_mjpeg_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     splices in the T.81 Annex-K defaults. avi_frame_stats keeps every
     2nd frame (1-to-many explosion). A hash match proves the
     container walk, handler validation, frame/container dimension
-    cross-check, DHT-less decode, AND the sampling stride. Same
-    Arrow-batched no-shuffle shape as q128/q136."""
+    cross-check, DHT-less decode, AND the sampling stride."""
     from synthea_etl_spark.operators.avi import (
         avi_frame_stats,
         encode_avi_mjpeg,
     )
     from synthea_etl_spark.operators.jpeg import encode_jpeg
 
-    d = rebalance_by_key(
-        load(spark, sf_dir, "documents").select("doc_id"), "doc_id"
-    )
-
-    def build(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                nf = doc_id % 3 + 2
-                frames = []
-                for k in range(nf):
-                    if doc_id % 2 == 0:
-                        v0 = (doc_id + 7 * k) % 251
-                        v1 = (doc_id * 3 + 17 + 7 * k) % 251
-                        pix = [
-                            ((v0 if x < 8 else v1),) * 3
-                            for _ in range(8)
-                            for x in range(16)
-                        ]
-                        frames.append(encode_jpeg(16, 8, pix, gray=True))
-                    else:
-                        rgb = (
-                            (doc_id + 13 * k) % 256,
-                            (doc_id * 5 + 3 + 13 * k) % 256,
-                            (doc_id * 11 + 7 + 13 * k) % 256,
-                        )
-                        frames.append(encode_jpeg(8, 8, [rgb] * 64))
-                w = 16 if doc_id % 2 == 0 else 8
-                payloads.append(
-                    encode_avi_mjpeg(
-                        w, 8, frames, strip_dht=doc_id % 5 == 0
-                    )
+    def payload(doc_id):
+        nf = doc_id % 3 + 2
+        frames = []
+        for k in range(nf):
+            if doc_id % 2 == 0:
+                v0 = (doc_id + 7 * k) % 251
+                v1 = (doc_id * 3 + 17 + 7 * k) % 251
+                pix = [
+                    ((v0 if x < 8 else v1),) * 3
+                    for _ in range(8)
+                    for x in range(16)
+                ]
+                frames.append(encode_jpeg(16, 8, pix, gray=True))
+            else:
+                rgb = (
+                    (doc_id + 13 * k) % 256,
+                    (doc_id * 5 + 3 + 13 * k) % 256,
+                    (doc_id * 11 + 7 + 13 * k) % 256,
                 )
-            yield pd.DataFrame({"id": pdf["doc_id"], "payload": payloads})
+                frames.append(encode_jpeg(8, 8, [rgb] * 64))
+        w = 16 if doc_id % 2 == 0 else 8
+        return encode_avi_mjpeg(w, 8, frames, strip_dht=doc_id % 5 == 0)
 
-    shaped = d.mapInPandas(build, schema="id long, payload binary")
+    shaped = doc_payloads(spark, sf_dir, payload)
     return avi_frame_stats(shaped, every_n=2)
 
 
@@ -2258,49 +2074,33 @@ def q142_flac_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     cycles channel count (mono/stereo), subframe type (fixed2 vs the
     LPC code path), partition order (0 vs 2), and mid/side
     decorrelation; block size 32 forces the 16-bit blocksize-escape
-    header path and multi-frame streams. Same Arrow-batched
-    no-shuffle shape as q129/q138."""
+    header path and multi-frame streams."""
     from synthea_etl_spark.operators.flac import encode_flac, flac_stats
 
-    d = rebalance_by_key(
-        load(spark, sf_dir, "documents").select("doc_id"), "doc_id"
-    )
+    def payload(doc_id):
+        nch = doc_id % 2 + 1
+        n = doc_id % 60 + 20
+        chans = [
+            [
+                (doc_id * 5 + 7 * c) % 500 - 250 + 3 * j
+                for j in range(n)
+            ]
+            for c in range(nch)
+        ]
+        return encode_flac(
+            44100,
+            chans,
+            bits=16,
+            block_size=32,
+            stereo_mode=(
+                "mid_side" if nch == 2 and doc_id % 4 == 1
+                else "independent"
+            ),
+            subframe_mode="lpc2" if doc_id % 3 == 0 else "fixed2",
+            partition_order=2 if doc_id % 5 == 0 else 0,
+        )
 
-    def build(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                nch = doc_id % 2 + 1
-                n = doc_id % 60 + 20
-                chans = [
-                    [
-                        (doc_id * 5 + 7 * c) % 500 - 250 + 3 * j
-                        for j in range(n)
-                    ]
-                    for c in range(nch)
-                ]
-                payloads.append(
-                    encode_flac(
-                        44100,
-                        chans,
-                        bits=16,
-                        block_size=32,
-                        stereo_mode=(
-                            "mid_side" if nch == 2 and doc_id % 4 == 1
-                            else "independent"
-                        ),
-                        subframe_mode=(
-                            "lpc2" if doc_id % 3 == 0 else "fixed2"
-                        ),
-                        partition_order=2 if doc_id % 5 == 0 else 0,
-                    )
-                )
-            yield pd.DataFrame({"id": pdf["doc_id"], "payload": payloads})
-
-    shaped = d.mapInPandas(build, schema="id long, payload binary")
+    shaped = doc_payloads(spark, sf_dir, payload)
     return flac_stats(shaped)
 
 
@@ -2340,38 +2140,26 @@ def q143_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Content-Length framing, and explodes to one row per record. A
     hash match proves gzip member boundaries (unused_data walking),
     header parsing, payload framing against Content-Length, the CRLF
-    CRLF trailer check, AND UTF-8 payload decoding. Same Arrow-
-    batched no-shuffle shape as the frame decoders."""
+    CRLF trailer check, AND UTF-8 payload decoding."""
     from synthea_etl_spark.operators.warc import (
         encode_warc_gz,
         warc_records,
     )
 
-    d = rebalance_by_key(
-        load(spark, sf_dir, "documents").select("doc_id"), "doc_id"
-    )
+    def payload(doc_id):
+        recs = []
+        for k in range(doc_id % 3 + 1):
+            text = f"doc {doc_id} rec {k} " * (k + 1)
+            recs.append(
+                {
+                    "type": "response" if k % 2 == 0 else "request",
+                    "uri": f"http://crawl.test/{doc_id}/{k}",
+                    "payload": text.encode("utf-8"),
+                }
+            )
+        return encode_warc_gz(recs)
 
-    def build(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                recs = []
-                for k in range(doc_id % 3 + 1):
-                    text = f"doc {doc_id} rec {k} " * (k + 1)
-                    recs.append(
-                        {
-                            "type": "response" if k % 2 == 0 else "request",
-                            "uri": f"http://crawl.test/{doc_id}/{k}",
-                            "payload": text.encode("utf-8"),
-                        }
-                    )
-                payloads.append(encode_warc_gz(recs))
-            yield pd.DataFrame({"id": pdf["doc_id"], "payload": payloads})
-
-    shaped = d.mapInPandas(build, schema="id long, payload binary")
+    shaped = doc_payloads(spark, sf_dir, payload)
     return warc_records(shaped)
 
 
@@ -2417,37 +2205,24 @@ def q144_tiff_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         pixel_stats,
     )
 
-    d = rebalance_by_key(
-        load(spark, sf_dir, "documents").select("doc_id"), "doc_id"
-    )
+    def payload(doc_id):
+        w, h = doc_id % 3 + 2, doc_id % 2 + 1
+        base = doc_id % 200
+        gray = doc_id % 5 in (0, 3)
+        if gray:
+            px = [(base + 3 * j,) * 3 for j in range(w * h)]
+        else:
+            px = [
+                (base + 3 * j, base + 3 * j + 1, base + 3 * j + 2)
+                for j in range(w * h)
+            ]
+        return encode_tiff(
+            w, h, px, gray=gray,
+            big_endian=doc_id % 2 == 0,
+            rows_per_strip=doc_id % 3,
+        )
 
-    def build(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h = doc_id % 3 + 2, doc_id % 2 + 1
-                base = doc_id % 200
-                gray = doc_id % 5 in (0, 3)
-                if gray:
-                    px = [(base + 3 * j,) * 3 for j in range(w * h)]
-                else:
-                    px = [
-                        (base + 3 * j, base + 3 * j + 1, base + 3 * j + 2)
-                        for j in range(w * h)
-                    ]
-                payloads.append(
-                    encode_tiff(
-                        w, h, px, gray=gray,
-                        big_endian=doc_id % 2 == 0,
-                        rows_per_strip=doc_id % 3,
-                    )
-                )
-            yield pd.DataFrame({"id": pdf["doc_id"], "payload": payloads})
-
-    shaped = d.mapInPandas(build, schema="id long, payload binary")
+    shaped = doc_payloads(spark, sf_dir, payload)
     return pixel_stats(shaped)
 
 
@@ -2547,45 +2322,33 @@ def q156_ico_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ICONDIR walk, both member decoders (doubled-height AND-mask BMP
     and embedded PNG), and the largest-member selection rule
     regardless of directory position. Solid colors keep the means
-    closed-form. Same Arrow-batched no-shuffle shape as q125."""
+    closed-form."""
     from synthea_etl_spark.operators.multimodal import (
         encode_ico,
         pixel_stats,
     )
 
-    d = rebalance_by_key(
-        load(spark, sf_dir, "documents").select("doc_id"), "doc_id"
-    )
+    def payload(doc_id):
+        side = doc_id % 3 + 5
+        big = np.full(
+            (side, side, 3),
+            [
+                doc_id % 256,
+                (doc_id * 7 + 3) % 256,
+                (doc_id * 13 + 11) % 256,
+            ],
+            dtype=np.uint8,
+        )
+        small = np.full(
+            (4, 4, 3), [(doc_id * 31) % 256, 0, 255], dtype=np.uint8
+        )
+        kinds = ("bmp", "png") if doc_id % 2 == 0 else ("png", "bmp")
+        members = [(small, kinds[0]), (big, kinds[1])]
+        if doc_id % 4 < 2:
+            members.reverse()  # largest first vs last
+        return encode_ico(members)
 
-    def build(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                side = doc_id % 3 + 5
-                big = np.full(
-                    (side, side, 3),
-                    [
-                        doc_id % 256,
-                        (doc_id * 7 + 3) % 256,
-                        (doc_id * 13 + 11) % 256,
-                    ],
-                    dtype=np.uint8,
-                )
-                small = np.full(
-                    (4, 4, 3), [(doc_id * 31) % 256, 0, 255], dtype=np.uint8
-                )
-                kinds = ("bmp", "png") if doc_id % 2 == 0 else ("png", "bmp")
-                members = [(small, kinds[0]), (big, kinds[1])]
-                if doc_id % 4 < 2:
-                    members.reverse()  # largest first vs last
-                payloads.append(encode_ico(members))
-            yield pd.DataFrame({"id": pdf["doc_id"], "payload": payloads})
-
-    shaped = d.mapInPandas(build, schema="id long, payload binary")
+    shaped = doc_payloads(spark, sf_dir, payload)
     return pixel_stats(shaped)
 
 
@@ -2688,40 +2451,27 @@ def q154_jpeg_subsampled_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact JFIF YCbCr round trip q127's oracle arithmetic mirrors. A
     hash match proves interleaved-MCU geometry (multiple luma blocks
     per MCU with per-component DC predictors), sampling-factor
-    parsing, and chroma plane reassembly across all three layouts.
-    Same Arrow-batched no-shuffle shape as q127/q137."""
+    parsing, and chroma plane reassembly across all three layouts."""
     from synthea_etl_spark.operators.jpeg import encode_jpeg
     from synthea_etl_spark.operators.multimodal import pixel_stats
 
-    d = rebalance_by_key(
-        load(spark, sf_dir, "documents").select("doc_id"), "doc_id"
-    )
+    subs = ("420", "422", "444")
+    dims = ((16, 16), (16, 8), (8, 8))
 
-    def build(batches):
-        import pandas as pd
+    def payload(doc_id):
+        sub = subs[doc_id % 3]
+        w, h = dims[doc_id % 3]
+        rgb = (
+            doc_id % 256,
+            (doc_id * 5 + 3) % 256,
+            (doc_id * 11 + 7) % 256,
+        )
+        return encode_jpeg(
+            w, h, [rgb] * (w * h), subsampling=sub,
+            restart_interval=1 if doc_id % 5 == 0 else 0,
+        )
 
-        subs = ("420", "422", "444")
-        dims = ((16, 16), (16, 8), (8, 8))
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                sub = subs[doc_id % 3]
-                w, h = dims[doc_id % 3]
-                rgb = (
-                    doc_id % 256,
-                    (doc_id * 5 + 3) % 256,
-                    (doc_id * 11 + 7) % 256,
-                )
-                payloads.append(
-                    encode_jpeg(
-                        w, h, [rgb] * (w * h), subsampling=sub,
-                        restart_interval=1 if doc_id % 5 == 0 else 0,
-                    )
-                )
-            yield pd.DataFrame({"id": pdf["doc_id"], "payload": payloads})
-
-    shaped = d.mapInPandas(build, schema="id long, payload binary")
+    shaped = doc_payloads(spark, sf_dir, payload)
     return pixel_stats(shaped)
 
 
@@ -2779,42 +2529,25 @@ def q153_wav_deep_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_wav_float32,
     )
 
-    d = rebalance_by_key(
-        load(spark, sf_dir, "documents").select("doc_id"), "doc_id"
-    )
+    def payload(doc_id):
+        n = doc_id % 6 + 2
+        if doc_id % 2 == 0:
+            v0 = (doc_id % 1000) / 8.0
+            v1 = -((doc_id * 3 + 5) % 1000) / 8.0
+            return encode_wav_float32(44100, [[v0] * n, [v1] * n])
+        else:
+            s0 = doc_id * 1009 % (1 << 24) - (1 << 23)
+            s1 = (doc_id * 2003 + 7) % (1 << 24) - (1 << 23)
+            return encode_wav(
+                48000,
+                [
+                    struct.pack("<i", s0)[:3] * n,
+                    struct.pack("<i", s1)[:3] * n,
+                ],
+                bits=24,
+            )
 
-    def build(batches):
-        import struct
-
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                n = doc_id % 6 + 2
-                if doc_id % 2 == 0:
-                    v0 = (doc_id % 1000) / 8.0
-                    v1 = -((doc_id * 3 + 5) % 1000) / 8.0
-                    payloads.append(
-                        encode_wav_float32(44100, [[v0] * n, [v1] * n])
-                    )
-                else:
-                    s0 = doc_id * 1009 % (1 << 24) - (1 << 23)
-                    s1 = (doc_id * 2003 + 7) % (1 << 24) - (1 << 23)
-                    payloads.append(
-                        encode_wav(
-                            48000,
-                            [
-                                struct.pack("<i", s0)[:3] * n,
-                                struct.pack("<i", s1)[:3] * n,
-                            ],
-                            bits=24,
-                        )
-                    )
-            yield pd.DataFrame({"id": pdf["doc_id"], "payload": payloads})
-
-    shaped = d.mapInPandas(build, schema="id long, payload binary")
+    shaped = doc_payloads(spark, sf_dir, payload)
     return audio_stats(shaped)
 
 
@@ -2854,43 +2587,30 @@ def q152_png_sub8_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     resolved means are 17*mean(code)+offset. A hash match proves
     MSB-first bit unpacking with padding-bit drop, the 1-byte filter
     unit, palette resolution at narrow depths, and interlaced
-    sub-byte rows. Same Arrow-batched no-shuffle shape as q126."""
+    sub-byte rows."""
     from synthea_etl_spark.operators.multimodal import (
         encode_png,
         pixel_stats,
     )
 
-    d = rebalance_by_key(
-        load(spark, sf_dir, "documents").select("doc_id"), "doc_id"
-    )
+    def payload(doc_id):
+        depth = 1 << (doc_id % 3)
+        w, h = doc_id % 3 + 2, doc_id % 2 + 1
+        maxv = (1 << depth) - 1
+        codes = [j % (maxv + 1) for j in range(w * h)]
+        if doc_id % 2 == 0:
+            px = [(c,) * 3 for c in codes]
+            ct = 0
+        else:
+            px = [(17 * c, 17 * c + 1, 17 * c + 2) for c in codes]
+            ct = 3
+        return encode_png(
+            w, h, px, colortype=ct, bitdepth=depth,
+            interlace=1 if doc_id % 7 == 0 else 0,
+            filters=[doc_id % 5] * h,
+        )
 
-    def build(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                depth = 1 << (doc_id % 3)
-                w, h = doc_id % 3 + 2, doc_id % 2 + 1
-                maxv = (1 << depth) - 1
-                codes = [j % (maxv + 1) for j in range(w * h)]
-                if doc_id % 2 == 0:
-                    px = [(c,) * 3 for c in codes]
-                    ct = 0
-                else:
-                    px = [(17 * c, 17 * c + 1, 17 * c + 2) for c in codes]
-                    ct = 3
-                payloads.append(
-                    encode_png(
-                        w, h, px, colortype=ct, bitdepth=depth,
-                        interlace=1 if doc_id % 7 == 0 else 0,
-                        filters=[doc_id % 5] * h,
-                    )
-                )
-            yield pd.DataFrame({"id": pdf["doc_id"], "payload": payloads})
-
-    shaped = d.mapInPandas(build, schema="id long, payload binary")
+    shaped = doc_payloads(spark, sf_dir, payload)
     return pixel_stats(shaped)
 
 
@@ -3134,38 +2854,27 @@ def q148_crawl_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         warc_records,
     )
 
-    d = rebalance_by_key(
-        load(spark, sf_dir, "documents").select("doc_id"), "doc_id"
-    )
+    def payload(doc_id):
+        page = (
+            "<html><head><script>track();</script></head>"
+            f"<body><h1>Title</h1><p>page {doc_id % 100} of "
+            "the &amp; corpus</p></body></html>"
+        )
+        recs = [
+            {
+                "type": "response",
+                "uri": f"http://crawl.test/{doc_id}",
+                "payload": page.encode("utf-8"),
+            },
+            {
+                "type": "request",
+                "uri": f"http://crawl.test/{doc_id}",
+                "payload": b"GET /",
+            },
+        ]
+        return encode_warc_gz(recs)
 
-    def build(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                page = (
-                    "<html><head><script>track();</script></head>"
-                    f"<body><h1>Title</h1><p>page {doc_id % 100} of "
-                    "the &amp; corpus</p></body></html>"
-                )
-                recs = [
-                    {
-                        "type": "response",
-                        "uri": f"http://crawl.test/{doc_id}",
-                        "payload": page.encode("utf-8"),
-                    },
-                    {
-                        "type": "request",
-                        "uri": f"http://crawl.test/{doc_id}",
-                        "payload": b"GET /",
-                    },
-                ]
-                payloads.append(encode_warc_gz(recs))
-            yield pd.DataFrame({"id": pdf["doc_id"], "payload": payloads})
-
-    shaped = d.mapInPandas(build, schema="id long, payload binary")
+    shaped = doc_payloads(spark, sf_dir, payload)
     pages = (
         warc_records(shaped)
         .filter(F.col("warc_type") == "response")

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 import synthea_etl_spark.operators.dedup as D
 import synthea_etl_spark.operators.similarity as S
-from synthea_etl_spark.plans.common import QuerySpec, load
+from synthea_etl_spark.plans.common import QuerySpec, doc_payloads, load
 
 
 # ---------------------------------------------------------------------------
@@ -196,28 +196,9 @@ def q168_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     3 bands of 20 bits, never all-pairs). Same 100 TB shape as q159:
     narrow-scan rebalance → one Arrow decode stage → banded self-join
     → bit_count verify."""
-    import pandas as pd
-
     from synthea_etl_spark.operators.multimodal import phash_fingerprints
-    from synthea_etl_spark.operators.util import rebalance_by_key
 
-    d = rebalance_by_key(
-        load(spark, sf_dir, "documents").select("doc_id"), "doc_id"
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf["doc_id"],
-                    "payload": [
-                        _phash_fixture_raster(int(i)) for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    shaped = d.mapInPandas(gen, "id long, payload binary")
-    fps = phash_fingerprints(shaped)
+    fps = phash_fingerprints(doc_payloads(spark, sf_dir, _phash_fixture_raster))
     return D.hamming_near_pairs(fps, "id", "phash", 60, 2)
 
 
@@ -463,33 +444,18 @@ def q172_raster_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint group. Output: (doc_id, keeper, keep). Same 100 TB
     shape as exact text dedup (q30): one Arrow decode stage, one
     shuffle on the 32-hex key."""
-    import pandas as pd
-
     from synthea_etl_spark.operators.multimodal import (
         encode_ppm,
         raster_exact_fingerprints,
     )
-    from synthea_etl_spark.operators.util import rebalance_by_key
     from pyspark.sql import Window
 
-    d = rebalance_by_key(
-        load(spark, sf_dir, "documents").select("doc_id"), "doc_id"
-    )
+    def payload(doc_id):
+        c, m = divmod(doc_id, 3)
+        px = _q172_pixels(c, unique=m == 2)
+        return _encode_bmp24(px) if m == 1 else encode_ppm(px)
 
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                c, m = divmod(int(i), 3)
-                px = _q172_pixels(c, unique=m == 2)
-                payloads.append(
-                    _encode_bmp24(px) if m == 1 else encode_ppm(px)
-                )
-            yield pd.DataFrame({"id": pdf["doc_id"], "payload": payloads})
-
-    fps = raster_exact_fingerprints(
-        d.mapInPandas(gen, "id long, payload binary")
-    )
+    fps = raster_exact_fingerprints(doc_payloads(spark, sf_dir, payload))
     w = Window.partitionBy("raster_md5")
     return (
         fps.withColumn("keeper", F.min("id").over(w))

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from synthea_etl_spark.operators import dedup as D
 from synthea_etl_spark.operators import multimodal as M
 from synthea_etl_spark.operators import similarity as S
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, SF_SMALL
 
 
 @pytest.fixture(scope="module")
@@ -202,7 +202,7 @@ def test_exact_dedup_keeps_first(spark):
 
 def test_multimodal_decode_stub_schema_and_values(spark, documents):
     payloads = M.attach_payload(documents.limit(50), "text", "doc_id")
-    feats = M.decode_features(payloads, fake=True)
+    feats = M.decode_features(payloads)
     assert feats.columns == ["id", "n_bytes", "mean_byte", "head_hex", "content_type"]
     rows = feats.collect()
     assert len(rows) == 50
@@ -212,6 +212,35 @@ def test_multimodal_decode_stub_schema_and_values(spark, documents):
         assert r.n_bytes == len(raw)
         assert r.head_hex == raw[:8].hex()
         assert abs(r.mean_byte - sum(raw) / len(raw)) < 1e-9
+
+
+def test_doc_payloads_one_arrow_stage_per_document(spark):
+    """plans.common.doc_payloads: one (id, payload == fn(id)) row per
+    document, built by one MapInPandas with no Exchange other than the
+    one rebalance_by_key may add over the doc_id scan."""
+    from synthea_etl_spark.operators.util import rebalance_by_key
+    from synthea_etl_spark.plans.common import doc_payloads, load
+
+    def fn(doc_id):
+        return doc_id.to_bytes(8, "big") * (doc_id % 3)
+
+    def final_plan(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan.split("== Initial Plan ==")[0]
+
+    out = doc_payloads(spark, SF_SMALL, fn)
+    assert out.dtypes == [("id", "bigint"), ("payload", "binary")]
+    rows = out.collect()
+    docs = load(spark, SF_SMALL, "documents").select("doc_id")
+    assert sorted(r.id for r in rows) == sorted(r.doc_id for r in docs.collect())
+    assert all(bytes(r.payload) == fn(r.id) for r in rows)
+
+    plan = final_plan(out)
+    rebalanced = rebalance_by_key(docs, "doc_id")
+    rebalanced.collect()
+    assert plan.count("MapInPandas") == 1
+    assert plan.count("Exchange") == final_plan(rebalanced).count("Exchange") <= 1
+    assert plan.count("Exchange") == plan.count("Exchange hashpartitioning(doc_id")
 
 
 def test_multimodal_resize_schema_and_determinism(spark, documents):
@@ -332,13 +361,6 @@ def test_image_metadata_distributed_over_real_files(spark, tmp_path):
     assert named["a.png"].n_bytes == len(_real_png(64, 32))
 
 
-def test_multimodal_decode_without_codec_raises(spark, documents):
-    payloads = M.attach_payload(documents.limit(5), "text", "doc_id")
-    with pytest.raises(Exception) as ei:
-        M.decode_features(payloads, fake=False).collect()
-    assert "NotImplementedError" in str(ei.value) or "media decode" in str(ei.value)
-
-
 def test_multimodal_binary_file_source(spark, tmp_path):
     """The real media ingestion path: spark.read.format('binaryFile')
     over raw files -> the engine's multimodal shape (id, payload,
@@ -359,7 +381,7 @@ def test_multimodal_binary_file_source(spark, tmp_path):
             F.lit("application/octet-stream").alias("content_type"),
         ).alias("meta"),
     )
-    feats = {r.id: r for r in M.decode_features(shaped, fake=True).collect()}
+    feats = {r.id: r for r in M.decode_features(shaped).collect()}
     assert set(feats) == {0, 1, 2, 3}
     for i in range(4):
         b = payloads[f"f{i}.bin"]

@@ -20,11 +20,9 @@ def _backdate_flips(store: str, past: float) -> None:
     round-12 ADVICE fix, the graced GC judges each superseded dir
     against the sidecar of the flip that superseded it, not the main
     watermark file's mtime."""
-    from synthea_etl_spark.operators.dedup import (
-        _compaction_watermark_path,
-    )
+    from synthea_etl_spark.operators.store import watermark_path
 
-    wmp = _compaction_watermark_path(store)
+    wmp = watermark_path(store)
     os.utime(wmp, (past, past))
     base = os.path.basename(wmp) + "."
     for d in os.listdir(store):
@@ -39,7 +37,6 @@ def test_gc_grace_defers_counting_slice_deletion(spark, tmp_path):
     filter, and an explicit gc call deletes them only after the
     grace elapses."""
     from synthea_etl_spark.operators.dedup import (
-        _compaction_watermark_path,
         compact_counting_slices,
         counting_store_totals,
         gc_counting_slices,
@@ -93,7 +90,6 @@ def test_gc_grace_defers_counting_slice_deletion(spark, tmp_path):
 def test_gc_grace_defers_batch_partition_deletion(spark, tmp_path):
     """Same contract on the row-set (batch_id) stores."""
     from synthea_etl_spark.operators.dedup import (
-        _compaction_watermark_path,
         batch_watermark_filter,
         compact_batch_partitions,
         gc_batch_partitions,
@@ -147,11 +143,11 @@ def test_graced_gc_under_fast_compaction_cadence(spark, tmp_path):
     (the per-flip sidecars), so old generations are collected even
     while the newest flip is fresh."""
     from synthea_etl_spark.operators.dedup import (
-        _compaction_watermark_path,
         compact_counting_slices,
         counting_store_totals,
         gc_counting_slices,
     )
+    from synthea_etl_spark.operators.store import watermark_path
 
     store = str(tmp_path / "store")
     for b, rows in enumerate([[("a", 1)], [("a", 2)], [("a", 4)]]):
@@ -170,7 +166,7 @@ def test_graced_gc_under_fast_compaction_cadence(spark, tmp_path):
     # main watermark file) is FRESH — the old rule would delete
     # nothing here, ever
     past = time.time() - 100
-    wmp = _compaction_watermark_path(store)
+    wmp = watermark_path(store)
     os.utime(wmp + ".0", (past, past))
     os.utime(wmp + ".1", (past, past))
     deleted = sorted(
@@ -510,7 +506,6 @@ def test_graced_gc_runs_at_next_compaction(spark, tmp_path):
     superseded dirs grew without bound. Now the graced GC runs at the
     START of the next compaction against the PREVIOUS flip's age."""
     from synthea_etl_spark.operators.dedup import (
-        _compaction_watermark_path,
         compact_counting_slices,
         counting_store_totals,
     )
