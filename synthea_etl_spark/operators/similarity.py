@@ -545,8 +545,9 @@ def ivf_index_rollover(
 
     Returns the new centroids (the probe side needs them)."""
     from synthea_etl_spark.operators.scd2 import write_swap
+    from synthea_etl_spark.operators.store import read as read_store
 
-    store = spark.read.parquet(index_path)
+    store = read_store(spark, index_path)
     if new_centroids is None:
         new_centroids = ivf_train_centroids(
             store, id_col, vec_col, n_centroids, lloyd_iters

@@ -25,6 +25,19 @@ Readers (:func:`live`) see that generation plus batches above the
 watermark and nothing else, so folded leftovers and half-published
 next generations stay invisible.
 
+SCHEMA RECORD (``_SCHEMA``): the first publish records the frame's
+data schema (Spark JSON, partition column left out) before it writes
+any data, by a tmp write + ``os.replace``; later publishes and folds
+leave it byte-identical, and one whose column names or types differ
+from it raises ``ValueError`` (nullability is not compared).
+:func:`read` — the one way a store is read — passes the record to the
+parquet reader, so a read runs no schema-inference job; partition
+discovery still types the partition column. A crash between the
+record and the first data write leaves a store that reads as empty.
+A store written before records existed has no ``_SCHEMA``: it is read
+through Spark's inference and gets its record at its next publish or
+fold.
+
 CRASH-SAFE FOLD ORDER (:func:`fold`): (1) write generation ``upto``
 from the current generation + batches in (watermark, upto] — inputs
 that do not change until the flip, so a retry rewrites the same
@@ -44,6 +57,7 @@ never visible) is judged by its own mtime."""
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import shutil
@@ -53,6 +67,7 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _SLICE_ID = re.compile(r"(batch|compacted)(\d+)")
 
@@ -114,10 +129,59 @@ def check_batch_slice(slice_id: str) -> None:
         )
 
 
+def schema_path(path: str) -> str:
+    return os.path.join(path, "_SCHEMA")
+
+
+def recorded_schema(path: str) -> StructType | None:
+    """The data schema recorded at the store's first publish, or None
+    for a store that has no record (never published, or written
+    before records existed)."""
+    try:
+        with open(schema_path(path)) as f:
+            return StructType.fromJson(json.load(f))
+    except FileNotFoundError:
+        return None
+
+
+def _columns(schema: StructType) -> list[tuple[str, str]]:
+    return sorted((f.name, f.dataType.simpleString()) for f in schema.fields)
+
+
+def _record_schema(path: str, schema: StructType) -> None:
+    """Write ``schema`` as the store's record if it has none; refuse
+    one whose column names or types drift from the record."""
+    recorded = recorded_schema(path)
+    if recorded is None:
+        os.makedirs(path, exist_ok=True)
+        tmp = schema_path(path) + ".tmp"
+        with open(tmp, "w") as f:
+            f.write(schema.json())
+        os.replace(tmp, schema_path(path))
+    elif _columns(recorded) != _columns(schema):
+        raise ValueError(
+            f"schema drift in store {path}: recorded "
+            f"{recorded.simpleString()}, got {schema.simpleString()}"
+        )
+
+
+def read(spark, path: str) -> DataFrame:
+    """Read every partition of the store at ``path`` (partition column
+    included) with its recorded schema; a store without a record is
+    read through Spark's schema inference."""
+    schema = recorded_schema(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
 def publish(df: DataFrame, path: str, layout: Layout, part) -> None:
     """Write ``df`` as partition ``<layout.col>=<part>`` of the store
     at ``path`` with dynamic partition overwrite (replay-idempotent:
-    only that partition is replaced)."""
+    only that partition is replaced), after checking its data schema
+    against the store's record (written here at the first publish)."""
+    _record_schema(
+        path, StructType([f for f in df.schema.fields if f.name != layout.col])
+    )
     (
         df.withColumn(layout.col, F.lit(part))
         .hint("rebalance")  # size output files adaptively (guide §6):
@@ -157,15 +221,21 @@ def _visible(layout: Layout, wm: int, upto: int | None = None) -> Column:
     return (F.col(layout.col) == layout.compacted(wm)) | batches
 
 
-def live(df: DataFrame, path: str, layout: Layout) -> DataFrame:
-    """Filter a read of the store at ``path`` to its live partitions;
-    crash leftovers of any fold window stay invisible."""
+def _read_where(spark, path: str, layout: Layout, cond: Column) -> DataFrame:
+    df = read(spark, path)
+    # no partition dir (every publish so far wrote no rows): the read
+    # is empty and has no partition column to filter on
+    return df.filter(cond) if layout.col in df.columns else df
+
+
+def live(spark, path: str, layout: Layout) -> DataFrame:
+    """Read the live partitions of the store at ``path``; crash
+    leftovers of any fold window stay invisible."""
     wm = watermark(path)
-    if wm < 0:
-        # never compacted: only batch partitions count (an orphan
-        # generation from a crash before the FIRST flip stays hidden)
-        return df.filter(layout.batch_num()[0])
-    return df.filter(_visible(layout, wm))
+    # never compacted: only batch partitions count (an orphan
+    # generation from a crash before the FIRST flip stays hidden)
+    cond = layout.batch_num()[0] if wm < 0 else _visible(layout, wm)
+    return _read_where(spark, path, layout, cond)
 
 
 def max_live(path: str, layout: Layout) -> int:
@@ -305,7 +375,7 @@ def fold(
     if wm < upto:
         if gc_grace_s > 0:
             collect(path, gc_grace_s)
-        folded = spark.read.parquet(path).filter(_visible(layout, wm, upto))
+        folded = _read_where(spark, path, layout, _visible(layout, wm, upto))
         publish(transform(folded), path, layout, layout.compacted(upto))
         _flip(path, upto)
         if gc_grace_s > 0:

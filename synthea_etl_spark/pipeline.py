@@ -276,10 +276,7 @@ def near_dedup_ingest_stream(
         )
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        from synthea_etl_spark.operators.dedup import (
-            batch_watermark_filter,
-            compaction_watermark,
-        )
+        from synthea_etl_spark.operators.dedup import compaction_watermark
 
         # a replayed batch already folded into the compacted
         # partition must not republish — its rows live there now
@@ -296,11 +293,11 @@ def near_dedup_ingest_stream(
             # batch_id < current keeps seeing the compacted partition;
             # the watermark filter additionally hides crash-leftover
             # folded dirs (publish succeeded, GC not)
-            history = batch_watermark_filter(
-                spark.read.parquet(index_dir), index_dir
-            ).filter(
-                F.col("batch_id") < batch_id
-            ).select("doc_id", "band", "bh")
+            history = (
+                store.live(spark, index_dir, store.ROWS)
+                .filter(F.col("batch_id") < batch_id)
+                .select("doc_id", "band", "bh")
+            )
             cands = incremental_lsh_candidates(bands_df, history, "doc_id")
             # verify against the candidates' HISTORICAL TEXT (persisted
             # survivors in the corpus) — band collisions alone never
@@ -309,9 +306,7 @@ def near_dedup_ingest_stream(
                 F.col("hist_id").alias("doc_id")
             ).distinct()
             hist_docs = (
-                batch_watermark_filter(
-                    spark.read.parquet(corpus_dir), corpus_dir
-                )
+                store.live(spark, corpus_dir, store.ROWS)
                 .filter(F.col("batch_id") < batch_id)
                 .select("doc_id", "text")
                 .join(hist_ids, "doc_id")
@@ -414,11 +409,7 @@ def postings_from_store(spark: SparkSession, index_dir: str) -> DataFrame:
     current compacted partition + live batch slices, crash leftovers
     (folded batch dirs, half-published compacted partitions)
     invisible — hand the result straight to ``bm25_topk_from_index``."""
-    from synthea_etl_spark.operators.dedup import batch_watermark_filter
-
-    return batch_watermark_filter(
-        spark.read.parquet(index_dir), index_dir
-    ).drop("batch_id")
+    return store.live(spark, index_dir, store.ROWS).drop("batch_id")
 
 
 def ann_index_ingest_stream(
@@ -443,7 +434,7 @@ def ann_index_ingest_stream(
     fixed quantizer is per-row, so the UNION of batch partitions IS
     ``ivf_index`` of the union corpus (the invariant
     tests/test_llm3.py pins for the batch path), and
-    ``knn_ann_ivf_grouped_probe(spark.read.parquet(index_dir), ...)``
+    ``knn_ann_ivf_grouped_probe(store.read(spark, index_dir), ...)``
     serves queries between (or during) ingests with per-cluster BLAS
     scoring. Centroid drift is handled by ROLLOVER, not merge:
     retrain offline, rebuild into a fresh index_dir, swap readers —
@@ -563,7 +554,7 @@ def curation_ingest_stream(
             # of a REJECTED doc is still an exact_dup, matching the
             # batch funnel's fprn semantics on the union corpus
             hist = (
-                spark.read.parquet(verdicts_dir)
+                store.read(spark, verdicts_dir)
                 .filter(F.col("batch_id") < batch_id)
                 .select("fp")
                 .distinct()

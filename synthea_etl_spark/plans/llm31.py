@@ -922,6 +922,7 @@ def q267_length_drift_from_store(
         compaction_watermark,
         length_hist_store,
     )
+    from synthea_etl_spark.operators.store import read as read_store
 
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
@@ -941,7 +942,7 @@ def q267_length_drift_from_store(
                     spark, store, 1, ["source", "b"], "c"
                 )
         wm = compaction_watermark(store)
-        raw = spark.read.parquet(store)
+        raw = read_store(spark, store)
         num = F.regexp_extract("slice_id", r"^batch(\d+)$", 1)
         ref = raw.filter(F.col("slice_id") == f"compacted{wm}")
         live = raw.filter((num != "") & (num.cast("long") > wm))

@@ -1409,6 +1409,7 @@ def q292_cms_drift_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
         cms_slice_from_counts,
         publish_counting_slice,
     )
+    from synthea_etl_spark.operators.store import read as read_store
 
     d = load(spark, sf_dir, "documents")
     tcb = (
@@ -1432,7 +1433,7 @@ def q292_cms_drift_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"batch{b}",
             )
         cells = (
-            spark.read.parquet(store)
+            read_store(spark, store)
             .select(
                 "d",
                 "b",

@@ -768,6 +768,8 @@ def q178_corpus_overlap_from_store(
     import shutil
     import tempfile
 
+    from synthea_etl_spark.operators.store import read as read_store
+
     docs = load(spark, sf_dir, "documents")
     # per-run private store: two concurrent runs (bench + gate, or
     # two users) must not race on the same dynamic-overwrite
@@ -789,10 +791,10 @@ def q178_corpus_overlap_from_store(
     # answering path: k-row reads only — no corpus access
     try:
         ska = D.merge_bottomk_sketches(
-            spark.read.parquet(os.path.join(store, "a")), k=64
+            read_store(spark, os.path.join(store, "a")), k=64
         )
         skb = D.merge_bottomk_sketches(
-            spark.read.parquet(os.path.join(store, "b")), k=64
+            read_store(spark, os.path.join(store, "b")), k=64
         )
         out = D.corpus_overlap_from_sketches(ska, skb, k=64)
         # materialize the 1-row answer so the temp store can be

@@ -280,8 +280,8 @@ def test_near_dedup_store_compaction_transparent_to_stream(
         StructType,
     )
 
+    from synthea_etl_spark.operators import store
     from synthea_etl_spark.operators.dedup import (
-        batch_watermark_filter,
         compact_batch_partitions,
         compaction_watermark,
     )
@@ -311,9 +311,7 @@ def test_near_dedup_store_compaction_transparent_to_stream(
     def corpus_ids():
         return sorted(
             r.doc_id
-            for r in batch_watermark_filter(
-                spark.read.parquet(str(corpus)), str(corpus)
-            ).collect()
+            for r in store.live(spark, str(corpus), store.ROWS).collect()
         )
 
     land("b0.json", [(0, NEAR_A), (2, OTHER)])

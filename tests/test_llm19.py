@@ -90,10 +90,10 @@ def test_gc_grace_defers_counting_slice_deletion(spark, tmp_path):
 def test_gc_grace_defers_batch_partition_deletion(spark, tmp_path):
     """Same contract on the row-set (batch_id) stores."""
     from synthea_etl_spark.operators.dedup import (
-        batch_watermark_filter,
         compact_batch_partitions,
         gc_batch_partitions,
     )
+    from synthea_etl_spark.operators.store import ROWS, live
 
     store = str(tmp_path / "store")
     for b in range(2):
@@ -110,9 +110,7 @@ def test_gc_grace_defers_batch_partition_deletion(spark, tmp_path):
     def ids():
         return {
             r.id
-            for r in batch_watermark_filter(
-                spark.read.parquet(store), store
-            ).collect()
+            for r in live(spark, store, ROWS).collect()
         }
 
     want = {0, 1, 2, 10, 11, 12}

@@ -20,10 +20,10 @@ def _docs(spark, ids_texts):
 
 def test_purge_batch_store_matches_rebuild(spark, tmp_path):
     from synthea_etl_spark.operators.dedup import (
-        batch_watermark_filter,
         compaction_watermark,
         purge_batch_store,
     )
+    from synthea_etl_spark.operators.store import ROWS, live
 
     store = str(tmp_path / "bands")
     rows = [(d, b, f"h{d % 4}") for d in range(8) for b in range(2)]
@@ -40,9 +40,7 @@ def test_purge_batch_store_matches_rebuild(spark, tmp_path):
     assert compaction_watermark(store) == 3
     got = {
         (r.doc_id, r.band, r.bh)
-        for r in batch_watermark_filter(
-            spark.read.parquet(store), store
-        ).collect()
+        for r in live(spark, store, ROWS).collect()
     }
     want = {(d, b, h) for d, b, h in rows if d not in (2, 5)}
     assert got == want
@@ -53,9 +51,7 @@ def test_purge_batch_store_matches_rebuild(spark, tmp_path):
     purge_batch_store(spark, store, 4, [0], "doc_id")
     got2 = {
         r.doc_id
-        for r in batch_watermark_filter(
-            spark.read.parquet(store), store
-        ).collect()
+        for r in live(spark, store, ROWS).collect()
     }
     assert got2 == {1, 3, 4, 6, 7}
 
@@ -63,10 +59,8 @@ def test_purge_batch_store_matches_rebuild(spark, tmp_path):
 def test_purge_leaves_later_batches_untouched(spark, tmp_path):
     """Rows ingested ABOVE the purge slot survive (the documented
     completeness contract) and fold out on the NEXT purge."""
-    from synthea_etl_spark.operators.dedup import (
-        batch_watermark_filter,
-        purge_batch_store,
-    )
+    from synthea_etl_spark.operators.dedup import purge_batch_store
+    from synthea_etl_spark.operators.store import ROWS, live
 
     store = str(tmp_path / "bands")
     df = spark.createDataFrame(
@@ -82,17 +76,13 @@ def test_purge_leaves_later_batches_untouched(spark, tmp_path):
     ).write.mode("append").partitionBy("batch_id").parquet(store)
     ids = {
         r.doc_id
-        for r in batch_watermark_filter(
-            spark.read.parquet(store), store
-        ).collect()
+        for r in live(spark, store, ROWS).collect()
     }
     assert ids == {1, 2}
     purge_batch_store(spark, store, 6, [2], "doc_id")
     ids2 = {
         r.doc_id
-        for r in batch_watermark_filter(
-            spark.read.parquet(store), store
-        ).collect()
+        for r in live(spark, store, ROWS).collect()
     }
     assert ids2 == {1}
 
@@ -119,12 +109,11 @@ def test_purge_rejects_slot_below_live_batch(spark, tmp_path):
 
 def test_purge_batch_store_string_key(spark, tmp_path):
     """A store keyed by a string column (e.g. a fingerprint) purges
-    with an iterable of ids: the key type is inferred from the store
-    schema, not hardcoded long."""
-    from synthea_etl_spark.operators.dedup import (
-        batch_watermark_filter,
-        purge_batch_store,
-    )
+    with an iterable of ids: the key type comes from the store's schema
+    (inferred for a store written without a record, then from the
+    record the purge's fold wrote), not hardcoded long."""
+    from synthea_etl_spark.operators.dedup import purge_batch_store
+    from synthea_etl_spark.operators.store import ROWS, live, recorded_schema
 
     store = str(tmp_path / "fps")
     df = spark.createDataFrame(
@@ -136,11 +125,15 @@ def test_purge_batch_store_string_key(spark, tmp_path):
     purge_batch_store(spark, store, 2, ["fp_b"], "fp")
     got = {
         r.fp
-        for r in batch_watermark_filter(
-            spark.read.parquet(store), store
-        ).collect()
+        for r in live(spark, store, ROWS).collect()
     }
     assert got == {"fp_a", "fp_c"}
+    assert recorded_schema(store)["fp"].dataType.simpleString() == "string"
+    spark.createDataFrame([("fp_d", 4)], "fp string, n long").withColumn(
+        "batch_id", F.lit(3)
+    ).write.mode("append").partitionBy("batch_id").parquet(store)
+    purge_batch_store(spark, store, 4, ["fp_a"], "fp")
+    assert {r.fp for r in live(spark, store, ROWS).collect()} == {"fp_c", "fp_d"}
 
 
 def test_deletion_slice_token_store_matches_rebuild(spark, tmp_path):
@@ -303,6 +296,7 @@ def test_purge_prompt_key_cluster_recovers_from_mid_purge_crash(
     Without staging the retry silently keeps agg rows whose min_doc
     is an erased doc (an undetected right-to-erasure violation)."""
     import synthea_etl_spark.operators.dedup as dd
+    from synthea_etl_spark.operators.store import ROWS, live
 
     texts = {
         0: "alpha beta shared prompt a",
@@ -331,9 +325,7 @@ def test_purge_prompt_key_cluster_recovers_from_mid_purge_crash(
     # the companion HAS purged doc 0 — the hole the staging closes
     left = {
         r.doc_id
-        for r in dd.batch_watermark_filter(
-            spark.read.parquet(pairs), pairs
-        ).collect()
+        for r in live(spark, pairs, ROWS).collect()
     }
     assert 0 not in left
     # pre-fix behavior check: the agg store still claims rep=0

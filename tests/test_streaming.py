@@ -513,6 +513,7 @@ def test_prompt_key_stream_replay_backfills_missing_companion(
     import json
 
     import synthea_etl_spark.operators.dedup as dd
+    from synthea_etl_spark.operators.store import ROWS, live
     from synthea_etl_spark.pipeline import prompt_key_ingest_stream
 
     schema = StructType(
@@ -571,9 +572,7 @@ def test_prompt_key_stream_replay_backfills_missing_companion(
     ).awaitTermination(300)
     got_pairs = {
         (r.pkey, r.doc_id)
-        for r in dd.batch_watermark_filter(
-            spark.read.parquet(pairs), pairs
-        ).collect()
+        for r in live(spark, pairs, ROWS).collect()
     }
     assert {d for _, d in got_pairs} == {0, 1, 2, 3}
     # and the agg store did NOT double-count: totals equal a rebuild

@@ -43,6 +43,7 @@ from pyspark.sql.types import (  # noqa: E402
 )
 
 import synthea_etl_spark.operators.similarity as S  # noqa: E402
+import synthea_etl_spark.operators.store as stores  # noqa: E402
 import synthea_etl_spark.operators.text as T  # noqa: E402
 from synthea_etl_spark.operators.dedup import (  # noqa: E402
     BLOOM_K,
@@ -52,7 +53,6 @@ from synthea_etl_spark.operators.dedup import (  # noqa: E402
     PROMPT_KEY_AGGS,
     banded_signatures,
     batch_term_counts,
-    batch_watermark_filter,
     bloom_probe_from_store,
     bloom_slice,
     bloom_store,
@@ -757,7 +757,7 @@ def near_dedup(d: Drive) -> dict:
     def live(path, *cols):
         return sorted(
             tuple(r)
-            for r in batch_watermark_filter(spark.read.parquet(path), path)
+            for r in stores.live(spark, path, stores.ROWS)
             .select(*cols)
             .collect()
         )
@@ -1164,9 +1164,7 @@ def purge(d: Drive) -> dict:
     write_bands(survivors, 1, bands_rebuilt)
     got_bands = {
         (r.doc_id, r.band, r.bh)
-        for r in batch_watermark_filter(
-            spark.read.parquet(bands), bands
-        ).collect()
+        for r in stores.live(spark, bands, stores.ROWS).collect()
     }
     want_bands = {
         (r.doc_id, r.band, r.bh)
