@@ -178,47 +178,23 @@ AVI_FRAME_STATS_SCHEMA = (
 
 
 def avi_frame_stats(df, every_n: int = 1):
-    """REAL distributed compressed-video decode: parse_avi_mjpeg over
-    Arrow-batched payloads via mapInPandas, keeping every
-    ``every_n``-th frame — the same no-shuffle 1-to-many shape as
-    video_frame_stats (Y4M) and gif_frame_stats. Malformed payloads
-    yield a single null-stats row (mixed corpora keep flowing)."""
-    import pandas as pd
+    """REAL distributed compressed-video decode: parse_avi_mjpeg per
+    payload, keeping every ``every_n``-th frame — the same 1-to-many
+    shape as video_frame_stats (Y4M) and gif_frame_stats. Malformed
+    payloads yield a single null-stats row."""
+    from synthea_etl_spark.operators.multimodal import payload_rows
 
-    def extract(batches):
-        for pdf in batches:
-            cols = {
-                "id": [], "frame_idx": [], "n_frames": [], "width": [],
-                "height": [], "mean_r": [], "mean_g": [], "mean_b": [],
-            }
-            for id_, payload in zip(pdf["id"], pdf["payload"]):
-                parsed = parse_avi_mjpeg(payload)
-                if parsed is None:
-                    for k in cols:
-                        cols[k].append(id_ if k == "id" else None)
-                    continue
-                w, h, frames = parsed
-                for fi in range(0, len(frames), every_n):
-                    mr, mg, mb = frames[fi]
-                    for k, v in zip(
-                        cols,
-                        (id_, fi, len(frames), w, h, mr, mg, mb),
-                    ):
-                        cols[k].append(v)
-            yield pd.DataFrame(
-                {
-                    "id": cols["id"],
-                    "frame_idx": pd.array(cols["frame_idx"], dtype="Int32"),
-                    "n_frames": pd.array(cols["n_frames"], dtype="Int32"),
-                    "width": pd.array(cols["width"], dtype="Int32"),
-                    "height": pd.array(cols["height"], dtype="Int32"),
-                    "mean_r": pd.array(cols["mean_r"], dtype="Float64"),
-                    "mean_g": pd.array(cols["mean_g"], dtype="Float64"),
-                    "mean_b": pd.array(cols["mean_b"], dtype="Float64"),
-                }
-            )
+    def rows(b):
+        parsed = parse_avi_mjpeg(b)
+        if parsed is None:
+            return None
+        w, h, frames = parsed
+        return [
+            (fi, len(frames), w, h, *frames[fi])
+            for fi in range(0, len(frames), every_n)
+        ]
 
-    return df.mapInPandas(extract, schema=AVI_FRAME_STATS_SCHEMA)
+    return payload_rows(df, AVI_FRAME_STATS_SCHEMA, rows)
 
 
 def _remove_dht(b: bytes) -> bytes:

@@ -715,56 +715,25 @@ FLAC_STATS_SCHEMA = (
 
 
 def flac_stats(df):
-    """REAL distributed FLAC decode: decode_flac over Arrow-batched
-    payloads via mapInPandas — the same no-shuffle, no-collect shape
-    (and output schema) as multimodal.audio_stats, so WAV and FLAC
+    """REAL distributed FLAC decode: decode_flac per payload, with the
+    same output schema as multimodal.audio_stats, so WAV and FLAC
     corpora produce union-compatible feature frames. Means are exact
     int64 sums per channel / sample count; malformed payloads yield a
-    null-stats row (mixed corpora keep flowing)."""
-    import pandas as pd
+    null-stats row."""
+    from synthea_etl_spark.operators.multimodal import (
+        channel_means,
+        payload_rows,
+    )
 
-    def extract(batches):
-        for pdf in batches:
-            cols = {
-                "id": [], "channels": [], "sample_rate": [], "bits": [],
-                "n_frames": [], "mean_left": [], "mean_right": [],
-            }
-            for id_, payload in zip(pdf["id"], pdf["payload"]):
-                dec = decode_flac(payload)
-                if dec is None:
-                    for k in cols:
-                        cols[k].append(id_ if k == "id" else None)
-                    continue
-                sr, bits, nch, samples = dec
-                n = samples.shape[0]
-                sums = samples.sum(axis=0, dtype=np.int64)
-                means = [float(s) / n for s in sums] if n else []
-                for k, v in zip(
-                    cols,
-                    (
-                        id_, nch, sr, bits, n,
-                        means[0] if means else None,
-                        means[1] if nch > 1 and means else None,
-                    ),
-                ):
-                    cols[k].append(v)
-            yield pd.DataFrame(
-                {
-                    "id": cols["id"],
-                    "channels": pd.array(cols["channels"], dtype="Int32"),
-                    "sample_rate": pd.array(
-                        cols["sample_rate"], dtype="Int32"
-                    ),
-                    "bits": pd.array(cols["bits"], dtype="Int32"),
-                    "n_frames": pd.array(cols["n_frames"], dtype="Int32"),
-                    "mean_left": pd.array(cols["mean_left"], dtype="Float64"),
-                    "mean_right": pd.array(
-                        cols["mean_right"], dtype="Float64"
-                    ),
-                }
-            )
+    def rows(b):
+        dec = decode_flac(b)
+        if dec is None:
+            return None
+        sr, bits, nch, samples = dec
+        means = channel_means(samples) + [None, None]
+        return [(nch, sr, bits, len(samples), *means[:2])]
 
-    return df.mapInPandas(extract, schema=FLAC_STATS_SCHEMA)
+    return payload_rows(df, FLAC_STATS_SCHEMA, rows)
 
 
 def _read_residuals(rd: _BitReader, block: int, order: int):

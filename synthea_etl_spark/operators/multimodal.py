@@ -9,14 +9,14 @@ width...) prune row groups WITHOUT touching payload bytes, and decode
 runs distributed via mapInPandas (Arrow batches, bounded memory per
 task via maxRecordsPerBatch).
 
-No image/audio codec library is a dependency. ``decode_features``
-is a deterministic byte-level feature pass (the payload-plumbing
-smoke path), not a media decode. ``resize_payloads`` and
-``sample_frames`` now have REAL codec-free paths (uncompressed
-rasters / Y4M containers — see below) and keep the fake stand-in only
-for codec formats. The Spark-side plumbing — schema, batch shape,
-partition behavior — is real and tested (tests/test_llm.py); swapping
-in PIL/librosa later changes only the inner function body.
+No image/audio codec library is a dependency. Every per-payload
+decoder runs through one stage, ``payload_rows``: the operator gives
+it a function from one payload to its output rows, and the stage owns
+the batch loop, the null-row contract and the Arrow conversion.
+``decode_features`` is a deterministic byte-level feature pass (the
+payload-plumbing smoke path), not a media decode; it and
+``resize_payloads`` keep their own batch loops (whole-batch numpy, and
+a null row that carries the input ``meta``).
 
 These paths are REAL, no codec dependency:
 
@@ -38,11 +38,13 @@ These paths are REAL, no codec dependency:
   4:2:0 / 4:2:2 / 4:4:4 / mono subsampling — to per-frame plane
   statistics, run distributed by ``video_frame_stats`` (1-to-many
   frame sampling);
-- audio decode: ``parse_wav`` walks the RIFF/WAVE chunk list (unknown
-  chunks skipped, odd-size pad bytes honored) to exact per-channel
-  PCM sample means (u8 / s16le), run distributed by ``audio_stats``;
-  ``audio_spectral`` adds real DSP on top (rfft -> dominant
-  frequency bin);
+- audio decode: ``decode_wav`` walks the RIFF/WAVE chunk list (unknown
+  chunks skipped, odd-size pad bytes honored) once, to the sample
+  array: PCM u8 / s16le / s24le, IEEE float32, G.711 mu-law / A-law
+  and IMA ADPCM (operators/audio_codecs). ``parse_wav`` reduces it to
+  exact per-channel means, run distributed by ``audio_stats``;
+  ``audio_spectral`` (rfft -> dominant frequency bin) and
+  ``audio_rms_windows`` read the same array;
 - raster transform: ``resize_payloads`` decodes spatial rasters
   (``decode_raster``: BMP, PPM, baseline TIFF, 8-bit PNG —
   interlaced or not, Adam7 spatially reassembled),
@@ -56,7 +58,7 @@ These paths are REAL, no codec dependency:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -82,6 +84,41 @@ def attach_payload(df: DataFrame, text_col: str, id_col: str, content_type: str 
             F.lit(content_type).alias("content_type"),
         ).alias("meta"),
     )
+
+
+def payload_rows(
+    df: DataFrame,
+    schema: str,
+    rows: Callable[[bytes], list[tuple] | None],
+) -> DataFrame:
+    """The one per-payload decode stage of the media operators.
+
+    ``df`` has ``id`` and ``payload`` columns; ``schema`` is a flat DDL
+    string whose first column is ``id``. ``rows(payload)`` returns a
+    list of tuples holding the other columns of ``schema``, in schema
+    order. The stage emits ``(id, *t)`` for each tuple ``t``: no row
+    for ``[]``, and for ``None`` one row with ``id`` set and every
+    other column null (a mixed corpus keeps flowing; filter on a
+    decoded column downstream). It is one Arrow-batched
+    ``mapInPandas``: no shuffle, no collect, payload bytes never leave
+    the executor. Columns are built as object Series and the Arrow
+    conversion casts them to ``schema``, so a ``rows`` function returns
+    plain Python/numpy scalars and ``None``."""
+    names = [field.split()[0] for field in schema.split(",")]
+    null = (None,) * (len(names) - 1)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = []
+            for id_, payload in zip(pdf["id"], pdf["payload"]):
+                got = rows(payload)
+                out += [(id_, *t) for t in ([null] if got is None else got)]
+            cols = list(zip(*out)) if out else [()] * len(names)
+            yield pd.DataFrame(
+                {n: pd.Series(c, dtype=object) for n, c in zip(names, cols)}
+            )
+
+    return df.mapInPandas(run, schema=schema)
 
 
 def decode_features(df: DataFrame) -> DataFrame:
@@ -196,25 +233,12 @@ IMAGE_META_SCHEMA = (
 
 def image_metadata(df: DataFrame) -> DataFrame:
     """REAL distributed image-metadata extraction: parse container
-    dimensions from payload headers via ``parse_image_dims`` in
-    Arrow-batched mapInPandas. It needs no codec — it reads
-    fixed-layout header bytes only; unrecognized payloads yield null
-    format/dims."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [parse_image_dims(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "format": [p[0] for p in parsed],
-                    "width": pd.array([p[1] for p in parsed], dtype="Int32"),
-                    "height": pd.array([p[2] for p in parsed], dtype="Int32"),
-                    "n_bytes": pdf["payload"].map(len).astype("int64"),
-                }
-            )
-
-    return df.mapInPandas(extract, schema=IMAGE_META_SCHEMA)
+    dimensions from payload headers via ``parse_image_dims``. It needs
+    no codec — it reads fixed-layout header bytes only; unrecognized
+    payloads yield null format/dims."""
+    return payload_rows(
+        df, IMAGE_META_SCHEMA, lambda b: [(*parse_image_dims(b), len(b))]
+    )
 
 
 def _ppm_header(b: bytes) -> tuple[int, int, int, int] | None:
@@ -1127,35 +1151,18 @@ PIXEL_STATS_SCHEMA = (
 
 
 def pixel_stats(df: DataFrame) -> DataFrame:
-    """REAL distributed pixel decode: ``decode_pixels`` over
-    Arrow-batched payloads via mapInPandas — same no-shuffle,
-    no-collect shape as ``image_metadata``. Decodes uncompressed
-    BMP/PPM/baseline-TIFF rasters, PNG (all five color types, depth
-    8/16, interlaced or not), GIF, and JPEG (baseline SOF0 and
-    progressive SOF2); anything else (arithmetic JPEG, compressed
-    video) yields null format/stats rows (mixed corpora keep
-    flowing; filter on ``format`` downstream)."""
+    """REAL distributed pixel decode: ``decode_pixels`` per payload.
+    Decodes uncompressed BMP/PPM/baseline-TIFF rasters, PNG (all five
+    color types, depth 8/16, interlaced or not), GIF, and JPEG
+    (baseline SOF0 and progressive SOF2); anything else (arithmetic
+    JPEG, compressed video) yields null format/stats rows (filter on
+    ``format`` downstream)."""
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [decode_pixels(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "format": [p[0] if p else None for p in parsed],
-                    "width": pd.array(
-                        [p[1] if p else None for p in parsed], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [p[2] if p else None for p in parsed], dtype="Int32"
-                    ),
-                    "mean_r": [p[3] if p else None for p in parsed],
-                    "mean_g": [p[4] if p else None for p in parsed],
-                    "mean_b": [p[5] if p else None for p in parsed],
-                }
-            )
+    def rows(b):
+        p = decode_pixels(b)
+        return None if p is None else [p]
 
-    return df.mapInPandas(extract, schema=PIXEL_STATS_SCHEMA)
+    return payload_rows(df, PIXEL_STATS_SCHEMA, rows)
 
 
 DHASH_SCHEMA = "id long, format string, dhash long"
@@ -1254,46 +1261,28 @@ def phash_fingerprints(df: DataFrame) -> DataFrame:
     payloads) with its own ``phash`` column, so a frame of pHashes
     can never be silently joined/unioned against the incomparable
     dHash space."""
-    return _raster_fingerprints(df, phash_bits, "phash")
+
+    def rows(b):
+        dec = decode_raster(b)
+        return None if dec is None else [(dec[0], phash_bits(dec[1]))]
+
+    return payload_rows(df, "id long, format string, phash long", rows)
 
 
 def dhash_fingerprints(df: DataFrame) -> DataFrame:
     """Distributed perceptual fingerprinting: (id, payload) ->
-    (id, format, dhash) via ``decode_raster`` + ``dhash_bits`` in
-    Arrow-batched mapInPandas — the decoder↔dedup bridge. Payloads
-    decode_raster can't read degrade to null format/dhash rows (the
-    standard mixed-corpus contract). Feed the result to
+    (id, format, dhash) via ``decode_raster`` + ``dhash_bits`` — the
+    decoder↔dedup bridge. Payloads decode_raster can't read degrade to
+    null format/dhash rows. Feed the result to
     ``dedup.hamming_near_pairs(out, "id", "dhash", 60, k)`` for exact
     hamming≤k near-dup pairs via pigeonhole banding — no all-pairs
     compare, no Python past this stage."""
-    return _raster_fingerprints(df, dhash_bits, "dhash")
 
+    def rows(b):
+        dec = decode_raster(b)
+        return None if dec is None else [(dec[0], dhash_bits(dec[1]))]
 
-def _raster_fingerprints(df: DataFrame, bits_fn, col_name: str) -> DataFrame:
-    """Shared decode→hash runner for the perceptual fingerprints."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fmts, hashes = [], []
-            for b in pdf["payload"]:
-                dec = decode_raster(b)
-                if dec is None:
-                    fmts.append(None)
-                    hashes.append(None)
-                else:
-                    fmts.append(dec[0])
-                    hashes.append(bits_fn(dec[1]))
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "format": fmts,
-                    col_name: pd.array(hashes, dtype="Int64"),
-                }
-            )
-
-    return df.mapInPandas(
-        extract, schema=f"id long, format string, {col_name} long"
-    )
+    return payload_rows(df, DHASH_SCHEMA, rows)
 
 
 def raster_exact_fingerprints(df: DataFrame) -> DataFrame:
@@ -1308,41 +1297,19 @@ def raster_exact_fingerprints(df: DataFrame) -> DataFrame:
     degrade to null rows (the standard mixed-corpus contract)."""
     import hashlib
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fmts, ws, hs, keys = [], [], [], []
-            for b in pdf["payload"]:
-                dec = decode_raster(b) if b is not None else None
-                if dec is None:
-                    fmts.append(None)
-                    ws.append(None)
-                    hs.append(None)
-                    keys.append(None)
-                else:
-                    px = np.ascontiguousarray(dec[1], dtype=np.uint8)
-                    h, w = px.shape[:2]
-                    fmts.append(dec[0])
-                    ws.append(w)
-                    hs.append(h)
-                    keys.append(
-                        hashlib.md5(
-                            b"%dx%d|" % (w, h) + px.tobytes()
-                        ).hexdigest()
-                    )
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "format": fmts,
-                    "width": pd.array(ws, dtype="Int32"),
-                    "height": pd.array(hs, dtype="Int32"),
-                    "raster_md5": keys,
-                }
-            )
+    def rows(b):
+        dec = decode_raster(b) if b is not None else None
+        if dec is None:
+            return None
+        px = np.ascontiguousarray(dec[1], dtype=np.uint8)
+        h, w = px.shape[:2]
+        key = hashlib.md5(b"%dx%d|" % (w, h) + px.tobytes()).hexdigest()
+        return [(dec[0], w, h, key)]
 
-    return df.mapInPandas(
-        extract,
-        schema="id long, format string, width int, height int, "
-        "raster_md5 string",
+    return payload_rows(
+        df,
+        "id long, format string, width int, height int, raster_md5 string",
+        rows,
     )
 
 
@@ -1352,57 +1319,25 @@ RESIZED_SCHEMA = (
 )
 
 
-def resize_payloads(
-    df: DataFrame, width: int, height: int, fake: bool = False
-) -> DataFrame:
+def resize_payloads(df: DataFrame, width: int, height: int) -> DataFrame:
     """Distributed image resize: payload -> re-encoded payload +
     updated (width, height) metadata, 1-to-1 via mapInPandas.
 
-    The REAL path (fake=False) is codec-free end to end:
-    ``decode_raster`` (24-bit BMP / binary PPM / baseline TIFF / 8-bit
-    PNG) -> nearest-neighbor resample (target pixel (x, y) samples source
-    (x*sw//width, y*sh//height) — exact integer index arithmetic, so
-    results are deterministic and oracle-checkable) -> ``encode_ppm``
-    re-encode with content_type image/x-portable-pixmap. Payloads
-    ``decode_raster`` can't read (compressed formats would need a
-    codec to re-ENCODE even where we can decode them) degrade to a
-    null-payload row with the input content_type preserved — same
-    mixed-corpus contract as pixel_stats.
-
-    fake=True keeps the deterministic byte transform (truncate/
-    cycle-pad to width*height bytes) used by the plumbing tests and
-    as the stand-in for codec formats."""
+    Codec-free end to end: ``decode_raster`` (24-bit BMP / binary PPM /
+    baseline TIFF / 8-bit PNG) -> nearest-neighbor resample (target
+    pixel (x, y) samples source (x*sw//width, y*sh//height) — exact
+    integer index arithmetic, so results are deterministic and
+    oracle-checkable) -> ``encode_ppm`` re-encode with content_type
+    image/x-portable-pixmap. Payloads ``decode_raster`` can't read
+    (compressed formats would need a codec to re-ENCODE even where we
+    can decode them) degrade to a null-payload row with the input
+    content_type preserved — same mixed-corpus contract as
+    pixel_stats."""
 
     def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        target = width * height
+        xs = np.arange(width)
+        ys = np.arange(height)
         for pdf in batches:
-            if fake:
-
-                def fake_resize(b: bytes) -> bytes:
-                    if not len(b):
-                        return bytes(target)
-                    reps = -(-target // len(b))  # ceil
-                    return (bytes(b) * reps)[:target]
-
-                payload = pdf["payload"].map(fake_resize)
-                yield pd.DataFrame(
-                    {
-                        "id": pdf["id"],
-                        "payload": payload,
-                        "meta": [
-                            {
-                                "n_bytes": len(p),
-                                "content_type": m["content_type"],
-                                "width": width,
-                                "height": height,
-                            }
-                            for p, m in zip(payload, pdf["meta"])
-                        ],
-                    }
-                )
-                continue
-            xs = np.arange(width)
-            ys = np.arange(height)
             payloads, metas = [], []
             for b, m in zip(pdf["payload"], pdf["meta"]):
                 dec = decode_raster(b)
@@ -1440,56 +1375,25 @@ def resize_payloads(
 FRAME_SCHEMA = "id long, frame_idx int, frame binary, n_frames int"
 
 
-def sample_frames(
-    df: DataFrame,
-    frame_bytes: int = 64,
-    every_n: int = 4,
-    fake: bool = False,
-) -> DataFrame:
+def sample_frames(df: DataFrame, every_n: int = 4) -> DataFrame:
     """Distributed frame sampling: one input payload -> 0..k frame
-    rows (1-to-many mapInPandas — output batches need not align with
-    input rows).
+    rows. Decodes Y4M containers via ``parse_y4m`` and emits every
+    ``every_n``-th frame's raw plane bytes (Y then U then V,
+    concatenated — the container's own frame payload layout); non-Y4M
+    payloads yield no rows (compressed video would need pyav/ffmpeg,
+    which can slot into the same row-explosion shape)."""
 
-    The REAL path (fake=False) decodes Y4M containers via
-    ``parse_y4m`` and emits every ``every_n``-th frame's raw plane
-    bytes (Y then U then V, concatenated — the container's own frame
-    payload layout); non-Y4M payloads yield no rows (compressed video
-    would need pyav/ffmpeg, which can slot into the same
-    row-explosion shape). ``frame_bytes`` is ignored on this path —
-    the container declares its own frame geometry.
+    def rows(b):
+        parsed = parse_y4m(b)
+        if parsed is None:
+            return []
+        frames = parsed[3]
+        return [
+            (fi, b"".join(p for p in frames[fi] if p is not None), len(frames))
+            for fi in range(0, len(frames), every_n)
+        ]
 
-    fake=True keeps the deterministic stub: the payload is treated as
-    ``frame_bytes``-sized chunks, for plumbing tests and as the
-    stand-in for codec formats."""
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames, totals = [], [], [], []
-            for i, b in zip(pdf["id"], pdf["payload"]):
-                b = bytes(b)
-                if fake:
-                    n = len(b) // frame_bytes
-                    for fi in range(0, n, every_n):
-                        ids.append(i)
-                        idxs.append(fi)
-                        frames.append(b[fi * frame_bytes : (fi + 1) * frame_bytes])
-                        totals.append(n)
-                    continue
-                parsed = parse_y4m(b)
-                if parsed is None:
-                    continue
-                _, _, _, decoded = parsed
-                for fi in range(0, len(decoded), every_n):
-                    y, u, v = decoded[fi]
-                    ids.append(i)
-                    idxs.append(fi)
-                    frames.append(y if u is None else y + u + v)
-                    totals.append(len(decoded))
-            yield pd.DataFrame(
-                {"id": ids, "frame_idx": idxs, "frame": frames, "n_frames": totals}
-            )
-
-    return df.mapInPandas(sample, schema=FRAME_SCHEMA)
+    return payload_rows(df, FRAME_SCHEMA, rows)
 
 
 # ---------------------------------------------------------------------------
@@ -1648,62 +1552,33 @@ VIDEO_FRAME_STATS_SCHEMA = (
 )
 
 
+def _plane_mean(plane: bytes | None) -> float | None:
+    """Exact mean of a u8 sample plane (int64 sum / size); None for an
+    absent plane."""
+    if plane is None:
+        return None
+    return int(np.frombuffer(plane, np.uint8).sum(dtype=np.int64)) / len(plane)
+
+
 def video_frame_stats(df: DataFrame, every_n: int = 1) -> DataFrame:
-    """REAL distributed video frame decode, no codec: parse_y4m over
-    Arrow-batched payloads via mapInPandas, keeping every
-    ``every_n``-th frame — 1-to-many row explosion, no shuffle, no
-    collect, payload bytes never leave the executor. Per kept frame,
-    per-plane means are exact int64 sums / plane size (deterministic
-    at any parallelism); Cmono rows carry null chroma means.
-    Non-Y4M / malformed payloads yield a single null-stats row (mixed
-    corpora keep flowing; filter on ``colorspace`` downstream) — the
-    same degradation contract as ``pixel_stats``."""
+    """REAL distributed video frame decode, no codec: parse_y4m per
+    payload, keeping every ``every_n``-th frame (1-to-many). Per kept
+    frame, per-plane means are exact int64 sums / plane size
+    (deterministic at any parallelism); Cmono rows carry null chroma
+    means. Non-Y4M / malformed payloads yield a single null-stats row
+    (filter on ``colorspace`` downstream)."""
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = {
-            "id": [], "frame_idx": [], "n_frames": [], "width": [],
-            "height": [], "colorspace": [], "mean_y": [], "mean_u": [],
-            "mean_v": [],
-        }
+    def rows(b):
+        parsed = parse_y4m(b)
+        if parsed is None:
+            return None
+        w, h, cs, frames = parsed
+        return [
+            (fi, len(frames), w, h, cs, *map(_plane_mean, frames[fi]))
+            for fi in range(0, len(frames), every_n)
+        ]
 
-        def emit(id_, fi, nf, w, h, cs, my, mu, mv):
-            for k, val in zip(
-                cols, (id_, fi, nf, w, h, cs, my, mu, mv)
-            ):
-                cols[k].append(val)
-
-        for pdf in batches:
-            for k in cols:
-                cols[k].clear()
-            for id_, payload in zip(pdf["id"], pdf["payload"]):
-                parsed = parse_y4m(payload)
-                if parsed is None:
-                    emit(id_, None, None, None, None, None, None, None, None)
-                    continue
-                w, h, cs, frames = parsed
-                for fi in range(0, len(frames), every_n):
-                    y, u, v = frames[fi]
-                    my = int(np.frombuffer(y, np.uint8).sum(dtype=np.int64)) / len(y)
-                    mu = mv = None
-                    if u is not None:
-                        mu = int(np.frombuffer(u, np.uint8).sum(dtype=np.int64)) / len(u)
-                        mv = int(np.frombuffer(v, np.uint8).sum(dtype=np.int64)) / len(v)
-                    emit(id_, fi, len(frames), w, h, cs, my, mu, mv)
-            yield pd.DataFrame(
-                {
-                    "id": cols["id"],
-                    "frame_idx": pd.array(cols["frame_idx"], dtype="Int32"),
-                    "n_frames": pd.array(cols["n_frames"], dtype="Int32"),
-                    "width": pd.array(cols["width"], dtype="Int32"),
-                    "height": pd.array(cols["height"], dtype="Int32"),
-                    "colorspace": cols["colorspace"],
-                    "mean_y": pd.array(cols["mean_y"], dtype="Float64"),
-                    "mean_u": pd.array(cols["mean_u"], dtype="Float64"),
-                    "mean_v": pd.array(cols["mean_v"], dtype="Float64"),
-                }
-            )
-
-    return df.mapInPandas(extract, schema=VIDEO_FRAME_STATS_SCHEMA)
+    return payload_rows(df, VIDEO_FRAME_STATS_SCHEMA, rows)
 
 
 # ---------------------------------------------------------------------------
@@ -1792,21 +1667,24 @@ def encode_wav_float32(
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def parse_wav(
-    b: bytes,
-) -> tuple[int, int, int, int, list[float]] | None:
-    """Parse a RIFF/WAVE payload into (channels, sample_rate, bits,
-    n_frames, per-channel exact means). Walks the chunk list (skipping
-    unknown chunks, honoring the odd-size pad byte), takes the format
-    from the fmt chunk and the samples from the data chunk. Formats:
-    PCM u8 / s16le (tag 1), G.711 mu-law / A-law (tags 7 / 6, decoded
-    through the exact table expansion in operators/audio_codecs), and
-    IMA/DVI ADPCM (tag 0x11, block-decoded with header predictors and
-    the standard step/index state machine). Means are exact int64
-    sums per channel / frame count, in the DECODED linear-PCM domain
-    for the compressed tags. Strict-reject posture, same as the image
-    and Y4M decoders: truncated chunks, unsupported tags (IEEE float,
-    MPEG, extensible), zero or absurd channel counts, ragged
+def decode_wav(b: bytes) -> tuple[int, int, int, np.ndarray] | None:
+    """Decode a RIFF/WAVE payload into (channels, sample_rate, bits,
+    samples), ``samples`` an (n_frames, channels) array. Walks the
+    chunk list once (skipping unknown chunks, honoring the odd-size pad
+    byte), takes the format from the fmt chunk and the samples from the
+    data chunk. Formats and sample arrays:
+
+    - PCM (tag 1): u8 as raw unsigned codes (offset-binary, 128 =
+      silence), s16le, and s24le sign-extended to int64;
+    - IEEE float (tag 3, 32-bit): float32, all finite;
+    - G.711 mu-law / A-law (tags 7 / 6): int16 linear samples through
+      the exact table expansion in operators/audio_codecs;
+    - IMA/DVI ADPCM (tag 0x11): linear samples, block-decoded with
+      header predictors and the standard step/index state machine.
+
+    Strict-reject posture, same as the image and Y4M decoders:
+    truncated chunks, unsupported tags (MPEG, extensible), float64,
+    NaN/inf samples, zero or absurd channel counts, ragged
     frames/blocks, or bomb-cap violations all return None."""
     b = bytes(b)
     if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
@@ -1845,19 +1723,11 @@ def parse_wav(
             ulaw_to_linear,
         )
 
-        if bits != 8:
-            return None
-        if len(data) % nch:
+        if bits != 8 or len(data) % nch:
             return None  # partial trailing frame
-        n_frames = len(data) // nch
-        if n_frames == 0:
-            return (nch, sample_rate, bits, 0, [])
         expand = ulaw_to_linear if audio_format == 7 else alaw_to_linear
-        samples = expand(data).reshape(n_frames, nch)
-        sums = samples.sum(axis=0, dtype=np.int64)
-        return (nch, sample_rate, bits, n_frames,
-                [float(s) / n_frames for s in sums])
-    if audio_format == 0x11:  # IMA/DVI ADPCM: 4-bit block-coded
+        samples = expand(data).reshape(-1, nch)
+    elif audio_format == 0x11:  # IMA/DVI ADPCM: 4-bit block-coded
         from synthea_etl_spark.operators.audio_codecs import decode_ima_adpcm
 
         if bits != 4:
@@ -1865,47 +1735,52 @@ def parse_wav(
         samples = decode_ima_adpcm(data, nch, block_align)
         if samples is None:
             return None
-        n_frames = samples.shape[0]
-        if n_frames == 0:
-            return (nch, sample_rate, bits, 0, [])
-        sums = samples.sum(axis=0, dtype=np.int64)
-        return (nch, sample_rate, bits, n_frames,
-                [float(s) / n_frames for s in sums])
-    if audio_format == 3:  # IEEE float PCM
-        if bits != 32:
+    elif audio_format == 3:  # IEEE float PCM
+        if bits != 32 or len(data) % (nch * 4):
             return None  # float64 WAVs are vanishingly rare; explicit
-        frame_bytes = nch * 4
-        if len(data) % frame_bytes:
-            return None
-        n_frames = len(data) // frame_bytes
-        if n_frames == 0:
-            return (nch, sample_rate, bits, 0, [])
-        samples = np.frombuffer(data, np.dtype("<f4")).reshape(n_frames, nch)
+        samples = np.frombuffer(data, np.dtype("<f4")).reshape(-1, nch)
         if not np.isfinite(samples).all():
             return None  # NaN/inf poison aggregate stats: reject
-        sums = samples.astype(np.float64).sum(axis=0)
-        return (nch, sample_rate, bits, n_frames,
-                [float(s) / n_frames for s in sums])
-    if audio_format != 1 or bits not in (8, 16, 24):
-        return None  # no extensible/other compressed tags
-    width = bits // 8
-    frame_bytes = nch * width
-    if len(data) % frame_bytes:
-        return None  # partial trailing frame
-    n_frames = len(data) // frame_bytes
-    if n_frames == 0:
-        return (nch, sample_rate, bits, 0, [])
-    if bits == 24:  # s24le: assemble + sign-extend, no 3-byte dtype
-        tri = np.frombuffer(data, np.uint8).reshape(-1, 3).astype(np.int64)
-        vals = tri[:, 0] | (tri[:, 1] << 8) | (tri[:, 2] << 16)
-        vals -= (vals >= 1 << 23) * (1 << 24)
-        samples = vals.reshape(n_frames, nch)
+    elif audio_format == 1 and bits in (8, 16, 24):
+        if len(data) % (nch * (bits // 8)):
+            return None  # partial trailing frame
+        if bits == 24:  # s24le: assemble + sign-extend, no 3-byte dtype
+            tri = np.frombuffer(data, np.uint8).reshape(-1, 3).astype(np.int64)
+            vals = tri[:, 0] | (tri[:, 1] << 8) | (tri[:, 2] << 16)
+            vals -= (vals >= 1 << 23) * (1 << 24)
+            samples = vals.reshape(-1, nch)
+        else:
+            dt = np.uint8 if bits == 8 else np.dtype("<i2")
+            samples = np.frombuffer(data, dt).reshape(-1, nch)
     else:
-        dt = np.uint8 if bits == 8 else np.dtype("<i2")
-        samples = np.frombuffer(data, dt).reshape(n_frames, nch)
-    sums = samples.sum(axis=0, dtype=np.int64)
-    means = [float(s) / n_frames for s in sums]
-    return (nch, sample_rate, bits, n_frames, means)
+        return None  # no extensible/other compressed tags
+    return (nch, sample_rate, bits, samples)
+
+
+def parse_wav(
+    b: bytes,
+) -> tuple[int, int, int, int, list[float]] | None:
+    """Parse a RIFF/WAVE payload into (channels, sample_rate, bits,
+    n_frames, per-channel exact means): ``channel_means`` of
+    ``decode_wav``'s samples — in the DECODED linear domain for the
+    compressed tags, over the raw codes for u8 PCM. None where
+    ``decode_wav`` rejects."""
+    dec = decode_wav(b)
+    if dec is None:
+        return None
+    nch, sample_rate, bits, samples = dec
+    return (nch, sample_rate, bits, len(samples), channel_means(samples))
+
+
+def channel_means(samples: np.ndarray) -> list[float]:
+    """Exact per-channel means of an (n_frames, channels) sample array:
+    int64 sums for integer samples, float64 for float, / n_frames; []
+    when there are no frames."""
+    n = len(samples)
+    if not n:
+        return []
+    acc = np.float64 if samples.dtype.kind == "f" else np.int64
+    return [float(s) / n for s in samples.astype(acc).sum(axis=0)]
 
 
 AUDIO_STATS_SCHEMA = (
@@ -1915,50 +1790,17 @@ AUDIO_STATS_SCHEMA = (
 
 
 def audio_stats(df: DataFrame) -> DataFrame:
-    """REAL distributed audio decode, no codec: parse_wav over
-    Arrow-batched payloads via mapInPandas — the same no-shuffle,
-    no-collect shape as pixel_stats/video_frame_stats. Reports exact
-    per-channel sample means for the first two channels (mean_right
-    null for mono; payloads with >2 channels still decode, extra
-    channel means are simply not surfaced in this fixed-schema
+    """REAL distributed audio decode, no codec: parse_wav per payload.
+    Reports exact per-channel sample means for the first two channels
+    (mean_right null for mono; payloads with >2 channels still decode,
+    extra channel means are simply not surfaced in this fixed-schema
     report). Non-WAV / malformed payloads yield null-stats rows."""
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [parse_wav(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "channels": pd.array(
-                        [p[0] if p else None for p in parsed], dtype="Int32"
-                    ),
-                    "sample_rate": pd.array(
-                        [p[1] if p else None for p in parsed], dtype="Int32"
-                    ),
-                    "bits": pd.array(
-                        [p[2] if p else None for p in parsed], dtype="Int32"
-                    ),
-                    "n_frames": pd.array(
-                        [p[3] if p else None for p in parsed], dtype="Int32"
-                    ),
-                    "mean_left": pd.array(
-                        [
-                            p[4][0] if p and len(p[4]) > 0 else None
-                            for p in parsed
-                        ],
-                        dtype="Float64",
-                    ),
-                    "mean_right": pd.array(
-                        [
-                            p[4][1] if p and len(p[4]) > 1 else None
-                            for p in parsed
-                        ],
-                        dtype="Float64",
-                    ),
-                }
-            )
+    def rows(b):
+        p = parse_wav(b)
+        return None if p is None else [(*p[:4], *(p[4] + [None, None])[:2])]
 
-    return df.mapInPandas(extract, schema=AUDIO_STATS_SCHEMA)
+    return payload_rows(df, AUDIO_STATS_SCHEMA, rows)
 
 
 AUDIO_SPECTRAL_SCHEMA = (
@@ -1968,70 +1810,29 @@ AUDIO_SPECTRAL_SCHEMA = (
 
 
 def audio_spectral(df: DataFrame, n_fft: int = 64) -> DataFrame:
-    """REAL distributed audio DSP, no codec: parse_wav -> first
+    """REAL distributed audio DSP, no codec: decode_wav -> first
     channel -> rfft over the first ``n_fft`` samples -> dominant
     non-DC frequency bin (argmax of |X[k]|, k in 1..n_fft/2). The
     numerical claim that makes this oracle-checkable: a quantized
     pure tone centered ON a bin has a spectral peak of order
     amplitude*n_fft/2 against quantization noise of order sqrt(n_fft),
     so the argmax is unambiguous and platform-independent even though
-    the FFT itself is floating-point. Payloads that are not WAV or
-    are shorter than n_fft frames yield null bin rows (mixed-corpus
-    degradation contract). Arrow-batched mapInPandas: no shuffle, no
-    collect."""
+    the FFT itself is floating-point. Every format ``decode_wav``
+    reads works; u8 PCM is centered first. Payloads that are not WAV
+    or are shorter than n_fft frames yield null bin rows."""
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "id": [], "channels": [], "sample_rate": [], "n_frames": [],
-                "n_fft": [], "dominant_bin": [],
-            }
-            for id_, payload in zip(pdf["id"], pdf["payload"]):
-                parsed = parse_wav(payload)
-                out["id"].append(id_)
-                out["n_fft"].append(n_fft)
-                if parsed is None or parsed[3] < n_fft:
-                    out["channels"].append(None)
-                    out["sample_rate"].append(None)
-                    out["n_frames"].append(None)
-                    out["dominant_bin"].append(None)
-                    continue
-                nch, rate, bits, n_frames, _ = parsed
-                # re-slice the raw samples (parse_wav returns means;
-                # the data chunk walk is re-done here channel-first)
-                b = bytes(payload)
-                # find the data chunk again -- cheap, payload is local
-                pos, data = 12, None
-                while pos + 8 <= len(b):
-                    size = int.from_bytes(b[pos + 4 : pos + 8], "little")
-                    if b[pos : pos + 4] == b"data":
-                        data = b[pos + 8 : pos + 8 + size]
-                        break
-                    pos += 8 + size + (size % 2)
-                width = bits // 8
-                dt = np.uint8 if bits == 8 else np.dtype("<i2")
-                ch0 = np.frombuffer(data, dt).reshape(n_frames, nch)[:n_fft, 0]
-                x = ch0.astype(np.float64)
-                if bits == 8:
-                    x -= 128.0  # u8 PCM is offset-binary
-                mag = np.abs(np.fft.rfft(x))
-                k = int(np.argmax(mag[1:])) + 1  # exclude DC
-                out["channels"].append(nch)
-                out["sample_rate"].append(rate)
-                out["n_frames"].append(n_frames)
-                out["dominant_bin"].append(k)
-            yield pd.DataFrame(
-                {
-                    "id": out["id"],
-                    "channels": pd.array(out["channels"], dtype="Int32"),
-                    "sample_rate": pd.array(out["sample_rate"], dtype="Int32"),
-                    "n_frames": pd.array(out["n_frames"], dtype="Int32"),
-                    "n_fft": pd.array(out["n_fft"], dtype="Int32"),
-                    "dominant_bin": pd.array(out["dominant_bin"], dtype="Int32"),
-                }
-            )
+    def rows(b):
+        dec = decode_wav(b)
+        if dec is None or len(dec[3]) < n_fft:
+            return [(None, None, None, n_fft, None)]
+        nch, rate, _, samples = dec
+        x = samples[:n_fft, 0].astype(np.float64)
+        if samples.dtype == np.uint8:
+            x -= 128.0  # u8 PCM is offset-binary
+        k = int(np.argmax(np.abs(np.fft.rfft(x))[1:])) + 1  # exclude DC
+        return [(nch, rate, len(samples), n_fft, k)]
 
-    return df.mapInPandas(extract, schema=AUDIO_SPECTRAL_SCHEMA)
+    return payload_rows(df, AUDIO_SPECTRAL_SCHEMA, rows)
 
 
 AUDIO_WINDOW_SCHEMA = (
@@ -2041,70 +1842,34 @@ AUDIO_WINDOW_SCHEMA = (
 
 
 def audio_rms_windows(df: DataFrame, window: int = 16) -> DataFrame:
-    """Windowed audio feature extraction, no codec: parse_wav ->
+    """Windowed audio feature extraction, no codec: decode_wav ->
     first channel -> non-overlapping windows of ``window`` frames ->
-    per-window RMS (sqrt of the mean of squares, float64 over exact
-    int64 squares) and mean. 1-to-many row explosion via Arrow-batched
-    mapInPandas, the audio analogue of video_frame_stats' frame
+    per-window RMS (sqrt of the mean of squares) and mean, over exact
+    int64 sums for integer samples (u8 PCM as raw codes, G.711 and
+    ADPCM as decoded linear samples) and float64 for float samples.
+    1-to-many, the audio analogue of video_frame_stats' frame
     sampling. Trailing partial windows are dropped (a deliberate,
     documented choice: fixed-length windows are what downstream
-    spectral/feature code expects). Non-WAV payloads yield a single
-    null-window row."""
+    spectral/feature code expects). Non-WAV payloads, and WAVs
+    shorter than one window, yield a single null-window row."""
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "id", "window_idx", "n_windows", "rms", "mean",
-            )}
+    def rows(b):
+        dec = decode_wav(b)
+        if dec is None or len(dec[3]) < window:
+            return [(None, None, window, None, None)]
+        ch0 = dec[3][:, 0]
+        x = ch0.astype(np.float64 if ch0.dtype.kind == "f" else np.int64)
+        n_windows = len(x) // window
+        w = x[: n_windows * window].reshape(n_windows, window)
+        sums = w.sum(axis=1)
+        sqsums = (w * w).sum(axis=1)
+        return [
+            (wi, n_windows, window, float(np.sqrt(sqsums[wi] / window)),
+             sums[wi] / window)
+            for wi in range(n_windows)
+        ]
 
-            def emit(id_, wi, nw, rms, mean):
-                out["id"].append(id_)
-                out["window_idx"].append(wi)
-                out["n_windows"].append(nw)
-                out["rms"].append(rms)
-                out["mean"].append(mean)
-
-            for id_, payload in zip(pdf["id"], pdf["payload"]):
-                parsed = parse_wav(payload)
-                if parsed is None or parsed[3] < window:
-                    emit(id_, None, None, None, None)
-                    continue
-                nch, _, bits, n_frames, _ = parsed
-                b = bytes(payload)
-                pos, data = 12, None
-                while pos + 8 <= len(b):
-                    size = int.from_bytes(b[pos + 4 : pos + 8], "little")
-                    if b[pos : pos + 4] == b"data":
-                        data = b[pos + 8 : pos + 8 + size]
-                        break
-                    pos += 8 + size + (size % 2)
-                dt = np.uint8 if bits == 8 else np.dtype("<i2")
-                ch0 = np.frombuffer(data, dt).reshape(n_frames, nch)[:, 0]
-                x = ch0.astype(np.int64)
-                n_windows = n_frames // window
-                w = x[: n_windows * window].reshape(n_windows, window)
-                sums = w.sum(axis=1)
-                sqsums = (w * w).sum(axis=1)
-                for wi in range(n_windows):
-                    emit(
-                        id_, wi, n_windows,
-                        float(np.sqrt(sqsums[wi] / window)),
-                        sums[wi] / window,
-                    )
-            yield pd.DataFrame(
-                {
-                    "id": out["id"],
-                    "window_idx": pd.array(out["window_idx"], dtype="Int32"),
-                    "n_windows": pd.array(out["n_windows"], dtype="Int32"),
-                    "window": pd.array(
-                        [window] * len(out["id"]), dtype="Int32"
-                    ),
-                    "rms": pd.array(out["rms"], dtype="Float64"),
-                    "mean": pd.array(out["mean"], dtype="Float64"),
-                }
-            )
-
-    return df.mapInPandas(extract, schema=AUDIO_WINDOW_SCHEMA)
+    return payload_rows(df, AUDIO_WINDOW_SCHEMA, rows)
 
 
 GIF_FRAME_STATS_SCHEMA = (
@@ -2116,46 +1881,21 @@ GIF_FRAME_STATS_SCHEMA = (
 def gif_frame_stats(df: DataFrame, every_n: int = 1) -> DataFrame:
     """REAL animated-GIF frame decode, no codec: decode_gif_frames
     (operators/gif.py — full LZW per frame, per-frame local color
-    tables, GCE/application-extension skipping) over Arrow-batched
-    payloads, keeping every ``every_n``-th frame — the same 1-to-many
-    explosion as video_frame_stats, for the web's most common
-    animation container. Per kept frame, exact int64-sum channel
-    means. Non-GIF / malformed payloads yield a single null-stats
-    row."""
+    tables, GCE/application-extension skipping) per payload, keeping
+    every ``every_n``-th frame — the same 1-to-many explosion as
+    video_frame_stats, for the web's most common animation container.
+    Per kept frame, exact int64-sum channel means. Non-GIF / malformed
+    payloads yield a single null-stats row."""
+    from synthea_etl_spark.operators.gif import decode_gif_frames
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from synthea_etl_spark.operators.gif import decode_gif_frames
+    def rows(b):
+        dec = decode_gif_frames(b)
+        if dec is None:
+            return None
+        w, h, means = dec
+        return [
+            (fi, len(means), w, h, *means[fi])
+            for fi in range(0, len(means), every_n)
+        ]
 
-        for pdf in batches:
-            cols = {k: [] for k in (
-                "id", "frame_idx", "n_frames", "width", "height",
-                "mean_r", "mean_g", "mean_b",
-            )}
-
-            def emit(id_, fi, nf, w, h, mr, mg, mb):
-                for k, v in zip(cols, (id_, fi, nf, w, h, mr, mg, mb)):
-                    cols[k].append(v)
-
-            for id_, payload in zip(pdf["id"], pdf["payload"]):
-                dec = decode_gif_frames(payload)
-                if dec is None:
-                    emit(id_, None, None, None, None, None, None, None)
-                    continue
-                w, h, means = dec
-                for fi in range(0, len(means), every_n):
-                    mr, mg, mb = means[fi]
-                    emit(id_, fi, len(means), w, h, mr, mg, mb)
-            yield pd.DataFrame(
-                {
-                    "id": cols["id"],
-                    "frame_idx": pd.array(cols["frame_idx"], dtype="Int32"),
-                    "n_frames": pd.array(cols["n_frames"], dtype="Int32"),
-                    "width": pd.array(cols["width"], dtype="Int32"),
-                    "height": pd.array(cols["height"], dtype="Int32"),
-                    "mean_r": pd.array(cols["mean_r"], dtype="Float64"),
-                    "mean_g": pd.array(cols["mean_g"], dtype="Float64"),
-                    "mean_b": pd.array(cols["mean_b"], dtype="Float64"),
-                }
-            )
-
-    return df.mapInPandas(extract, schema=GIF_FRAME_STATS_SCHEMA)
+    return payload_rows(df, GIF_FRAME_STATS_SCHEMA, rows)

@@ -147,53 +147,29 @@ WARC_RECORDS_SCHEMA = (
 )
 
 
+def _utf8_or_none(b: bytes) -> str | None:
+    try:
+        return b.decode("utf-8")
+    except UnicodeDecodeError:
+        return None
+
+
 def warc_records(df):
-    """REAL distributed WARC.gz ingestion: parse_warc_gz over
-    Arrow-batched payloads via mapInPandas — one output row per
-    record, the same no-shuffle 1-to-many shape as the frame
+    """REAL distributed WARC.gz ingestion: parse_warc_gz per payload —
+    one output row per record, the same 1-to-many shape as the frame
     decoders. Payloads that aren't valid UTF-8 text carry a null
     payload_text (binary responses flow on; length and headers still
     populate). Malformed archives yield one null-stats row."""
-    import pandas as pd
+    from synthea_etl_spark.operators.multimodal import payload_rows
 
-    def extract(batches):
-        for pdf in batches:
-            cols = {
-                "id": [], "record_idx": [], "n_records": [],
-                "warc_type": [], "target_uri": [], "content_length": [],
-                "payload_text": [],
-            }
-            for id_, payload in zip(pdf["id"], pdf["payload"]):
-                recs = parse_warc_gz(payload)
-                if recs is None:
-                    for k in cols:
-                        cols[k].append(id_ if k == "id" else None)
-                    continue
-                for i, rec in enumerate(recs):
-                    try:
-                        text = rec["payload"].decode("utf-8")
-                    except UnicodeDecodeError:
-                        text = None
-                    for k, v in zip(
-                        cols,
-                        (
-                            id_, i, len(recs), rec["type"], rec["uri"],
-                            rec["content_length"], text,
-                        ),
-                    ):
-                        cols[k].append(v)
-            yield pd.DataFrame(
-                {
-                    "id": cols["id"],
-                    "record_idx": pd.array(cols["record_idx"], dtype="Int32"),
-                    "n_records": pd.array(cols["n_records"], dtype="Int32"),
-                    "warc_type": cols["warc_type"],
-                    "target_uri": cols["target_uri"],
-                    "content_length": pd.array(
-                        cols["content_length"], dtype="Int32"
-                    ),
-                    "payload_text": cols["payload_text"],
-                }
-            )
+    def rows(b):
+        recs = parse_warc_gz(b)
+        if recs is None:
+            return None
+        return [
+            (i, len(recs), r["type"], r["uri"], r["content_length"],
+             _utf8_or_none(r["payload"]))
+            for i, r in enumerate(recs)
+        ]
 
-    return df.mapInPandas(extract, schema=WARC_RECORDS_SCHEMA)
+    return payload_rows(df, WARC_RECORDS_SCHEMA, rows)

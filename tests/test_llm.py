@@ -243,37 +243,47 @@ def test_doc_payloads_one_arrow_stage_per_document(spark):
     assert plan.count("Exchange") == plan.count("Exchange hashpartitioning(doc_id")
 
 
-def test_multimodal_resize_schema_and_determinism(spark, documents):
-    """Fake resize must produce exactly width*height payload bytes,
-    propagate content_type, and stamp the new dimensions."""
-    pay = M.attach_payload(documents.limit(50), "text", "doc_id", "image/png")
-    out = M.resize_payloads(pay, 16, 8, fake=True)
-    rows = out.collect()
-    assert len(rows) == 50
-    for r in rows:
-        assert len(r.payload) == 16 * 8
-        assert (r.meta.width, r.meta.height) == (16, 8)
-        assert r.meta.content_type == "image/png"
-        assert r.meta.n_bytes == 16 * 8
-    # deterministic across runs
-    again = {r.id: bytes(r.payload) for r in M.resize_payloads(pay, 16, 8, fake=True).collect()}
-    assert {r.id: bytes(r.payload) for r in rows} == again
+def test_payload_rows_null_empty_and_many_in_one_arrow_stage(spark):
+    """multimodal.payload_rows: ``None`` gives one null row that keeps
+    its id, ``[]`` gives no rows, n tuples give n rows; a 60-bit long
+    and null int/double columns round-trip exactly; the stage is one
+    MapInPandas with no Exchange."""
+    big = (1 << 60) - 3  # a dhash/phash-width fingerprint
 
+    def rows(b):
+        k = b[0]
+        if k == 0:
+            return None
+        return [
+            (i, big - i, None if i % 2 else i / 4, b[1:].decode())
+            for i in range(k - 1)
+        ]
 
-def test_multimodal_frame_sampling_one_to_many(spark, documents):
-    """Frame sampling is 1-to-many: every n_frames//every_n-th frame
-    row per payload, 64 bytes each, indices stepping by every_n."""
-    pay = M.attach_payload(documents.limit(20), "text", "doc_id", "video/mp4")
-    out = M.sample_frames(pay, frame_bytes=64, every_n=4, fake=True).collect()
-    assert out, "no frames sampled"
-    by_id = {}
-    for r in out:
-        by_id.setdefault(r.id, []).append(r)
-        assert len(r.frame) == 64
-    for rows in by_id.values():
-        idxs = sorted(r.frame_idx for r in rows)
-        n = rows[0].n_frames
-        assert idxs == list(range(0, n, 4))
+    df = spark.createDataFrame(
+        [(10, b"\x00"), (11, b"\x01"), (12, b"\x04abc"), (13, b"\x02")],
+        "id long, payload binary",
+    )
+    out = M.payload_rows(
+        df, "id long, idx int, key long, frac double, tag string", rows
+    )
+    assert out.dtypes == [
+        ("id", "bigint"), ("idx", "int"), ("key", "bigint"),
+        ("frac", "double"), ("tag", "string"),
+    ]
+    got = sorted(tuple(r) for r in out.collect() if r.idx is not None)
+    assert got == [
+        (12, 0, big, 0.0, "abc"),
+        (12, 1, big - 1, None, "abc"),
+        (12, 2, big - 2, 0.5, "abc"),
+        (13, 0, big, 0.0, ""),
+    ]
+    nulls = [tuple(r) for r in out.collect() if r.idx is None]
+    assert nulls == [(10, None, None, None, None)]  # id 11: no row
+    assert M.payload_rows(df.where("id = 11"), "id long, n int", rows).count() == 0
+
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1
+    assert "Exchange" not in plan
 
 
 def _real_png(width: int, height: int) -> bytes:

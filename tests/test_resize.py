@@ -131,18 +131,6 @@ def test_resize_payloads_real_path_distributed(spark):
     ]
 
 
-def test_resize_payloads_fake_path_still_works(spark):
-    from synthea_etl_spark.operators.multimodal import resize_payloads
-
-    df = spark.createDataFrame(
-        [(1, b"abc", {"n_bytes": 3, "content_type": "video/mp4"})],
-        "id long, payload binary, meta struct<n_bytes: long, content_type: string>",
-    )
-    r = resize_payloads(df, 4, 2, fake=True).collect()[0]
-    assert bytes(r.payload) == b"abcabcab"
-    assert r.meta.content_type == "video/mp4"
-
-
 def test_raster_png_all_color_types():
     """Non-interlaced 8-bit PNG decodes to a spatial raster in every
     color type: palette resolved, gray replicated to RGB, alpha

@@ -45,6 +45,29 @@ def test_false_checks_catches_nested_false_and_ignores_data():
     ]
 
 
+def test_differing_keys_names_nested_and_one_sided_keys():
+    want = {
+        "master": "local-cluster[2,4,4096]",
+        "n_docs": 500,
+        "tok_store": {"store_rows": 647, "compacted_upto": 9},
+        "band_store": {"rows": 3632},
+    }
+    got = {
+        "master": "local-cluster[2,4,4096]",
+        "n_docs": 500,
+        "tok_store": {"store_rows": 646, "compacted_upto": 9},
+        "band_store": {"rows": 3632, "rows_match_rebuild": True},
+        "n_erased": 46,
+    }
+    assert drive.differing_keys(got, want) == [
+        "tok_store.store_rows",
+        "band_store.rows_match_rebuild",
+        "n_erased",
+    ]
+    assert drive.differing_keys(want, want) == []
+    assert drive.differing_keys({"a": {"b": 1}}, {"a": 1}) == ["a"]
+
+
 def test_every_committed_report_passes():
     names = [
         os.path.splitext(os.path.basename(p))[0]

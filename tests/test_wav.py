@@ -57,6 +57,33 @@ def test_many_channels_decode():
     )
 
 
+def _tones(k, n=65):
+    """One tone at rfft bin k of 64, n frames, in every format parse_wav
+    reads. n=65 is one IMA ADPCM block (1 + a multiple of 8 samples)."""
+    import math
+
+    from synthea_etl_spark.operators.audio_codecs import (
+        encode_wav_g711,
+        encode_wav_ima_adpcm,
+        linear_to_alaw,
+        linear_to_ulaw,
+    )
+    from synthea_etl_spark.operators.multimodal import encode_wav_float32
+
+    vals = [round(8000 * math.sin(2 * math.pi * k * j / 64)) for j in range(n)]
+    return vals, {
+        "s16": encode_wav(8000, [_s16(*vals)], 16),
+        "u8": encode_wav(8000, [bytes(128 + v // 128 for v in vals)], 8),
+        "s24": encode_wav(
+            8000, [b"".join(struct.pack("<i", v << 8)[:3] for v in vals)], 24
+        ),
+        "f32": encode_wav_float32(8000, [[v / 32768 for v in vals]]),
+        "ulaw": encode_wav_g711(8000, [bytes(map(linear_to_ulaw, vals))], "ulaw"),
+        "alaw": encode_wav_g711(8000, [bytes(map(linear_to_alaw, vals))], "alaw"),
+        "adpcm": encode_wav_ima_adpcm(8000, [vals], n),
+    }
+
+
 def _valid():
     return encode_wav(8000, [_s16(1, 2, 3)], 16)
 
@@ -196,13 +223,14 @@ def test_audio_spectral_distributed(spark):
         )
         return encode_wav(8000, [vals], 8)
 
+    _, tones = _tones(11)
     rows = [
         (1, tone16(3)),
         (2, tone16(31)),       # Nyquist-adjacent bin
         (3, tone8(7)),         # u8 offset-binary must be centered first
         (4, encode_wav(8000, [_s16(1, 2, 3)], 16)),  # shorter than n_fft
         (5, b"not audio"),
-    ]
+    ] + [(10 + i, b) for i, b in enumerate(tones.values())]
     df = spark.createDataFrame(rows, "id long, payload binary").repartition(2)
     got = {r.id: r for r in audio_spectral(df, n_fft=n).collect()}
     assert got[1].dominant_bin == 3 and got[1].n_fft == n
@@ -210,6 +238,10 @@ def test_audio_spectral_distributed(spark):
     assert got[3].dominant_bin == 7
     assert got[4].dominant_bin is None and got[4].channels is None
     assert got[5].dominant_bin is None
+    # every format parse_wav reads: 24-bit, float32, G.711 and ADPCM
+    for i, fmt in enumerate(tones):
+        r = got[10 + i]
+        assert (r.channels, r.n_frames, r.dominant_bin) == (1, 65, 11), fmt
 
 
 def test_audio_spectral_uses_first_channel_of_stereo(spark):
@@ -235,17 +267,25 @@ def test_audio_rms_windows_distributed(spark):
     null-row degradation contract."""
     import numpy as np
 
+    from synthea_etl_spark.operators.audio_codecs import (
+        linear_to_ulaw,
+        ulaw_to_linear,
+    )
     from synthea_etl_spark.operators.multimodal import audio_rms_windows
 
     vals = [100 + 2 * j for j in range(35)]  # 2 full windows + 3 dropped
+    tone, tones = _tones(5)
     rows = [
         (1, encode_wav(8000, [struct.pack("<35h", *vals)], 16)),
         (2, encode_wav(8000, [_s16(*range(10))], 16)),  # < one window
         (3, b"not audio"),
-    ]
+    ] + [(10 + i, b) for i, b in enumerate(tones.values())]
     df = spark.createDataFrame(rows, "id long, payload binary").repartition(2)
     got = {(r.id, r.window_idx): r for r in audio_rms_windows(df, 16).collect()}
-    assert set(got) == {(1, 0), (1, 1), (2, None), (3, None)}
+    # every format parse_wav reads yields its 4 windows (65 // 16)
+    assert set(got) == {(1, 0), (1, 1), (2, None), (3, None)} | {
+        (10 + i, wi) for i in range(len(tones)) for wi in range(4)
+    }
     for wi in (0, 1):
         x = np.array(vals[wi * 16 : (wi + 1) * 16], dtype=np.int64)
         r = got[(1, wi)]
@@ -253,6 +293,20 @@ def test_audio_rms_windows_distributed(spark):
         assert r.rms == float(np.sqrt((x * x).sum() / 16))
         assert r.mean == x.sum() / 16
     assert got[(2, None)].rms is None and got[(3, None)].rms is None
+    # G.711 windows are over the decoded linear samples, not the code
+    # bytes: mu-law's rms stays within 1% of the 16-bit original's
+    ulaw = 10 + list(tones).index("ulaw")
+    lin = ulaw_to_linear(bytes(map(linear_to_ulaw, tone))).astype(np.int64)
+    pcm = np.array(tone, dtype=np.int64)
+    for wi in range(4):
+        x, y = lin[wi * 16 : (wi + 1) * 16], pcm[wi * 16 : (wi + 1) * 16]
+        r = got[(ulaw, wi)]
+        assert r.rms == float(np.sqrt((x * x).sum() / 16))
+        assert r.mean == x.sum() / 16
+        assert r.rms == pytest.approx(np.sqrt((y * y).sum() / 16), rel=0.01)
+    # float32 windows are over the float samples
+    f32 = got[(10 + list(tones).index("f32"), 0)]
+    assert f32.rms == pytest.approx(got[(10, 0)].rms / 32768)
 
 
 def test_audio_rms_windows_negative_and_8bit():

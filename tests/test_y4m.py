@@ -176,7 +176,7 @@ def test_video_frame_stats_distributed(spark):
 
 
 def test_sample_frames_real_y4m_path(spark):
-    """fake=False now decodes Y4M for real: every_n sampling over the
+    """sample_frames decodes Y4M for real: every_n sampling over the
     container's own frames, raw plane bytes out, non-video payloads
     dropped."""
     from synthea_etl_spark.operators.multimodal import sample_frames

@@ -7,9 +7,12 @@ against the batch query the store replaces. The pytests cover local
 mode; this drive crosses real executor process boundaries.
 
 Each family writes its report to ``<out-dir>/<artifact>.json`` (the
-artifact names are listed in ``FAMILIES``). The run exits non-zero,
-naming the keys, if any boolean anywhere in a report is false: every
-boolean a report carries is a check.
+artifact names are listed in ``FAMILIES``) and compares it with the
+committed ``bench_artifacts/<artifact>.json``. The run exits non-zero,
+naming the keys, if any boolean anywhere in a report is false (every
+boolean a report carries is a check) or if any value differs from the
+committed artifact. ``master`` and ``n_executors`` are compared only
+when the run uses the artifact's master.
 
 Usage: python tools/stream_drive.py [FAMILY ...] \
            [--master local-cluster[2,4,4096]] [--sf-dir DIR] [--out-dir DIR]
@@ -29,6 +32,7 @@ import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+ARTIFACTS = os.path.join(REPO, "bench_artifacts")
 sys.path.insert(0, REPO)
 
 from pyspark.sql import Window  # noqa: E402
@@ -137,6 +141,19 @@ _TYPES = {
 def schema_of(rows) -> StructType:
     """The landing schema of collected corpus rows."""
     return StructType([StructField(c, _TYPES[c]) for c in rows[0].__fields__])
+
+
+def differing_keys(report: dict, want: dict, prefix: str = "") -> list[str]:
+    """Dotted keys, at any depth, whose value differs between
+    ``report`` and ``want``; a key present on one side only differs."""
+    bad, missing = [], object()
+    for k in dict.fromkeys([*report, *want]):
+        got, exp = report.get(k, missing), want.get(k, missing)
+        if isinstance(got, dict) and isinstance(exp, dict):
+            bad += differing_keys(got, exp, f"{prefix}{k}.")
+        elif got != exp:
+            bad.append(f"{prefix}{k}")
+    return bad
 
 
 def split(rows, n: int) -> list:
@@ -1400,6 +1417,8 @@ def main(argv=None) -> None:
             d = Drive(spark, args.sf_dir, work)
             for fam in dict.fromkeys(args.families or FAMILIES):
                 artifact, family = FAMILIES[fam]
+                with open(os.path.join(ARTIFACTS, f"{artifact}.json")) as f:
+                    want = json.load(f)
                 t0 = time.perf_counter()
                 report = {
                     "master": args.master,
@@ -1412,11 +1431,19 @@ def main(argv=None) -> None:
                 print(json.dumps(report))
                 wall = time.perf_counter() - t0
                 print(f"{fam}: {wall:.0f} s", file=sys.stderr)
-                failed += [f"{artifact}: {k}" for k in false_checks(report)]
+                skip = () if want["master"] == args.master else (
+                    "master", "n_executors",
+                )
+                bad = false_checks(report) + [
+                    k for k in differing_keys(report, want) if k not in skip
+                ]
+                failed += [f"{artifact}: {k}" for k in dict.fromkeys(bad)]
     finally:
         spark.stop()
     if failed:
-        raise SystemExit("false checks: " + ", ".join(failed))
+        raise SystemExit(
+            "false or differing from bench_artifacts: " + ", ".join(failed)
+        )
 
 
 if __name__ == "__main__":
